@@ -55,3 +55,31 @@ def read_schema_width(df: DataFrame) -> list[str]:
         for line in formatted_plan(df).splitlines()
         if "ReadSchema" in line
     ]
+
+
+def _seq(jseq) -> list:
+    it = jseq.iterator()
+    out = []
+    while it.hasNext():
+        out.append(it.next())
+    return out
+
+
+def file_scans(df: DataFrame) -> list[tuple[list[str], str]]:
+    """(root paths, partition filters) of every file scan in the
+    initial physical plan, read off the FileSourceScanExec nodes: the
+    rendered plan truncates a long location, so a path check against
+    explain text depends on where the data lives."""
+    todo = [df.select("*")._jdf.queryExecution().executedPlan()]
+    scans = []
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if kind == "FileSourceScanExec":
+            roots = [p.toString() for p in _seq(node.relation().location().rootPaths())]
+            scans.append((roots, node.partitionFilters().mkString(", ")))
+        todo.extend(_seq(node.children()))
+    return scans

@@ -23,12 +23,16 @@ import itertools
 import os
 import shutil
 import tempfile
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 
 from lakehouse_app_spark.registry import query
-from lakehouse_app_spark.runtime_cache import session_key
+from lakehouse_app_spark.runtime_cache import scratch_commit_dir, session_key
 from lakehouse_app_spark.session import ensure_runtime_confs
 from lakehouse_app_spark.sources.tables import load_tables, normalize_event_ts
 
@@ -62,12 +66,35 @@ def _staged_events_dir(sf_dir: str) -> str:
     return _STREAM_DIRS[sf_dir]
 
 
+# (session, events path) -> ((inode, mtime_ns, size), schema): one
+# entry per corpus and session, replaced when the file is rewritten
+_EVENTS_SCHEMAS: dict[tuple[object, str], tuple[tuple[int, int, int], StructType]] = {}
+
+
+def events_schema(spark: SparkSession, sf_dir: str) -> StructType:
+    """The raw events parquet schema, read once per corpus file: each
+    read is a Spark job (~0.1 s) that a replay would otherwise pay on
+    every call. A rewritten file (new inode, mtime or size) is read
+    again."""
+    path = f"{sf_dir}/events.parquet"
+    st = os.stat(path)
+    stamp = (st.st_ino, st.st_mtime_ns, st.st_size)
+    key = (session_key(spark), path)
+    hit = _EVENTS_SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    _EVENTS_SCHEMAS[key] = (stamp, schema)
+    return schema
+
+
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a bounded file stream (ns→µs normalization
     identical to the batch path)."""
     ensure_runtime_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = spark.readStream.schema(raw_schema).parquet(_staged_events_dir(sf_dir))
+    raw = spark.readStream.schema(events_schema(spark, sf_dir)).parquet(
+        _staged_events_dir(sf_dir)
+    )
     return normalize_event_ts(raw)
 
 
@@ -79,12 +106,97 @@ def _checkpoint_root() -> str | None:
     return "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set session ``confs`` for the ``with`` body and restore every
+    prior value (unset where there was none) on the way out, error or
+    not. Each key's prior value is taken just before it is set, inside
+    the ``try``, so a failure anywhere — setting a conf, creating a
+    checkpoint, running the stream — restores exactly what changed."""
+    prev: dict[str, str | None] = {}
+    try:
+        for k, v in confs.items():
+            prev[k] = spark.conf.get(k, None)
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, old in prev.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
+
+
+def bounded_replay(
+    spark: SparkSession, writer: DataStreamWriter, name: str, *,
+    partitions: int = 2, final_no_data_batch: bool = True,
+    unload_state: bool | None = None,
+) -> None:
+    """Run ``writer``'s stream to completion (``availableNow``) on a
+    scratch checkpoint under scoped confs; the one bounded-replay
+    primitive behind :func:`run_to_memory` and the foreachBatch sinks.
+
+    ``partitions`` scopes ``spark.sql.shuffle.partitions``, which pins
+    the state-store partition count of a fresh checkpoint (see
+    :func:`run_to_memory`).
+
+    ``final_no_data_batch=False`` scopes
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false``, skipping
+    the trailing watermark-advance batch — one whole micro-batch cycle
+    of per-partition state-store open/commit for a bounded run whose
+    output it cannot change. OPT-IN PER KEY, only where the r14
+    interleaved content A/B (AB_NODATA_r14.json) proved the result
+    invariant: a key whose final emission rides ON the trailing batch
+    (q_stream_state_timers' timer expiry, q_stream_late_data's
+    append-mode flush) must keep the default.
+
+    ``unload_state`` (default: on exactly when the trailing batch is
+    skipped) scopes ``spark.sql.streaming.stateStore.unloadOnCommit``:
+    a one-data-batch replay closes its state-store providers when its
+    tasks commit, instead of leaving them loaded — pointing at a
+    deleted checkpoint — until the maintenance sweep. A replay of
+    several data batches passes ``False``: every batch would reload
+    its state from the checkpoint.
+
+    The confs are session-global while the replay runs — safe for the
+    engine's sequential one-query-at-a-time replays."""
+    confs = {"spark.sql.shuffle.partitions": str(partitions)}
+    if not final_no_data_batch:
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    if unload_state is None:
+        unload_state = not final_no_data_batch
+    if unload_state:
+        confs["spark.sql.streaming.stateStore.unloadOnCommit"] = "true"
+    with scoped_confs(spark, confs):
+        ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_", dir=_checkpoint_root())
+        try:
+            (
+                writer.trigger(availableNow=True)
+                .option("checkpointLocation", ckpt)
+                .start()
+                .awaitTermination()
+            )
+        finally:
+            # the replay ran to completion and its result lives in the
+            # sink — the checkpoint's WAL/state tree is dead weight in
+            # the RAM-backed scratch dir; reclaim it
+            shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def run_to_memory(
     df: DataFrame, name_prefix: str, output_mode: str = "complete",
     partitions: int = 2, final_no_data_batch: bool = True,
+    unload_state: bool | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into
     a memory sink; return the result table.
+
+    The sink lives exactly as long as the returned DataFrame: its
+    analyzed plan holds the sink, so the temp view the memory sink
+    registers is dropped before returning and the session keeps no
+    replay result the caller has let go — like any batch result.
+    Single-batch replays (``final_no_data_batch=False``) release their
+    state stores on commit; see :func:`bounded_replay` for both flags.
 
     State-store partition count is pinned per checkpoint at first
     start; size it to the operator, not the batch shuffle default —
@@ -95,51 +207,18 @@ def run_to_memory(
     streams (``applyInPandasWithState``) invert the trade-off — the
     per-key work runs in Arrow-fed pandas workers, so parallelism
     across partitions pays for the extra stores (measured 2→16
-    partitions: 3.1s → 1.2s on the sf0.1 replay).
-
-    ``final_no_data_batch=False`` scopes
-    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` around
-    the replay, skipping the trailing watermark-advance batch — one
-    whole micro-batch cycle of per-partition state-store open/commit
-    for a bounded run whose output it cannot change. OPT-IN PER KEY,
-    only where the r14 interleaved content A/B (AB_NODATA_r14.json)
-    proved the result invariant: a key whose final emission rides ON
-    the trailing batch (q_stream_state_timers' timer expiry,
-    q_stream_late_data's append-mode flush) must keep the default.
-    The conf is session-global while the replay runs, restored in the
-    same finally as the partition width — safe for the engine's
-    sequential one-query-at-a-time replays, the same scoping contract
-    partitions already uses."""
+    partitions: 3.1s → 1.2s on the sf0.1 replay)."""
     spark = df.sparkSession
     name = f"{name_prefix}_{next(_counter)}"
-    scoped = {"spark.sql.shuffle.partitions": str(partitions)}
-    if not final_no_data_batch:
-        scoped["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    prev = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_", dir=_checkpoint_root())
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
+        bounded_replay(
+            spark, writer, name, partitions=partitions,
+            final_no_data_batch=final_no_data_batch, unload_state=unload_state,
         )
-        q.awaitTermination()
+        return spark.table(name)
     finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-        # the replay ran to completion and the result lives in the
-        # memory sink — the checkpoint's WAL/state tree is dead
-        # weight in the RAM-backed scratch dir; reclaim it
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
 
 
 def _flatten_window(df: DataFrame, win_col: str = "window") -> DataFrame:
@@ -357,7 +436,10 @@ def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the read-back filters to that batch and the result equals the
     batch groupBy, side effect intact and proven by the read path
     itself (the rows exist only if the sink wrote them)."""
-    out_dir = tempfile.mkdtemp(prefix="foreach_sink_", dir=_checkpoint_root())
+    # deferred-cleanup scratch (run_ivf_segment_append's protocol): the
+    # returned read-back is lazy, so the tree is retired at the next
+    # call and reaped at the release_caches() drain
+    out_dir = scratch_commit_dir("foreach_sink_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -372,36 +454,15 @@ def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     # few-key aggregate state wants few state stores (run_to_memory's
-    # partitions=2 rationale) — this sink bypasses run_to_memory, so
-    # pin the state partition count the same way; the trailing
-    # no-data batch is skipped too (run_to_memory's opt-in contract:
-    # COMPLETE mode appends the full snapshot every batch and the
-    # read-back takes the max batch_id, so the extra snapshot cannot
-    # change the result — AB_NODATA_r14 content-verified)
-    scoped = {
-        "spark.sql.shuffle.partitions": "2",
-        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-    }
-    prev = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_foreach_", dir=_checkpoint_root())
-    try:
-        q = (
-            agg.writeStream.foreachBatch(write_batch)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # partitions=2 rationale); the trailing no-data batch is skipped
+    # (bounded_replay's opt-in contract: COMPLETE mode appends the full
+    # snapshot every batch and the read-back takes the max batch_id, so
+    # the extra snapshot cannot change the result — AB_NODATA_r14
+    # content-verified)
+    bounded_replay(
+        spark, agg.writeStream.foreachBatch(write_batch).outputMode("complete"),
+        "foreach", partitions=2, final_no_data_batch=False,
+    )
     rb = spark.read.parquet(out_dir)
     final = rb.join(
         F.broadcast(rb.groupBy().agg(F.max("batch_id").alias("batch_id"))),
@@ -636,8 +697,7 @@ def _interval_join_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     if hit is not None:
         return hit
     ensure_runtime_confs(spark)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    raw = spark.readStream.schema(raw_schema).parquet(
+    raw = spark.readStream.schema(events_schema(spark, sf_dir)).parquet(
         _staged_events_with_sentinel(spark, sf_dir)
     )
     src = normalize_event_ts(raw).withColumn("ts_l", F.col("ts").cast("timestamp"))
@@ -1095,8 +1155,6 @@ def run_ivf_segment_append(
     # segment is retired at the next acquisition and reaped at the
     # harness drain (or past the retirement bound), never leaked one
     # RAM-backed tree per invocation (review r11)
-    from lakehouse_app_spark.runtime_cache import scratch_commit_dir
-
     seg_dir = os.path.join(scratch_commit_dir("ivf_seg_"), "segment")
 
     def append_segment(batch_df: DataFrame, batch_id: int) -> None:
@@ -1112,31 +1170,11 @@ def run_ivf_segment_append(
 
     # stateless per-batch assignment: the trailing no-data batch can
     # write nothing (foreachBatch is not even invoked for it) — skip
-    # its whole store-cycle (run_to_memory's opt-in contract)
-    scoped = {
-        "spark.sql.shuffle.partitions": "2",
-        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-    }
-    prev = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_ivf_append_", dir=_checkpoint_root())
-    try:
-        q = (
-            vstream.writeStream.foreachBatch(append_segment)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # its whole store-cycle (bounded_replay's opt-in contract)
+    bounded_replay(
+        spark, vstream.writeStream.foreachBatch(append_segment).outputMode("append"),
+        "ivf_append", partitions=2, final_no_data_batch=False,
+    )
     return spark.read.parquet(seg_dir)
 
 
@@ -1669,7 +1707,7 @@ def q_stream_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_runtime_confs(spark)
     staged = _staged_new_lineitem_dir(spark, sf_dir)
     schema = spark.read.parquet(staged).schema
-    out_dir = tempfile.mkdtemp(prefix="pruned_join_", dir=_checkpoint_root())
+    out_dir = scratch_commit_dir("pruned_join_")  # q_stream_foreach_sink's protocol
 
     stream = (
         spark.readStream.schema(schema)
@@ -1693,32 +1731,12 @@ def q_stream_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # few-key month aggregates want few shuffle partitions (the
     # foreachBatch body runs under session confs, the
     # q_stream_foreach_sink treatment); stateless enrich — the
-    # trailing no-data batch writes nothing, skip it (run_to_memory's
+    # trailing no-data batch writes nothing, skip it (bounded_replay's
     # opt-in contract)
-    scoped = {
-        "spark.sql.shuffle.partitions": "4",
-        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
-    }
-    prev = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_pruned_join_", dir=_checkpoint_root())
-    try:
-        q = (
-            stream.writeStream.foreachBatch(process)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    bounded_replay(
+        spark, stream.writeStream.foreachBatch(process).outputMode("append"),
+        "pruned_join", partitions=4, final_no_data_batch=False,
+    )
     return spark.read.parquet(out_dir).select(
         "ship_month", "n_new", "new_qty", "n_base", "base_qty"
     )
@@ -1734,7 +1752,7 @@ def run_tws(
     replay never reads; changelog checkpointing buys cross-batch
     failure recovery, irrelevant to run-to-completion (A/B r8:
     together 3.11 → 2.83 s min-of-3)."""
-    scoped = {
+    confs = {
         "spark.sql.streaming.stateStore.providerClass":
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
@@ -1743,20 +1761,11 @@ def run_tws(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing."
         "enabled": "false",
     }
-    prev = {k: spark.conf.get(k, None) for k in scoped}
-    for k, v in scoped.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_confs(spark, confs):
         return run_to_memory(
             keyed, name, output_mode="update", partitions=partitions,
             final_no_data_batch=final_no_data_batch,
         )
-    finally:
-        for k, old in prev.items():
-            if old is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old)
 
 
 # ---------------------------------------- streaming change-feed apply
@@ -1834,7 +1843,12 @@ def q_stream_change_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(dn).alias("dn"),
         F.sum(sign * to_i(F.col("o_totalprice"))).alias("ds"),
     )
-    out = run_to_memory(dagg, "cdf_apply", output_mode="complete", final_no_data_batch=False)
+    # maxFilesPerTrigger=1 makes this a multi-batch replay: keep its
+    # state stores loaded between batches (bounded_replay's unload_state)
+    out = run_to_memory(
+        dagg, "cdf_apply", output_mode="complete", final_no_data_batch=False,
+        unload_state=False,
+    )
     merged = mv0.join(out, "o_custkey", "left").select(
         "o_custkey",
         (F.col("n0") + F.coalesce(F.col("dn"), F.lit(0))).alias("n_orders"),
@@ -2042,9 +2056,8 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon, and what the pipeline dropped is exactly auditable."""
     ensure_runtime_confs(spark)
     d = _staged_late_events(spark, sf_dir)
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     raw = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(events_schema(spark, sf_dir))
         .option("maxFilesPerTrigger", "1")
         .parquet(d)
     )

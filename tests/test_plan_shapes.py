@@ -10,11 +10,30 @@ from pyspark.sql import functions as F
 from lakehouse_app_spark import QUERIES
 from lakehouse_app_spark.plans.checks import (
     assert_in_plan,
+    file_scans,
     formatted_plan,
     pushed_filters,
     read_schema_width,
 )
+from lakehouse_app_spark.sources.layout import layout_base
 from lakehouse_app_spark.sources.tables import load_tables
+
+
+def _assert_cid_pruned(df, name: str) -> None:
+    """Assert ``df`` scans stored layout ``name`` (matched on its full
+    root path, which the rendered plan may truncate) and that every
+    such scan prunes on a literal cid IN list."""
+    import re
+
+    base = layout_base().rstrip("/")
+    scans = [
+        (roots, pf)
+        for roots, pf in file_scans(df)
+        if any(base in r and f"/{name}" in r for r in roots)
+    ]
+    assert scans, file_scans(df)
+    for roots, pf in scans:
+        assert re.search(r"cid#\d+ IN \(", pf), (roots, pf)
 
 
 def test_filter_pushdown_reaches_parquet(spark, sf_dir):
@@ -241,13 +260,7 @@ def test_ann_ivf_probe_prunes_partitions(spark, sf_dir):
     non-empty PartitionFilters on cid (n_probe of n_clusters
     directories), the on-disk contract that makes the probe
     ~k/n_probe cheaper at any corpus size."""
-    import re
-
-    df = QUERIES["q_ann_ivf"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*cid[^\]]*IN[^\]]*)\]", plan)
-    assert m, plan
-    assert "layouts" in plan and "ivf8_a" in plan, plan  # path may truncate
+    _assert_cid_pruned(QUERIES["q_ann_ivf"](spark, sf_dir), "ivf8_assign")
 
 
 def test_chunk_dedup_chunks_before_shuffle(spark, sf_dir):
@@ -375,13 +388,9 @@ def test_ann_ivfpq_prunes_and_broadcasts_lut(spark, sf_dir):
     and the ADC lookup table joins in as a broadcast — the corpus
     side never shuffles for scoring, and nothing degenerates to a
     nested loop."""
-    import re
-
     df = QUERIES["q_ann_ivfpq"](spark, sf_dir)
+    _assert_cid_pruned(df, "ivf8_assign")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[([^\]]*cid[^\]]*IN[^\]]*)\]", plan)
-    assert m, plan
-    assert "layouts" in plan and "ivf8_a" in plan, plan  # path may truncate
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -679,14 +688,8 @@ def test_ivfpq_probe_prunes_stored_codes(spark, sf_dir):
     the probed clusters at the scan (PartitionFilters on cid), with
     no per-query coding pass: the codes scan reads only (vec_id,
     codes) and full vectors appear solely in the shortlist rerank."""
-    import re
-
-    df = QUERIES["q_ann_ivfpq"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "pq_codes" in plan, plan
     # every scan of the codes layout carries a cid partition filter
-    m = re.search(r"PartitionFilters: \[([^\]]*cid[^\]]*IN[^\]]*)\]", plan)
-    assert m, plan
+    _assert_cid_pruned(QUERIES["q_ann_ivfpq"](spark, sf_dir), "pq_codes")
 
 
 def test_fuzzy_join_blocks_as_equi_join(spark, sf_dir):
@@ -1095,14 +1098,9 @@ def test_ivf_delta_probe_prunes_both_segments(spark, sf_dir):
     with the literal probed-cid filter — the delta segment is
     cid-partitioned like the base precisely so incremental appends
     inherit the probe's n_probe/k scan reduction."""
-    import re
-
     df = QUERIES["q_ann_ivf_delta_probe"](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    ms = re.findall(r"PartitionFilters: \[[^\]]*cid[^\]]*IN[^\]]*\]", plan)
-    assert len(ms) >= 2, plan
-    # paths may truncate in the rendered plan (cf. the ivf8_a checks)
-    assert "ivf8_del" in plan and "ivf8_ass" in plan, plan
+    _assert_cid_pruned(df, "ivf8_delta")
+    _assert_cid_pruned(df, "ivf8_assign")
 
 
 def test_ivf_retrain_reads_layout_not_corpus(spark, sf_dir):

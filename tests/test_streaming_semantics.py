@@ -937,3 +937,116 @@ def test_late_data_key_drops_and_merges(spark, sf_dir, check_parity):
     assert agg["kept"] + agg["dropped"] == n_all
     assert not agg["overcount"]
     check_parity("q_stream_late_data")
+
+
+def test_replay_confs_restored_when_checkpoint_creation_fails(
+    spark, monkeypatch
+):
+    """Every conf a bounded replay scopes — run_to_memory's partition
+    width, no-data-batch and state-unload switches, and run_tws's
+    RocksDB layer above them — is back to its prior value (or unset)
+    when the replay fails before its stream starts."""
+    import tempfile
+
+    from lakehouse_app_spark.streaming.stream_queries import (
+        run_to_memory,
+        run_tws,
+    )
+
+    keys = [
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.streaming.stateStore.unloadOnCommit",
+        "spark.sql.streaming.stateStore.providerClass",
+        "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+    ]
+    before = {k: spark.conf.get(k, None) for k in keys}
+    assert before["spark.sql.streaming.noDataMicroBatches.enabled"] is None
+
+    def no_checkpoint(*a, **kw):
+        raise OSError("checkpoint root unavailable")
+
+    stream = spark.readStream.format("rate").load()
+    monkeypatch.setattr(tempfile, "mkdtemp", no_checkpoint)
+    with pytest.raises(OSError, match="checkpoint root"):
+        run_to_memory(stream, "ckpt_fail", partitions=3, final_no_data_batch=False)
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+    with pytest.raises(OSError, match="checkpoint root"):
+        run_tws(spark, stream, "ckpt_fail_tws", partitions=3, final_no_data_batch=False)
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+
+def test_events_schema_read_once_per_file_version(spark, tmp_path):
+    """The events schema memo serves repeat replays without a read and
+    re-reads once the file is rewritten."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lakehouse_app_spark.streaming.stream_queries import events_schema
+
+    path = tmp_path / "events.parquet"
+    pq.write_table(pa.table({"event_id": pa.array([1, 2], pa.int64())}), path)
+    first = events_schema(spark, str(tmp_path))
+    assert events_schema(spark, str(tmp_path)) is first
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "value": pa.array([0.5, 1.5, 2.5], pa.float64()),
+        }),
+        path,
+    )
+    assert events_schema(spark, str(tmp_path)).fieldNames() == ["event_id", "value"]
+
+
+def test_foreach_replays_leave_one_scratch_tree_per_prefix(spark, sf_dir):
+    """q_stream_foreach_sink and q_stream_pruned_join write their
+    output under scratch_commit_dir: after repeated calls and the
+    release_caches() drain, at most the newest tree per prefix is left
+    (each call used to leave one behind)."""
+    import glob
+    import tempfile
+
+    from lakehouse_app_spark import QUERIES
+    from lakehouse_app_spark.runtime_cache import release_caches
+
+    root = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    prefixes = {"q_stream_foreach_sink": "foreach_sink_",
+                "q_stream_pruned_join": "pruned_join_"}
+    release_caches()
+    before = {p: set(glob.glob(os.path.join(root, p + "*"))) for p in prefixes.values()}
+    for _ in range(3):
+        for key in prefixes:
+            assert len(QUERIES[key](spark, sf_dir).collect()) > 0
+    release_caches()
+    for p in prefixes.values():
+        left = set(glob.glob(os.path.join(root, p + "*"))) - before[p]
+        assert len(left) <= 1, (p, sorted(left))
+
+
+def test_bounded_replays_release_views_and_keep_results(
+    spark, sf_dir, duck, check_parity
+):
+    """A bounded replay drops the temp view of its memory sink but the
+    returned DataFrame keeps the sink: after three calls each of two
+    replays the session lists no new temporary view, and the FIRST
+    call's DataFrames still match their oracles. A key that keeps its
+    trailing no-data batch (and its state stores) still matches."""
+    from conftest import assert_frames_match
+
+    from lakehouse_app_spark import ORACLES, QUERIES
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    keys = ["q_stream_tumbling", "q_stream_static_join"]
+    views = temp_views()
+    first = {k: QUERIES[k](spark, sf_dir) for k in keys}
+    for _ in range(2):
+        for k in keys:
+            QUERIES[k](spark, sf_dir)
+    assert temp_views() <= views
+    for k in keys:
+        want = duck.execute(ORACLES[k]).fetchdf()
+        assert_frames_match(first[k].toPandas(), want, k)
+    check_parity("q_stream_state_timers")
