@@ -104,7 +104,10 @@ def _measure_stream_floor(
 
     from pyspark.sql import functions as F
 
-    from lakehouse_app_spark.streaming.stream_queries import _checkpoint_root
+    from lakehouse_app_spark.streaming.stream_queries import (
+        _checkpoint_root,
+        run_to_memory,
+    )
 
     src = tempfile.mkdtemp(prefix="stream_floor_src_", dir=_checkpoint_root())
     spark.range(1).select(
@@ -112,7 +115,7 @@ def _measure_stream_floor(
     ).write.mode("overwrite").parquet(src)
     schema = spark.read.parquet(src).schema
 
-    def once(i: int, stateful: bool) -> float:
+    def once(stateful: bool) -> float:
         raw = spark.readStream.schema(schema).parquet(src)
         if stateful:
             df = (
@@ -122,32 +125,14 @@ def _measure_stream_floor(
             )
         else:
             df = raw
-        name = f"_floor_probe_{'s' if stateful else 'p'}_{i}"
-        # match run_to_memory's production topology (2 state-store
+        name = f"_floor_probe_{'s' if stateful else 'p'}"
+        # run_to_memory's production topology (2 state-store
         # partitions) so the probe measures OUR streams' floor, not a
-        # 32-store worst case
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "2")
-        ckpt = tempfile.mkdtemp(prefix="ckpt_floor_", dir=_checkpoint_root())
+        # 32-store worst case; the trailing no-data batch stays, it is
+        # the eviction the stateful arm measures
         t0 = time.perf_counter()
-        try:
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        dt = time.perf_counter() - t0
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)
-        spark.catalog.dropTempView(name)
-        return dt
+        run_to_memory(df, name, output_mode="append", partitions=2)
+        return time.perf_counter() - t0
 
     # the adjacent re-probe only reads the stateful median; skip the
     # passthrough arm there (one full streaming startup saved per
@@ -156,9 +141,9 @@ def _measure_stream_floor(
     # never a fabricated 0.0 a future reader could mistake for a
     # measured floor (review r10).
     plain = (
-        [-1.0] if stateful_only else sorted(once(i, False) for i in range(runs))
+        [-1.0] if stateful_only else sorted(once(False) for _ in range(runs))
     )
-    stateful = sorted(once(i, True) for i in range(runs))
+    stateful = sorted(once(True) for _ in range(runs))
     return plain[len(plain) // 2], stateful[len(stateful) // 2]
 
 
@@ -188,7 +173,7 @@ def _measure_tws_floor(spark, runs: int = 3) -> float:
     )
     from lakehouse_app_spark.streaming.stream_queries import (
         _checkpoint_root,
-        run_to_memory,
+        run_tws,
     )
 
     pb_dir = protobuf_runtime_dir()
@@ -223,26 +208,8 @@ def _measure_tws_floor(spark, runs: int = 3) -> float:
             outputMode="Update",
             timeMode="None",
         )
-        prev = spark.conf.get(
-            "spark.sql.streaming.stateStore.providerClass", None
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
         t0 = time.perf_counter()
-        try:
-            run_to_memory(out, "_tws_floor", output_mode="update", partitions=2)
-        finally:
-            if prev is None:
-                spark.conf.unset(
-                    "spark.sql.streaming.stateStore.providerClass"
-                )
-            else:
-                spark.conf.set(
-                    "spark.sql.streaming.stateStore.providerClass", prev
-                )
+        run_tws(spark, out, "_tws_floor", partitions=2)
         return time.perf_counter() - t0
 
     ts = sorted(once() for _ in range(runs))

@@ -193,14 +193,16 @@ def write_snapshot(
     return version
 
 
-# (realpath, resolved version, manifest identity, fmt, dv chain,
+# (realpath, resolved version, manifest identities, fmt, dv chain,
 # dv key) -> analyzed relation for read_snapshot. Committed version
 # directories are immutable, so the handle is content-stable;
 # expiry/commit checks stay live in read_snapshot (see its comment).
-# Validated against the calling session on every hit. The manifest's
-# (st_ino, st_mtime_ns) rides in the key so a lineage wiped and
-# re-committed at the same path misses the memo instead of being
-# served a stale file listing (advice r14). LRU-bounded: scratch
+# Validated against the calling session on every hit. The
+# (st_ino, st_mtime_ns) of EVERY manifest on the requested version's
+# base chain rides in the key, so a lineage wiped and re-committed at
+# the same path — base or any deletion-vector commit above it —
+# misses the memo instead of being served a stale file listing
+# (advice r14, r15). LRU-bounded: scratch
 # CLONES (q_vacuum/q_merge_multi mkdtemp trees) insert a fresh key
 # per invocation, so an unbounded dict pinned dead JVM plans for the
 # whole session (advice r14); past the bound, dead-session entries
@@ -209,11 +211,18 @@ _READ_HANDLES: dict = {}
 _READ_HANDLES_MAX = 128
 
 
-def _read_manifest(path: str, version: int) -> dict:
+def _read_manifest(
+    path: str, version: int, stamps: list[tuple[int, int]] | None = None
+) -> dict:
+    """The version's manifest; appends the opened file's
+    (st_ino, st_mtime_ns) to ``stamps`` when given."""
     import json as _json
     import os as _os
 
     with open(_os.path.join(path, f"_v{version}.json")) as fh:
+        if stamps is not None:
+            st = _os.fstat(fh.fileno())
+            stamps.append((st.st_ino, st.st_mtime_ns))
         return _json.loads(fh.read())
 
 
@@ -251,7 +260,8 @@ def read_snapshot(
         raise FileNotFoundError(f"version {version} not committed in {path}")
     dv_dirs: list[str] = []
     dv_key = None
-    man = _read_manifest(path, version)
+    stamps: list[tuple[int, int]] = []
+    man = _read_manifest(path, version, stamps)
     v = version
     while man.get("base") is not None:
         dv_dirs.append(_os.path.join(path, f"dv={v}"))
@@ -262,7 +272,7 @@ def read_snapshot(
                 f"mixed dv_key along base chain of v{version} in {path}"
             )
         v = man["base"]
-        man = _read_manifest(path, v)
+        man = _read_manifest(path, v, stamps)
     fmt = man.get("format", "parquet")
     # Memoized relation handle (r14 optimization): a committed
     # version's data directory is immutable, so re-running
@@ -275,11 +285,7 @@ def read_snapshot(
     # so an expired version raises exactly as before; only the
     # immutable relation is served from the memo, validated against
     # the caller's session.
-    st = _os.stat(_os.path.join(path, f"_v{v}.json"))
-    key = (
-        _os.path.realpath(path), v, st.st_ino, st.st_mtime_ns, fmt,
-        tuple(dv_dirs), dv_key,
-    )
+    key = (_os.path.realpath(path), v, tuple(stamps), fmt, tuple(dv_dirs), dv_key)
     hit = _READ_HANDLES.get(key)
     if hit is not None and hit.sparkSession is spark:
         # refresh recency (dict preserves insertion order = LRU order)

@@ -100,10 +100,20 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _checkpoint_root() -> str | None:
     """Prefer a RAM-backed dir for the bounded-replay checkpoints:
-    the offset/commit/state WALs are many tiny fsync'd files, pure
-    overhead for a run-to-completion replay. A production stream
-    points this at durable storage — one option, not a code change."""
+    the offset/commit/state WALs are pure overhead for a
+    run-to-completion replay. Their measured cost is not the bytes or
+    the fsyncs: without libhadoop, Hadoop forks a shell command for
+    each local permission or symlink lookup, ~4.5 ms apiece, so the
+    file count is what costs (see :func:`bounded_replay`). A
+    production stream points this at durable storage — one option,
+    not a code change."""
     return "/dev/shm" if os.path.isdir("/dev/shm") else None
+
+
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 @contextmanager
@@ -158,9 +168,23 @@ def bounded_replay(
     several data batches passes ``False``: every batch would reload
     its state from the checkpoint.
 
+    The checkpoint is written through Hadoop's FileSystem API
+    (``FileSystemBasedCheckpointFileManager``), not the default
+    FileContext manager. Without libhadoop the FileContext manager
+    forks ``readlink`` on each file and its ``.crc`` at every rename,
+    about 110 shell commands per one-batch stateful replay; the
+    FileSystem manager renames in process. It is safe here only
+    because the replay is the checkpoint's single writer: it checks
+    that the target is absent and then renames, which two writers
+    could race, and each replay's checkpoint is a fresh private
+    ``mkdtemp``. A shared or durable checkpoint keeps FileContext.
+
     The confs are session-global while the replay runs — safe for the
     engine's sequential one-query-at-a-time replays."""
-    confs = {"spark.sql.shuffle.partitions": str(partitions)}
+    confs = {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.streaming.checkpointFileManagerClass": _FS_CHECKPOINT_MANAGER,
+    }
     if not final_no_data_batch:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
     if unload_state is None:

@@ -388,6 +388,46 @@ def test_read_handle_memo_bounded_and_invalidated(spark, sf_dir, tmp_path):
     assert len(sinks._READ_HANDLES) <= sinks._READ_HANDLES_MAX
 
 
+def test_read_handle_memo_misses_on_rewritten_chain_manifest(spark, sf_dir, tmp_path):
+    """The read_snapshot memo key covers every manifest on the
+    requested version's base chain, not only the base's: rewriting an
+    intermediate deletion-vector commit (its sidecar, then its
+    manifest through os.replace) while the base manifest stays put
+    misses the memo and reads the new rows."""
+    import json
+    import os
+
+    from lakehouse_app_spark.sources.sinks import (
+        delete_where_mor,
+        read_snapshot,
+        write_snapshot,
+    )
+
+    t = load_tables(spark, sf_dir)
+    small = t.nation.where("n_nationkey < 5").select("n_nationkey", "n_name")
+    path = str(tmp_path / "mor_chain")
+    write_snapshot(small, path, "base")
+    delete_where_mor(spark, path, "n_nationkey = 0", "n_nationkey")
+    head = delete_where_mor(spark, path, "n_nationkey = 1", "n_nationkey")
+    first = read_snapshot(spark, path, head)
+    assert sorted(r[0] for r in first.collect()) == [2, 3, 4]
+
+    # rewrite v1 in place: its DV now also deletes key 2
+    small.where("n_nationkey IN (0, 2)").select("n_nationkey").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(path, "dv=1"))
+    man = os.path.join(path, "_v1.json")
+    with open(man) as fh:
+        body = json.load(fh)
+    with open(man + ".tmp", "w") as fh:
+        json.dump({**body, "note": "rewritten"}, fh)
+    os.replace(man + ".tmp", man)
+
+    again = read_snapshot(spark, path, head)
+    assert again is not first
+    assert sorted(r[0] for r in again.collect()) == [3, 4]
+
+
 def test_copy_on_write_delete_update_and_dq_gate(spark, sf_dir, tmp_path):
     """DELETE/UPDATE as copy-on-write snapshot commits (old versions
     remain for time travel) and the write-time DQ gate aborting a bad

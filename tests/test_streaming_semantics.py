@@ -943,9 +943,10 @@ def test_replay_confs_restored_when_checkpoint_creation_fails(
     spark, monkeypatch
 ):
     """Every conf a bounded replay scopes — run_to_memory's partition
-    width, no-data-batch and state-unload switches, and run_tws's
-    RocksDB layer above them — is back to its prior value (or unset)
-    when the replay fails before its stream starts."""
+    width, checkpoint manager, no-data-batch and state-unload
+    switches, and run_tws's RocksDB layer above them — is back to its
+    prior value (or unset) when the replay fails before its stream
+    starts."""
     import tempfile
 
     from lakehouse_app_spark.streaming.stream_queries import (
@@ -955,6 +956,7 @@ def test_replay_confs_restored_when_checkpoint_creation_fails(
 
     keys = [
         "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.checkpointFileManagerClass",
         "spark.sql.streaming.noDataMicroBatches.enabled",
         "spark.sql.streaming.stateStore.unloadOnCommit",
         "spark.sql.streaming.stateStore.providerClass",
@@ -975,6 +977,64 @@ def test_replay_confs_restored_when_checkpoint_creation_fails(
     with pytest.raises(OSError, match="checkpoint root"):
         run_tws(spark, stream, "ckpt_fail_tws", partitions=3, final_no_data_batch=False)
     assert {k: spark.conf.get(k, None) for k in keys} == before
+
+
+def test_bounded_replay_writes_checkpoint_through_filesystem_api(spark, tmp_path):
+    """A bounded replay's stream runs with the FileSystem-based
+    checkpoint manager (no forked ``readlink`` per renamed file), and
+    the session's own setting is back afterwards."""
+    from lakehouse_app_spark.streaming.stream_queries import bounded_replay
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    seen = []
+
+    def record(batch_df, batch_id):
+        seen.append(batch_df.sparkSession.conf.get(key, None))
+
+    before = spark.conf.get(key, None)
+    stream = spark.readStream.schema("id long").parquet(src)
+    bounded_replay(spark, stream.writeStream.foreachBatch(record), "fs_ckpt")
+    assert seen and set(seen) == {
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    }
+    assert spark.conf.get(key, None) == before
+
+
+@pytest.mark.parametrize("key", ["q_stream_state_timers", "q_stream_late_data"])
+def test_trailing_batch_keys_diverge_without_it(spark, monkeypatch, key):
+    """The keys that keep their trailing no-data batch need it: forced
+    off, their result stops matching the oracle at sf0.01 (the timer
+    expiry and the append-mode flush ride on that batch); with the
+    default they match."""
+    import duckdb
+    from conftest import TEST_SF_DIR, assert_frames_match
+
+    from lakehouse_app_spark import ORACLES, QUERIES
+    from lakehouse_app_spark.streaming import stream_queries
+
+    sf_dir = os.path.join(os.path.dirname(TEST_SF_DIR), "sf0.01")
+    duck = duckdb.connect()
+    duck.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')"
+    )
+    want = duck.execute(ORACLES[key]).fetchdf()
+    duck.close()
+    assert_frames_match(QUERIES[key](spark, sf_dir).toPandas(), want, key)
+
+    replay = stream_queries.bounded_replay
+
+    def without_trailing_batch(*args, unload_state=None, **kw):
+        # flip only the trailing batch; keep the state stores loaded
+        # across the data batches as the key's own call would
+        kw["final_no_data_batch"] = False
+        return replay(*args, unload_state=bool(unload_state), **kw)
+
+    monkeypatch.setattr(stream_queries, "bounded_replay", without_trailing_batch)
+    with pytest.raises(AssertionError):
+        assert_frames_match(QUERIES[key](spark, sf_dir).toPandas(), want, key)
 
 
 def test_events_schema_read_once_per_file_version(spark, tmp_path):
