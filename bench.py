@@ -343,14 +343,9 @@ def main() -> None:
     con = None
     duck: dict[str, float] = {}
     if RUN_DUCKDB:
-        import duckdb
+        from lakehouse_app_spark.parity import oracle_connection
 
-        con = duckdb.connect()
-        for t in eng.TABLE_NAMES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{SF_DIR}/{t}.parquet')"
-            )
+        con = oracle_connection(SF_DIR)
 
     per_query: dict[str, float] = {}
     tws_watch: dict[str, dict] = {}

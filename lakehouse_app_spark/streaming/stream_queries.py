@@ -1414,7 +1414,8 @@ def q_stream_state_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB (contrast q_window_sessionize, where the engine's
     session_window operator owns the state).
 
-    Exactness anatomy (probed, tools_probe_timers.py): Spark tracks
+    Exactness anatomy (pinned by test_timer_sessionize_random_matches_reference
+    and test_tws_event_time_timers_across_micro_batches): Spark tracks
     watermarks and timer expiry in MILLISECONDS and fires on the
     NON-STRICT boundary (timer <= watermark), with delay 0 making the
     final no-data-batch watermark floor_ms(max ts). The oracle's

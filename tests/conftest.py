@@ -1,21 +1,23 @@
 """Shared fixtures: one SparkSession per test run, a DuckDB oracle
-connection per scale factor, and the oracle-parity comparator that
-mimics the driver's check (row count + schema-width + exact values,
-order-insensitive)."""
+connection per scale factor, and the oracle-parity check. The
+comparator lives in ``lakehouse_app_spark.parity``; it is re-exported
+here for callers that import it from ``conftest``."""
 
 from __future__ import annotations
 
 import os
 import sys
 
-import duckdb
-import numpy as np
-import pandas as pd
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from lakehouse_app_spark import get_spark, load_all_queries
+from lakehouse_app_spark.parity import (  # noqa: F401  (re-exported)
+    assert_frames_match,
+    normalize_frame,
+    oracle_connection,
+)
 
 TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -35,66 +37,9 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def duck(sf_dir):
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(sf_dir)
     yield con
     con.close()
-
-
-def normalize_frame(df: pd.DataFrame) -> pd.DataFrame:
-    """Sort columns by name and rows by all values; unify dtypes."""
-    df = df.reindex(sorted(df.columns), axis=1)
-    out = {}
-    for c in df.columns:
-        s = df[c]
-        if pd.api.types.is_datetime64_any_dtype(s):
-            s = s.astype("datetime64[us]")
-        elif pd.api.types.is_float_dtype(s):
-            s = s.astype("float64")
-        elif pd.api.types.is_integer_dtype(s):
-            s = s.astype("int64")
-        elif s.dtype == object:
-            s = s.where(s.notna(), None)
-        out[c] = s
-    df = pd.DataFrame(out)
-    return df.sort_values(by=list(df.columns), na_position="last").reset_index(drop=True)
-
-
-def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: str):
-    assert len(spark_pdf) == len(duck_pdf), (
-        f"{name}: row count {len(spark_pdf)} (spark) != {len(duck_pdf)} (duckdb)"
-    )
-    assert sorted(spark_pdf.columns) == sorted(duck_pdf.columns), (
-        f"{name}: columns {sorted(spark_pdf.columns)} != {sorted(duck_pdf.columns)}"
-    )
-    a = normalize_frame(spark_pdf)
-    b = normalize_frame(duck_pdf)
-    for c in a.columns:
-        # dtype class must agree post-normalization (catches e.g. DuckDB
-        # HUGEINT sums arriving as float64 vs Spark's int64)
-        assert str(a[c].dtype) == str(b[c].dtype), (
-            f"{name}: dtype mismatch on {c}: spark={a[c].dtype} duckdb={b[c].dtype}"
-        )
-    for c in a.columns:
-        av, bv = a[c], b[c]
-        if pd.api.types.is_float_dtype(av):
-            both_nan = av.isna() & bv.isna()
-            eq = (av == bv) | both_nan
-        else:
-            eq = (av == bv) | (av.isna() & bv.isna())
-        if not bool(eq.all()):
-            bad = (~eq).idxmax()
-            raise AssertionError(
-                f"{name}: column {c} mismatch at sorted row {bad}: "
-                f"spark={av[bad]!r} duckdb={bv[bad]!r}\n"
-                f"spark head:\n{a.head()}\nduck head:\n{b.head()}"
-            )
 
 
 @pytest.fixture(scope="session")
