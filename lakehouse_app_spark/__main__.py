@@ -62,7 +62,7 @@ def _bare_session(perturbed: bool):
     """A session with none of the engine's confs, as the contract's caller builds it."""
     from pyspark.sql import SparkSession
 
-    b = SparkSession.builder.appName("driver-sim")
+    b = SparkSession.builder.appName("contract-caller")
     if perturbed:
         b = (b.master("local[4]")
              .config("spark.sql.ansi.enabled", "false")

@@ -1,6 +1,6 @@
 """The oracle-parity check shared by the tests, the benchmark and the
 ``drive`` console command: a DuckDB connection over the corpus tables
-and the comparator that mimics the driver's check (row count +
+and the comparator that judges a result against its oracle (row count +
 column set + dtype class + exact values, order-insensitive)."""
 
 from __future__ import annotations
