@@ -14,6 +14,11 @@ Usage:
     python -m lakehouse_app_spark drive [KEY ...] [--sf-dir DIR] [--perturbed]
     python -m lakehouse_app_spark scale
 
+``explain`` heads each plan with ``-- build jobs: N, memoized: yes|no``:
+the Spark jobs the builder scheduled (tables already loaded) and
+whether the prepared-plan memo now holds the plan, i.e. whether repeat
+calls skip the builder.
+
 ``drive`` calls the contract the way its external caller does: on a
 bare SparkSession (none of the engine's confs; ``--perturbed`` for
 local[4], ANSI off and 7 shuffle partitions) it runs ``entry``, then
@@ -125,6 +130,8 @@ def _drive(args, spark) -> int:
 
 def _explain(args, spark) -> int:
     from lakehouse_app_spark import QUERIES, release_caches
+    from lakehouse_app_spark.runtime_cache import _PLANS, _jobs_scheduled, session_key
+    from lakehouse_app_spark.sources.tables import load_tables
 
     names = sorted(QUERIES) if args.all else args.query
     if not names:
@@ -135,9 +142,15 @@ def _explain(args, spark) -> int:
     failed = 0
     for name in names:
         try:
+            load_tables(spark, args.sf_dir)  # one-time ingest, not part of the build
+            before = _jobs_scheduled(spark)
             df = QUERIES[name](spark, args.sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
+            jobs = "?" if before is None else _jobs_scheduled(spark) - before
+            memo = "yes" if (session_key(spark), args.sf_dir, name) in _PLANS else "no"
+            plan = f"-- build jobs: {jobs}, memoized: {memo}\n" + (
+                df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
             )
         except Exception as ex:  # noqa: BLE001 - recorded in the output
             plan = f"EXPLAIN FAILED: {type(ex).__name__}: {ex}"

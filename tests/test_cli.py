@@ -1,5 +1,7 @@
-"""The console's ``drive`` parity check and the sf1 scale study's
-corpus replication."""
+"""The console's ``drive`` parity check, ``explain``'s memo header and
+the sf1 scale study's corpus replication."""
+
+import re
 
 import duckdb
 
@@ -23,6 +25,15 @@ def test_drive_matches_and_fails_loudly(spark, sf_dir, capsys, monkeypatch):
 
     assert main(["drive", "q_nope", "--sf-dir", sf_dir], spark=spark) == 1
     assert "FAILURES: q_nope" in capsys.readouterr().out
+
+
+def test_explain_reports_build_jobs_and_memo(spark, sf_dir, capsys):
+    assert main(["explain", "q_mmr_diversify", "--sf-dir", sf_dir], spark=spark) == 0
+    assert capsys.readouterr().out.startswith("-- build jobs: 0, memoized: yes\n")
+
+    assert main(["explain", "q_sink_roundtrip", "--sf-dir", sf_dir], spark=spark) == 0
+    m = re.match(r"-- build jobs: (\d+), memoized: (\w+)\n", capsys.readouterr().out)
+    assert m and int(m[1]) > 0 and m[2] == "no", m
 
 
 def _count(path, sql="SELECT count(*) FROM read_parquet('{p}')"):

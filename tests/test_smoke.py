@@ -4,6 +4,8 @@ import importlib
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
@@ -80,6 +82,31 @@ def test_prepared_plan_rejects_fake_job_scheduling_builder(spark, sf_dir):
     d = rc.prepared_plan("__fake_pure__", pure, spark, sf_dir)
     assert c is d
     rc._PLANS.pop((rc.session_key(spark), sf_dir, "__fake_pure__"), None)
+
+
+# The read keys of perfbench's app_serve workload (perfbench/workloads.json).
+APP_SERVE_READS = (
+    "q_vs_retrieve", "q_topk_cosine", "q_context_pack", "q_mmr_diversify",
+    "q_dedup_sources", "q_truncate_render", "q_format_docs",
+    "q_regex_transform", "q_lateral_topk",
+)
+
+
+@pytest.mark.parametrize("name", APP_SERVE_READS)
+def test_app_serve_reads_are_memo_served(spark, sf_dir, name):
+    """Every app_serve read is pure plan construction: a fresh build
+    schedules no job, so the prepared-plan memo serves each repeat
+    with the identical DataFrame. A builder that collects or counts
+    would pay the rebuild and its jobs on every request."""
+    from lakehouse_app_spark import runtime_cache as rc
+    from lakehouse_app_spark.registry import QUERIES
+
+    QUERIES[name].builder(spark, sf_dir)  # one-time ingest: tables, layouts
+    rc._PLANS.pop((rc.session_key(spark), sf_dir, name), None)
+    before = rc._jobs_scheduled(spark)
+    first = QUERIES[name](spark, sf_dir)
+    assert rc._jobs_scheduled(spark) == before
+    assert QUERIES[name](spark, sf_dir) is first
 
 
 def test_session_key_stable_and_not_address_based(spark):
