@@ -130,7 +130,7 @@ def _drive(args, spark) -> int:
 
 def _explain(args, spark) -> int:
     from lakehouse_app_spark import QUERIES, release_caches
-    from lakehouse_app_spark.runtime_cache import _PLANS, _jobs_scheduled, session_key
+    from lakehouse_app_spark.runtime_cache import _jobs_scheduled, lookup
     from lakehouse_app_spark.sources.tables import load_tables
 
     names = sorted(QUERIES) if args.all else args.query
@@ -146,7 +146,8 @@ def _explain(args, spark) -> int:
             before = _jobs_scheduled(spark)
             df = QUERIES[name](spark, args.sf_dir)
             jobs = "?" if before is None else _jobs_scheduled(spark) - before
-            memo = "yes" if (session_key(spark), args.sf_dir, name) in _PLANS else "no"
+            hit = lookup("plans", (args.sf_dir, name), spark=spark)
+            memo = "no" if hit is None else "yes"
             plan = f"-- build jobs: {jobs}, memoized: {memo}\n" + (
                 df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"

@@ -21,21 +21,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lakehouse_app_spark.registry import query
-from lakehouse_app_spark.runtime_cache import scoped_persist
+from lakehouse_app_spark.runtime_cache import memo, scoped_persist
 from lakehouse_app_spark.sources.tables import load_tables
 
 # ---------------------------------------------------------------- helpers
-
-# spread()'s gate decisions, keyed by (pruned file set + per-file
-# (size, mtime), target partitions, file-split confs): the exact
-# width probe compiles a physical plan, so it runs once per distinct
-# scan per process (a handful of tables), not once per query. The
-# key carries everything the probe's answer depends on (review r7):
-# maxPartitionBytes/openCostInBytes change how files split into
-# FilePartitions, and an in-place rewrite of the same file names
-# changes sizes — either would otherwise serve a stale gate
-# decision for the rest of the process.
-_SPREAD_MEMO: dict = {}
 
 _SPLIT_CONFS = (
     "spark.sql.files.maxPartitionBytes",
@@ -100,12 +89,16 @@ def spread(docs: DataFrame) -> DataFrame:
         confs = tuple(
             spark.conf.get(c, None) for c in _SPLIT_CONFS
         )
+        # the gate decision is a process-level registry entry keyed by
+        # everything the probe's answer depends on (review r7):
+        # maxPartitionBytes/openCostInBytes change how files split
+        # into FilePartitions, and an in-place rewrite of the same
+        # file names changes sizes — either would otherwise serve a
+        # stale decision for the rest of the process
         key = (tuple(_file_stamp(f) for f in files), npart, confs)
-        wide = _SPREAD_MEMO.get(key)
-        if wide is None:
-            wide = docs.rdd.getNumPartitions() >= npart
-            _SPREAD_MEMO[key] = wide
-        if wide:
+        if memo(
+            "dedup.spread", key, lambda: docs.rdd.getNumPartitions() >= npart
+        ):
             return docs
     return docs.repartition(npart)
 

@@ -14,18 +14,17 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_app_spark.registry import QUERIES, query
+from lakehouse_app_spark.runtime_cache import memo
 from lakehouse_app_spark.sources.sinks import read_table, write_table
-
-_SCRATCH: dict[tuple[str, str], str] = {}
 
 
 def _scratch_dir(tag: str, sf_dir: str) -> str:
     """One stable scratch dir per (query, corpus), reused with
     mode=overwrite across repeated invocations."""
-    key = (tag, sf_dir)
-    if key not in _SCRATCH:
-        _SCRATCH[key] = tempfile.mkdtemp(prefix=f"{tag}_")
-    return _SCRATCH[key]
+    return memo(
+        "io_ops.scratch", (tag, sf_dir),
+        lambda: tempfile.mkdtemp(prefix=f"{tag}_"),
+    )
 
 
 import lakehouse_app_spark.operators.aggregates  # noqa: F401  (registers q_agg_pricing's oracle)

@@ -25,10 +25,11 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import threading as _threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from lakehouse_app_spark.runtime_cache import NamespaceKeys, lookup, memo
 
 # Durable catalog root: env-overridable; defaults to the repo's
 # gitignored spark-warehouse/ so layouts survive process restarts.
@@ -43,20 +44,16 @@ def layout_base() -> str:
     return os.environ.get("SPARK_GRAFT_LAYOUT_DIR", _DEFAULT_BASE)
 
 
-# fingerprinted table dir -> committed data path. The memo key
-# embeds the corpus fingerprint, so an in-process corpus
-# regeneration (or a gc sweep of the old fingerprint) can never
-# serve a stale or deleted path — re-fingerprinting costs a handful
-# of stat calls per lookup, which is what makes the staleness
-# guarantee hold. The durable commit under layout_base() is what a
-# fresh process reuses.
-_BUILT: dict[str, str] = {}
-
-# fingerprinted table dir -> analyzed DataFrame handle for the
-# CURRENT session (validated against the caller's session on every
-# hit; content staleness is impossible because the key already embeds
-# the corpus fingerprint).
-_HANDLES: dict = {}
+# Registry namespaces: "layout.built" maps a fingerprinted table dir
+# to its committed data path (process-level: the path embeds the
+# corpus fingerprint, so an in-process regeneration or a gc sweep can
+# never serve a stale or deleted path; the durable commit under
+# layout_base() is what a fresh process reuses). "layout.handles"
+# maps it to the analyzed DataFrame read in the calling session.
+#
+# Read-only view of "layout.built" for perfbench/tracing.py, which
+# counts layout builds with `tdir not in layout._BUILT`.
+_BUILT = NamespaceKeys("layout.built")
 
 
 def corpus_fingerprint(sf_dir: str) -> str:
@@ -122,29 +119,23 @@ def derived_table(
     whose ``v=<n>`` write collides simply re-reads the winner's
     commit."""
     tdir = _table_dir(name, sf_dir)
-    hit = _BUILT.get(tdir)
-    if hit is not None:
-        # serve the memoized ANALYZED frame when it belongs to this
-        # session: a committed layout is immutable (new content ⇒ new
-        # fingerprint ⇒ new tdir), so re-running spark.read.parquet —
-        # file listing + footer schema discovery, ~0.1-0.2 s — per
-        # handle was pure catalog overhead repeated by every query
-        # touching a stored index (round-8 bench audit)
-        df = _HANDLES.get(tdir)
-        if df is not None and df.sparkSession is spark:
-            return df
-        df = spark.read.parquet(hit)
-        _HANDLES[tdir] = df
-        return df
 
-    ver = _committed_version(tdir)
-    if ver is None:
-        ver = _commit_build(tdir, sf_dir, build, partition_by)
-    data_dir = os.path.join(tdir, f"v={ver}")
-    _BUILT[tdir] = data_dir
-    df = spark.read.parquet(data_dir)
-    _HANDLES[tdir] = df
-    return df
+    def committed() -> str:
+        ver = _committed_version(tdir)
+        if ver is None:
+            ver = _commit_build(tdir, sf_dir, build, partition_by)
+        return os.path.join(tdir, f"v={ver}")
+
+    # the handle is the ANALYZED frame: a committed layout is immutable
+    # (new content ⇒ new fingerprint ⇒ new tdir), so re-running
+    # spark.read.parquet — file listing + footer schema discovery,
+    # ~0.1-0.2 s — per handle was pure catalog overhead repeated by
+    # every query touching a stored index (round-8 bench audit)
+    return memo(
+        "layout.handles", tdir,
+        lambda: spark.read.parquet(memo("layout.built", tdir, committed)),
+        spark=spark,
+    )
 
 
 def _commit_build(
@@ -228,39 +219,19 @@ def _commit_build(
     return version
 
 
-# (session, sf_dir, corpus fingerprint, tag) -> computed scalar.
-# ONE copy of the corpus-anchored-scalar recipe (review r11; was
-# duplicated as _COMPACT_LO_CACHE in lake_ops and _DPP_YEAR_CACHE in
-# joins): the key embeds the corpus CONTENT fingerprint, so an
-# in-session regeneration re-derives the anchor instead of serving a
-# stale one, while repeat invocations on the same corpus skip the
-# scan. Values are tiny (a date, an int); the dict is bounded by
-# (sessions × corpora × tags) in practice.
-_CORPUS_SCALARS: dict = {}
-# streaming queries acquire corpus scalars from listener threads too
-# (same threading reality as runtime_cache's scratch registry), so the
-# memo is lock-guarded like _SCRATCH_LOCK — an unguarded check-then-set
-# could run compute() twice concurrently (advice r11). RLock: compute()
-# is allowed to resolve a DIFFERENT tag's scalar reentrantly.
-_CORPUS_SCALARS_LOCK = _threading.RLock()
-
-
 def corpus_scalar(spark: SparkSession, sf_dir: str, tag: str, compute):
     """Memoized corpus-anchored scalar (a bounded 1-row aggregate —
     the _probe_ids collect class): ``compute()`` runs once per
-    (session, corpus content, tag) and its value is replayed for
-    every later invocation on the same corpus."""
-    from lakehouse_app_spark.runtime_cache import session_key
-
-    ck = (session_key(spark), sf_dir, corpus_fingerprint(sf_dir), tag)
-    with _CORPUS_SCALARS_LOCK:
-        if ck not in _CORPUS_SCALARS:
-            _CORPUS_SCALARS[ck] = compute()
-        return _CORPUS_SCALARS[ck]
-
-
-# lineage roots verified/built this process: tdir -> tdir
-_LINEAGES: dict[str, str] = {}
+    (corpus content, tag) and its value is replayed for every later
+    invocation on the same corpus. ONE copy of the recipe (review
+    r11; was duplicated as _COMPACT_LO_CACHE in lake_ops and
+    _DPP_YEAR_CACHE in joins): the stamp is the corpus CONTENT
+    fingerprint, so an in-session regeneration re-derives the anchor
+    instead of serving a stale one."""
+    return memo(
+        "layout.scalars", (sf_dir, tag), compute,
+        stamp=corpus_fingerprint(sf_dir),
+    )
 
 
 def lineage_table(
@@ -293,8 +264,6 @@ def lineage_table(
     import uuid as _uuid
 
     tdir = _table_dir(name, sf_dir)
-    if tdir in _LINEAGES:
-        return tdir
     if _committed_version(tdir) is None:
         parent = os.path.dirname(tdir)
         os.makedirs(parent, exist_ok=True)
@@ -323,7 +292,6 @@ def lineage_table(
         if not os.path.exists(marker):
             with open(marker, "w") as fh:
                 fh.write(json.dumps({"sf_dir": os.path.abspath(sf_dir)}))
-    _LINEAGES[tdir] = tdir
     return tdir
 
 
@@ -332,7 +300,7 @@ def layout_path(name: str, sf_dir: str) -> str | None:
     the pre-round-6 tempdir scheme this answers from the durable
     catalog, so it works in a process that never built the layout."""
     tdir = _table_dir(name, sf_dir)
-    hit = _BUILT.get(tdir)
+    hit = lookup("layout.built", tdir)
     if hit is not None:
         return hit
     ver = _committed_version(tdir)

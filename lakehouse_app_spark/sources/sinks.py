@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lakehouse_app_spark.runtime_cache import memo
+
 
 def write_table(
     df: DataFrame,
@@ -193,24 +195,6 @@ def write_snapshot(
     return version
 
 
-# (realpath, resolved version, manifest identities, fmt, dv chain,
-# dv key) -> analyzed relation for read_snapshot. Committed version
-# directories are immutable, so the handle is content-stable;
-# expiry/commit checks stay live in read_snapshot (see its comment).
-# Validated against the calling session on every hit. The
-# (st_ino, st_mtime_ns) of EVERY manifest on the requested version's
-# base chain rides in the key, so a lineage wiped and re-committed at
-# the same path — base or any deletion-vector commit above it —
-# misses the memo instead of being served a stale file listing
-# (advice r14, r15). LRU-bounded: scratch
-# CLONES (q_vacuum/q_merge_multi mkdtemp trees) insert a fresh key
-# per invocation, so an unbounded dict pinned dead JVM plans for the
-# whole session (advice r14); past the bound, dead-session entries
-# are swept first, then the least-recently-used live ones.
-_READ_HANDLES: dict = {}
-_READ_HANDLES_MAX = 128
-
-
 def _read_manifest(
     path: str, version: int, stamps: list[tuple[int, int]] | None = None
 ) -> dict:
@@ -283,30 +267,22 @@ def read_snapshot(
     # committed (expiry!), the manifest base chain — is still
     # re-checked above on every call from the driver-side listing,
     # so an expired version raises exactly as before; only the
-    # immutable relation is served from the memo, validated against
-    # the caller's session.
-    key = (_os.path.realpath(path), v, tuple(stamps), fmt, tuple(dv_dirs), dv_key)
-    hit = _READ_HANDLES.get(key)
-    if hit is not None and hit.sparkSession is spark:
-        # refresh recency (dict preserves insertion order = LRU order)
-        _READ_HANDLES.pop(key)
-        _READ_HANDLES[key] = hit
-        return hit
-    df = spark.read.format(fmt).load(_os.path.join(path, f"v={v}"))
-    if dv_dirs:
-        dv = spark.read.parquet(*dv_dirs).select(dv_key).distinct()
-        df = df.join(F.broadcast(dv), on=dv_key, how="left_anti")
-    _READ_HANDLES[key] = df
-    if len(_READ_HANDLES) > _READ_HANDLES_MAX:
-        stale = [
-            k for k, h in _READ_HANDLES.items()
-            if h.sparkSession is not spark
-        ]
-        for k in stale:
-            _READ_HANDLES.pop(k, None)
-        while len(_READ_HANDLES) > _READ_HANDLES_MAX:
-            _READ_HANDLES.pop(next(iter(_READ_HANDLES)))
-    return df
+    # immutable relation is served from the registry. The stamp is
+    # the (st_ino, st_mtime_ns) of EVERY manifest on the base chain,
+    # so a lineage wiped and re-committed at the same path — base or
+    # any deletion-vector commit above it — misses instead of being
+    # served a stale file listing (advice r14, r15).
+    def relation() -> DataFrame:
+        df = spark.read.format(fmt).load(_os.path.join(path, f"v={v}"))
+        if dv_dirs:
+            dv = spark.read.parquet(*dv_dirs).select(dv_key).distinct()
+            df = df.join(F.broadcast(dv), on=dv_key, how="left_anti")
+        return df
+
+    key = (_os.path.realpath(path), v, fmt, tuple(dv_dirs), dv_key)
+    return memo(
+        "sinks.read_handles", key, relation, spark=spark, stamp=tuple(stamps)
+    )
 
 
 def expire_snapshots(

@@ -21,6 +21,7 @@ from types import SimpleNamespace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakehouse_app_spark.runtime_cache import memo
 from lakehouse_app_spark.session import ensure_runtime_confs
 
 TABLE_NAMES = [
@@ -35,9 +36,6 @@ TABLE_NAMES = [
     "documents",
     "embeddings",
 ]
-
-# cache: (sparkSessionId, sf_dir) -> SimpleNamespace of DataFrames
-_CACHE: dict[tuple[int, str], SimpleNamespace] = {}
 
 
 def normalize_event_ts(raw: DataFrame) -> DataFrame:
@@ -58,34 +56,30 @@ def normalize_event_ts(raw: DataFrame) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
-# session identity -> the sf_dir whose tables currently back the
-# session's temp views. A cache hit must re-register when the views
-# point at a DIFFERENT scale factor, or every spark.sql-path builder
-# silently reads the wrong dataset (review r6, confirmed live: the
-# driver mixes sf0.001 smoke and sf0.01 correctness in one session).
-_VIEWS_FOR: dict[object, str] = {}
-
-
 def load_tables(
     spark: SparkSession, sf_dir: str, register_views: bool = True
 ) -> SimpleNamespace:
     """Load all testdata tables as DataFrames; register temp views.
 
-    Returns a namespace with one attribute per table. Cached per
+    Returns a namespace with one attribute per table. Memoized per
     (session, sf_dir) so repeated query builders share scan nodes;
-    the temp views always track the MOST RECENTLY requested sf_dir.
+    the session's temp views always track the MOST RECENTLY requested
+    sf_dir: the "tables.views" entry is stamped with the sf_dir that
+    backs them, so a request for a DIFFERENT scale factor re-registers
+    them, or every spark.sql-path builder would silently read the
+    wrong dataset (review r6, confirmed live: the driver mixes
+    sf0.001 smoke and sf0.01 correctness in one session).
     """
-    from lakehouse_app_spark.runtime_cache import session_key
+    ns = memo("tables", sf_dir, lambda: _read_tables(spark, sf_dir), spark=spark)
+    if register_views:
+        memo(
+            "tables.views", None, lambda: _register_views(ns),
+            spark=spark, stamp=sf_dir,
+        )
+    return ns
 
-    skey = session_key(spark)
-    key = (skey, sf_dir)
-    hit = _CACHE.get(key)
-    if hit is not None:
-        if register_views and _VIEWS_FOR.get(skey) != sf_dir:
-            for name in TABLE_NAMES:
-                getattr(hit, name).createOrReplaceTempView(name)
-            _VIEWS_FOR[skey] = sf_dir
-        return hit
+
+def _read_tables(spark: SparkSession, sf_dir: str) -> SimpleNamespace:
     ensure_runtime_confs(spark)
     tables = {}
     for name in TABLE_NAMES:
@@ -93,10 +87,9 @@ def load_tables(
         if name == "events":
             df = normalize_event_ts(df)
         tables[name] = df
-        if register_views:
-            df.createOrReplaceTempView(name)
-    if register_views:
-        _VIEWS_FOR[skey] = sf_dir
-    ns = SimpleNamespace(**tables)
-    _CACHE[key] = ns
-    return ns
+    return SimpleNamespace(**tables)
+
+
+def _register_views(ns: SimpleNamespace) -> None:
+    for name in TABLE_NAMES:
+        getattr(ns, name).createOrReplaceTempView(name)

@@ -19,11 +19,12 @@ code reads Kafka/file streams — only the source line changes.
 
 from __future__ import annotations
 
+import functools
 import itertools
 import os
 import shutil
 import tempfile
-from collections.abc import Iterator, Mapping
+from collections.abc import Callable, Iterator, Mapping
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,20 +33,44 @@ from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.types import StructType
 
 from lakehouse_app_spark.registry import query
-from lakehouse_app_spark.runtime_cache import scratch_commit_dir, session_key
+from lakehouse_app_spark.runtime_cache import (
+    memo,
+    retire_scratch_dir,
+    scratch_commit_dir,
+)
 from lakehouse_app_spark.session import ensure_runtime_confs
+from lakehouse_app_spark.sources.layout import corpus_fingerprint
 from lakehouse_app_spark.sources.tables import load_tables, normalize_event_ts
 
 _counter = itertools.count()
 
-# file-stream sources must be directories; stage the single events
-# parquet into one (hardlink when possible), cached per sf_dir
-_STREAM_DIRS: dict[str, str] = {}
+
+def _staged(prefix: str, sf_dir: str, write: Callable[[str], None]) -> str:
+    """A scratch dir ``write(d)`` fills from ``sf_dir``'s corpus, made
+    once per corpus content: the registry stamp is the corpus
+    fingerprint, so an in-session regeneration re-stages instead of
+    replaying a stale copy. A superseded staging — or a racing
+    builder's losing one — is retired through the deferred scratch
+    protocol (removed at the next release_caches drain), never yanked
+    from under a still-live replay."""
+
+    def build() -> str:
+        d = tempfile.mkdtemp(prefix=prefix)
+        write(d)
+        return d
+
+    return memo(
+        "stream.staged", (prefix, sf_dir), build,
+        stamp=corpus_fingerprint(sf_dir),
+        on_drop=functools.partial(retire_scratch_dir, prefix),
+    )
 
 
 def _staged_events_dir(sf_dir: str) -> str:
-    if sf_dir not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="events_stream_")
+    """File-stream sources must be directories: the events parquet
+    staged into one (hardlinks when possible)."""
+
+    def write(d: str) -> None:
         src = f"{sf_dir}/events.parquet"
         if os.path.isdir(src):
             # directory-style parquet table: stage its data files
@@ -62,30 +87,23 @@ def _staged_events_dir(sf_dir: str) -> str:
                 os.link(src, dst)
             except OSError:
                 shutil.copyfile(src, dst)
-        _STREAM_DIRS[sf_dir] = d
-    return _STREAM_DIRS[sf_dir]
 
-
-# (session, events path) -> ((inode, mtime_ns, size), schema): one
-# entry per corpus and session, replaced when the file is rewritten
-_EVENTS_SCHEMAS: dict[tuple[object, str], tuple[tuple[int, int, int], StructType]] = {}
+    return _staged("events_stream_", sf_dir, write)
 
 
 def events_schema(spark: SparkSession, sf_dir: str) -> StructType:
-    """The raw events parquet schema, read once per corpus file: each
+    """The raw events parquet schema, read once per corpus file and
+    session (the read honors the session's nanosAsLong conf): each
     read is a Spark job (~0.1 s) that a replay would otherwise pay on
     every call. A rewritten file (new inode, mtime or size) is read
     again."""
     path = f"{sf_dir}/events.parquet"
     st = os.stat(path)
-    stamp = (st.st_ino, st.st_mtime_ns, st.st_size)
-    key = (session_key(spark), path)
-    hit = _EVENTS_SCHEMAS.get(key)
-    if hit is not None and hit[0] == stamp:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    _EVENTS_SCHEMAS[key] = (stamp, schema)
-    return schema
+    return memo(
+        "stream.events_schema", path,
+        lambda: spark.read.parquet(path).schema,
+        spark=spark, stamp=(st.st_ino, st.st_mtime_ns, st.st_size),
+    )
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -601,9 +619,6 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- left-outer stream join
 
-_OUTER_DIRS: dict[str, str] = {}
-
-
 def _staged_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
     """Events staged WITH one far-future sentinel file (one purchase +
     one click, ids < 0, user_id = -1) so the data batch itself lifts
@@ -615,11 +630,10 @@ def _staged_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
     per-batch planning + state-commit cost was ~2× the query, and the
     extra batches buy nothing: eviction only needs SOME batch to run
     after the watermark moved, which the no-data batch provides.)"""
-    if sf_dir not in _OUTER_DIRS:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-        d = tempfile.mkdtemp(prefix="events_outer_")
+    def write(d: str) -> None:
         src = f"{sf_dir}/events.parquet"
         dst = f"{d}/events.parquet"
         try:
@@ -655,8 +669,8 @@ def _staged_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
             schema=src_schema,
         )
         pq.write_table(sentinel, f"{d}/zz_flush.parquet")
-        _OUTER_DIRS[sf_dir] = d
-    return _OUTER_DIRS[sf_dir]
+
+    return _staged("events_outer_", sf_dir, write)
 
 
 @query(
@@ -702,9 +716,6 @@ def q_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INTERVAL_SINKS: dict[tuple[object, str], DataFrame] = {}
-
-
 def _interval_join_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the LEFT OUTER purchase×click interval join replay ONCE per
     (session, sf_dir) and multiplex its memory sink to both declared
@@ -716,10 +727,13 @@ def _interval_join_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ids < 0, user_id -1, far-future ts) lift both watermark nodes so
     the no-data batch evicts the null-extended rows; consumers filter
     them out by id sign."""
-    key = (session_key(spark), sf_dir)
-    hit = _INTERVAL_SINKS.get(key)
-    if hit is not None:
-        return hit
+    return memo(
+        "stream.interval_sink", sf_dir,
+        lambda: _run_interval_join(spark, sf_dir), spark=spark,
+    )
+
+
+def _run_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_runtime_confs(spark)
     raw = spark.readStream.schema(events_schema(spark, sf_dir)).parquet(
         _staged_events_with_sentinel(spark, sf_dir)
@@ -754,9 +768,7 @@ def _interval_join_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serves q_stream_join_outer, whose NULL-extended rows are emitted
     # only when the trailing batch advances the watermark past the
     # join window (content-verified divergence at sf0.1, r15)
-    out = run_to_memory(joined, "interval_join", output_mode="append")
-    _INTERVAL_SINKS[key] = out
-    return out
+    return run_to_memory(joined, "interval_join", output_mode="append")
 
 
 def _twsp_available() -> bool:
@@ -889,26 +901,22 @@ def q_stream_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------- streaming vector search
 
-_QVEC_DIRS: dict[str, str] = {}
-
-
 def _staged_query_vectors(spark: SparkSession, sf_dir: str) -> str:
     """The audit query set (every 100th vector) staged as a parquet
     directory so it can replay as a bounded stream of incoming
     retrieval requests."""
-    with _STAGING_LOCK:
-        if sf_dir not in _QVEC_DIRS:
-            d = tempfile.mkdtemp(prefix="qvecs_stream_")
-            (
-                load_tables(spark, sf_dir)
-                .embeddings.where(F.col("vec_id") % 100 == 1)
-                .select(F.col("vec_id").alias("qid"), "embedding")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(d)
-            )
-            _QVEC_DIRS[sf_dir] = d
-        return _QVEC_DIRS[sf_dir]
+
+    def write(d: str) -> None:
+        (
+            load_tables(spark, sf_dir)
+            .embeddings.where(F.col("vec_id") % 100 == 1)
+            .select(F.col("vec_id").alias("qid"), "embedding")
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(d)
+        )
+
+    return _staged("qvecs_stream_", sf_dir, write)
 
 
 def _stream_vs_oracle() -> str:
@@ -1045,58 +1053,21 @@ def q_stream_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------ streaming index append
 
-_VEC_STREAM_DIRS: dict[tuple[str, str], str] = {}
-# Staging-memo guard (advice r12): the check→build→retire→insert
-# sequence below is not atomic; two concurrent callers (streaming
-# listener threads are real in this module — the corpus_scalar RLock
-# precedent) could both build, with the second retiring the dir the
-# first just published. One lock serves both staging memos; RLock
-# because the builders call corpus helpers that may re-enter.
-import threading as _threading  # noqa: E402  (stdlib, no Spark dep)
-
-_STAGING_LOCK = _threading.RLock()
-
-
 def _staged_new_vectors_dir(spark: SparkSession, sf_dir: str) -> str:
     """The arriving vector batch (vec_id % 10 = 7 stands in, same as
-    the batch key) staged as a parquet dir for bounded replay. The
-    memo key embeds the corpus CONTENT fingerprint (the
-    _COMPACT_LO_CACHE treatment, review r11): an in-session corpus
-    regeneration re-stages fresh vectors instead of serving a stale
-    batch the oracle no longer reads; superseded stagings are one
-    bounded dir per regeneration."""
-    from lakehouse_app_spark.sources.layout import corpus_fingerprint
+    the batch key) staged as a parquet dir for bounded replay."""
+    from lakehouse_app_spark.operators.ann import _APPEND_MOD, _APPEND_REM
 
-    key = (sf_dir, corpus_fingerprint(sf_dir))
-    with _STAGING_LOCK:
-        if key not in _VEC_STREAM_DIRS:
-            from lakehouse_app_spark.operators.ann import (
-                _APPEND_MOD,
-                _APPEND_REM,
-            )
-            from lakehouse_app_spark.runtime_cache import retire_scratch_dir
+    def write(d: str) -> None:
+        (
+            spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+            .where(F.col("vec_id") % _APPEND_MOD == _APPEND_REM)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(d)
+        )
 
-            d = tempfile.mkdtemp(prefix="vecs_stream_")
-            (
-                spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-                .where(F.col("vec_id") % _APPEND_MOD == _APPEND_REM)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(d)
-            )
-            # a regeneration superseded the old fingerprint's staging:
-            # retire it through the deferred scratch protocol (removed
-            # at the next release_caches drain, never yanked from
-            # under a still-live replay) instead of leaking one dir
-            # per regeneration (advice r11); `k != key` keeps the
-            # just-built staging out of the retirement set even if a
-            # future edit reorders the insert (advice r12)
-            for old in [
-                k for k in _VEC_STREAM_DIRS if k[0] == sf_dir and k != key
-            ]:
-                retire_scratch_dir("vecs_stream_", _VEC_STREAM_DIRS.pop(old))
-            _VEC_STREAM_DIRS[key] = d
-        return _VEC_STREAM_DIRS[key]
+    return _staged("vecs_stream_", sf_dir, write)
 
 
 def _stream_ivf_append_oracle() -> str:
@@ -1204,14 +1175,11 @@ def run_ivf_segment_append(
 
 # ------------------------------------------- streaming ingest dedup
 
-_DOC_STREAM_DIRS: dict[str, str] = {}
-
-
 def _staged_new_docs_dir(spark: SparkSession, sf_dir: str) -> str:
     """The arriving document batch (doc_id % 10 = 7) staged as a
     parquet dir so it can replay as a bounded file stream."""
-    if sf_dir not in _DOC_STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="docs_stream_")
+
+    def write(d: str) -> None:
         (
             spark.read.parquet(f"{sf_dir}/documents.parquet")
             .where(F.col("doc_id") % 10 == 7)
@@ -1221,8 +1189,8 @@ def _staged_new_docs_dir(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(d)
         )
-        _DOC_STREAM_DIRS[sf_dir] = d
-    return _DOC_STREAM_DIRS[sf_dir]
+
+    return _staged("docs_stream_", sf_dir, write)
 
 
 from lakehouse_app_spark.operators.dedup_ext import (  # noqa: E402
@@ -1570,7 +1538,6 @@ def session_timeout_transform(spark: SparkSession, stream: DataFrame) -> DataFra
 
 # ------------------- stream-static partition-pruned fact ingest
 
-_LI_STREAM_DIRS: dict[tuple[str, str], str] = {}
 _PRUNE_MOD = 10
 _PRUNE_REM = 7
 
@@ -1600,36 +1567,26 @@ def _staged_new_lineitem_dir(spark: SparkSession, sf_dir: str) -> str:
     """The arriving fact batch — the corpus's last-two-months rows
     with ``l_orderkey % 10 = 7`` (time-localized like a real ingest
     batch: pruning only matters when arrivals touch few partitions) —
-    staged for bounded replay. Fingerprint-keyed with deferred
-    retirement, the _staged_new_vectors_dir protocol."""
-    from lakehouse_app_spark.runtime_cache import retire_scratch_dir
-    from lakehouse_app_spark.sources.layout import corpus_fingerprint
+    staged for bounded replay."""
 
-    key = (sf_dir, corpus_fingerprint(sf_dir))
-    with _STAGING_LOCK:
-        if key not in _LI_STREAM_DIRS:
-            m0 = _anchor_month(spark, sf_dir)
-            d = tempfile.mkdtemp(prefix="li_stream_")
-            t = load_tables(spark, sf_dir)
-            (
-                t.lineitem.where(
-                    (F.col("l_orderkey") % _PRUNE_MOD == _PRUNE_REM)
-                    & (
-                        F.date_format(F.to_date("l_shipdate"), "yyyy-MM")
-                        >= F.lit(m0)
-                    )
+    def write(d: str) -> None:
+        m0 = _anchor_month(spark, sf_dir)
+        t = load_tables(spark, sf_dir)
+        (
+            t.lineitem.where(
+                (F.col("l_orderkey") % _PRUNE_MOD == _PRUNE_REM)
+                & (
+                    F.date_format(F.to_date("l_shipdate"), "yyyy-MM")
+                    >= F.lit(m0)
                 )
-                .select("l_orderkey", "l_quantity", "l_shipdate")
-                .repartition(4)
-                .write.mode("overwrite")
-                .parquet(d)
             )
-            for old in [
-                k for k in _LI_STREAM_DIRS if k[0] == sf_dir and k != key
-            ]:
-                retire_scratch_dir("li_stream_", _LI_STREAM_DIRS.pop(old))
-            _LI_STREAM_DIRS[key] = d
-        return _LI_STREAM_DIRS[key]
+            .select("l_orderkey", "l_quantity", "l_shipdate")
+            .repartition(4)
+            .write.mode("overwrite")
+            .parquet(d)
+        )
+
+    return _staged("li_stream_", sf_dir, write)
 
 
 def pruned_month_enrich(
@@ -1888,7 +1845,6 @@ def q_stream_change_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------ watermark late-data drop (r14)
 
-_LATE_STREAM_DIRS: dict[tuple[str, str], str] = {}
 LATE_MOD, LATE_REM = 17, 5  # the deterministically-late row subset
 LATE_DELAY = "10 minutes"
 
@@ -1921,90 +1877,77 @@ def _staged_late_events(spark: SparkSession, sf_dir: str) -> str:
     lexicographically) pins the batch order. Files are carved from
     the RAW events parquet with pyarrow, preserving the fixture's
     timestamp unit exactly — the stream path then applies the same
-    ns→µs normalization as every batch read. Fingerprint-memoized
-    under _STAGING_LOCK like the sibling stagings."""
+    ns→µs normalization as every batch read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from lakehouse_app_spark.runtime_cache import retire_scratch_dir
-    from lakehouse_app_spark.sources.layout import corpus_fingerprint
+    def write(d: str) -> None:
+        src = f"{sf_dir}/events.parquet"
+        tbl = pq.read_table(src)
+        ids = tbl["event_id"].to_numpy()
+        ts64 = tbl["ts"].cast("int64").to_numpy()
+        # the max-ts row is ALWAYS late-classified: its window end
+        # exceeds any on-time watermark, so the MERGE side of the
+        # contract has a structural witness at every corpus scale
+        # (the %-subset alone can miss the final open windows on a
+        # small corpus)
+        late_mask = pa.array(
+            (ids % LATE_MOD == LATE_REM) | (ts64 == ts64.max())
+        )
+        ontime = tbl.filter(pa.compute.invert(late_mask))
+        pq.write_table(ontime, f"{d}/batch1_ontime.parquet")
+        schema = tbl.schema.remove_metadata()
+        ts_type = schema.field("ts").type
+        unit_per_sec = {
+            "s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9
+        }[ts_type.unit]
+        max_ontime = max(ontime["ts"].cast("int64").to_pylist())
+        far = (
+            max(tbl["ts"].cast("int64").to_pylist())
+            + 10 * 3600 * unit_per_sec
+        )
 
-    key = (sf_dir, corpus_fingerprint(sf_dir))
-    with _STAGING_LOCK:
-        if key not in _LATE_STREAM_DIRS:
-            d = tempfile.mkdtemp(prefix="events_late_")
-            src = f"{sf_dir}/events.parquet"
-            tbl = pq.read_table(src)
-            ids = tbl["event_id"].to_numpy()
-            ts64 = tbl["ts"].cast("int64").to_numpy()
-            # the max-ts row is ALWAYS late-classified: its window end
-            # exceeds any on-time watermark, so the MERGE side of the
-            # contract has a structural witness at every corpus scale
-            # (the %-subset alone can miss the final open windows on a
-            # small corpus)
-            late_mask = pa.array(
-                (ids % LATE_MOD == LATE_REM) | (ts64 == ts64.max())
-            )
-            ontime = tbl.filter(pa.compute.invert(late_mask))
-            pq.write_table(ontime, f"{d}/batch1_ontime.parquet")
-            schema = tbl.schema.remove_metadata()
-            ts_type = schema.field("ts").type
-            unit_per_sec = {
-                "s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9
-            }[ts_type.unit]
-            max_ontime = max(ontime["ts"].cast("int64").to_pylist())
-            far = (
-                max(tbl["ts"].cast("int64").to_pylist())
-                + 10 * 3600 * unit_per_sec
+        def sentinel_row(eid: int, ts_raw: int):
+            cols = {
+                "event_id": pa.array([eid], pa.int64()),
+                "ts": pa.array([ts_raw], pa.int64()).cast(ts_type),
+                "user_id": pa.array([-1], pa.int64()),
+                "event_type": pa.array(["zz_sentinel"], pa.string()),
+                "value": pa.array([0.0], pa.float64()),
+                "props": pa.array(["{}"], pa.string()),
+            }
+            return pa.table(
+                {f.name: cols[f.name].cast(f.type) for f in schema},
+                schema=schema,
             )
 
-            def sentinel_row(eid: int, ts_raw: int):
-                cols = {
-                    "event_id": pa.array([eid], pa.int64()),
-                    "ts": pa.array([ts_raw], pa.int64()).cast(ts_type),
-                    "user_id": pa.array([-1], pa.int64()),
-                    "event_type": pa.array(["zz_sentinel"], pa.string()),
-                    "value": pa.array([0.0], pa.float64()),
-                    "props": pa.array(["{}"], pa.string()),
-                }
-                return pa.table(
-                    {f.name: cols[f.name].cast(f.type) for f in schema},
-                    schema=schema,
-                )
+        # spacer at the SAME instant as the on-time maximum: lets
+        # the already-advanced watermark take effect for the next
+        # batch without raising it
+        pq.write_table(
+            sentinel_row(-2, max_ontime), f"{d}/batch2_spacer.parquet"
+        )
+        # the flush sentinel RIDES IN the late batch: the late
+        # rows are filtered against the watermark standing at
+        # batch START (the sentinel's far-future ts only lifts it
+        # AFTER the batch), so the drop semantics are identical
+        # to a separate flush batch and the replay pays one fewer
+        # micro-batch (~0.35 s of per-batch planning + state
+        # commit at the measured stream floor)
+        pq.write_table(
+            pa.concat_tables(
+                [tbl.filter(late_mask), sentinel_row(-1, far)]
+            ),
+            f"{d}/batch3_late_flush.parquet",
+        )
+        files = ["batch1_ontime", "batch2_spacer", "batch3_late_flush"]
+        now = os.path.getmtime(f"{d}/batch3_late_flush.parquet")
+        for i, f in enumerate(files):
+            os.utime(
+                f"{d}/{f}.parquet", (now - 80 + 20 * i, now - 80 + 20 * i)
+            )
 
-            # spacer at the SAME instant as the on-time maximum: lets
-            # the already-advanced watermark take effect for the next
-            # batch without raising it
-            pq.write_table(
-                sentinel_row(-2, max_ontime), f"{d}/batch2_spacer.parquet"
-            )
-            # the flush sentinel RIDES IN the late batch: the late
-            # rows are filtered against the watermark standing at
-            # batch START (the sentinel's far-future ts only lifts it
-            # AFTER the batch), so the drop semantics are identical
-            # to a separate flush batch and the replay pays one fewer
-            # micro-batch (~0.35 s of per-batch planning + state
-            # commit at the measured stream floor)
-            pq.write_table(
-                pa.concat_tables(
-                    [tbl.filter(late_mask), sentinel_row(-1, far)]
-                ),
-                f"{d}/batch3_late_flush.parquet",
-            )
-            files = ["batch1_ontime", "batch2_spacer", "batch3_late_flush"]
-            now = os.path.getmtime(f"{d}/batch3_late_flush.parquet")
-            for i, f in enumerate(files):
-                os.utime(
-                    f"{d}/{f}.parquet", (now - 80 + 20 * i, now - 80 + 20 * i)
-                )
-            for old in [
-                k for k in _LATE_STREAM_DIRS if k[0] == sf_dir and k != key
-            ]:
-                retire_scratch_dir(
-                    "events_late_", _LATE_STREAM_DIRS.pop(old)
-                )
-            _LATE_STREAM_DIRS[key] = d
-        return _LATE_STREAM_DIRS[key]
+    return _staged("events_late_", sf_dir, write)
 
 
 @query(

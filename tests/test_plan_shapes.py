@@ -699,7 +699,6 @@ def test_spread_gates_on_actual_scan_width(spark, tmp_path):
     small files into one FilePartition, so file count alone
     over-estimates (review r7)."""
     from lakehouse_app_spark.operators.dedup import (
-        _SPREAD_MEMO,
         _spread_target,
         spread,
     )

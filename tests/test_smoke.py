@@ -40,7 +40,7 @@ def test_prepared_plan_cache_honesty_guard(spark, sf_dir):
     a = QUERIES["q_project"](spark, sf_dir)
     b = QUERIES["q_project"](spark, sf_dir)
     assert a is b
-    assert ("q_project" in {k[2] for k in rc._PLANS})
+    assert rc.lookup("plans", (sf_dir, "q_project"), spark=spark) is not None
 
     # a cached plan stays executable after release_caches()
     rc.release_caches()
@@ -51,7 +51,7 @@ def test_prepared_plan_cache_honesty_guard(spark, sf_dir):
     c = QUERIES["q_stream_tumbling"](spark, sf_dir)
     d = QUERIES["q_stream_tumbling"](spark, sf_dir)
     assert c is not d
-    assert "q_stream_tumbling" not in {k[2] for k in rc._PLANS}
+    assert rc.lookup("plans", (sf_dir, "q_stream_tumbling"), spark=spark) is None
 
 
 def test_prepared_plan_rejects_fake_job_scheduling_builder(spark, sf_dir):
@@ -72,7 +72,7 @@ def test_prepared_plan_rejects_fake_job_scheduling_builder(spark, sf_dir):
     a = rc.prepared_plan("__fake_impure__", impure, spark, sf_dir)
     b = rc.prepared_plan("__fake_impure__", impure, spark, sf_dir)
     assert len(calls) == 2 and a is not b
-    assert "__fake_impure__" not in {k[2] for k in rc._PLANS}
+    assert rc.lookup("plans", (sf_dir, "__fake_impure__"), spark=spark) is None
 
     def pure(s, d):
         calls.append(1)
@@ -81,7 +81,7 @@ def test_prepared_plan_rejects_fake_job_scheduling_builder(spark, sf_dir):
     c = rc.prepared_plan("__fake_pure__", pure, spark, sf_dir)
     d = rc.prepared_plan("__fake_pure__", pure, spark, sf_dir)
     assert c is d
-    rc._PLANS.pop((rc.session_key(spark), sf_dir, "__fake_pure__"), None)
+    rc.forget("plans", (sf_dir, "__fake_pure__"), spark=spark)
 
 
 # The read keys of perfbench's app_serve workload (perfbench/workloads.json).
@@ -102,22 +102,51 @@ def test_app_serve_reads_are_memo_served(spark, sf_dir, name):
     from lakehouse_app_spark.registry import QUERIES
 
     QUERIES[name].builder(spark, sf_dir)  # one-time ingest: tables, layouts
-    rc._PLANS.pop((rc.session_key(spark), sf_dir, name), None)
+    rc.forget("plans", (sf_dir, name), spark=spark)
     before = rc._jobs_scheduled(spark)
     first = QUERIES[name](spark, sf_dir)
     assert rc._jobs_scheduled(spark) == before
     assert QUERIES[name](spark, sf_dir) is first
 
 
-def test_session_key_stable_and_not_address_based(spark):
-    """Plan/stream caches key on (applicationId, startTime), not
-    id(spark), so a recycled heap address can never replay plans
-    bound to a dead session's JVM objects."""
-    from lakehouse_app_spark.runtime_cache import session_key
+def test_session_id_stable_per_session_and_not_address_based(spark):
+    """Session-bound memo entries key on the JVM session's UUID: stable
+    within a session, distinct for a second live session on the same
+    SparkContext, and never id(spark), which the allocator recycles."""
+    from lakehouse_app_spark.runtime_cache import session_id
 
-    k1, k2 = session_key(spark), session_key(spark)
-    assert k1 == k2 and k1 != id(spark)
-    assert k1[0] == spark.sparkContext.applicationId
+    b = spark.newSession()
+    assert session_id(spark) == session_id(spark)
+    assert session_id(b) == session_id(b) != session_id(spark)
+    assert session_id(spark) != id(spark)
+    assert session_id(spark) == spark._jsparkSession.sessionUUID()
+
+
+# one pure plan, one plan over the stored IVF layout, one spark.sql
+# builder that reads the session's temp views
+TWO_SESSION_KEYS = ("q_vs_retrieve", "q_tpch_q3", "q_agg_gsets")
+
+
+def test_two_live_sessions_are_served_their_own_entries(spark, sf_dir):
+    """A second live session (newSession(): same SparkContext, own
+    temp views and confs) is served its own plans, built in its own
+    session, and neither session evicts the other's entries."""
+    from lakehouse_app_spark.registry import QUERIES
+
+    b = spark.newSession()
+    for name in TWO_SESSION_KEYS:
+        QUERIES[name].builder(b, sf_dir)  # b's one-time ingest: tables, layouts
+    got: dict = {}
+    for s in (spark, b, spark, b):
+        for name in TWO_SESSION_KEYS:
+            df = QUERIES[name](s, sf_dir)
+            assert df.sparkSession is s, name
+            got.setdefault((s is b, name), []).append(df)
+    assert QUERIES["q_agg_gsets"](b, sf_dir).count() > 0  # b's own views
+    for name in TWO_SESSION_KEYS:
+        (a1, a2), (b1, b2) = got[(False, name)], got[(True, name)]
+        assert a1 is a2 and b1 is b2, name  # neither evicted the other
+        assert a1 is not b1, name
 
 
 def test_plan_cache_repersists_scoped_intermediates_on_hit(spark, sf_dir):
@@ -132,8 +161,8 @@ def test_plan_cache_repersists_scoped_intermediates_on_hit(spark, sf_dir):
         return shared.groupBy().sum("v")
 
     a = rc.prepared_plan("__fake_shared__", builder, spark, sf_dir)
-    key = (rc.session_key(spark), sf_dir, "__fake_shared__")
-    (shared_df,) = rc._PLAN_SCOPED[key]
+    key = (sf_dir, "__fake_shared__")
+    _, (shared_df,) = rc.lookup("plans", key, spark=spark)
     assert shared_df.storageLevel.useMemory
     rc.release_caches()
     assert not shared_df.storageLevel.useMemory
@@ -141,8 +170,7 @@ def test_plan_cache_repersists_scoped_intermediates_on_hit(spark, sf_dir):
     assert b is a
     assert shared_df.storageLevel.useMemory  # re-pinned on hit
     rc.release_caches()
-    rc._PLANS.pop(key, None)
-    rc._PLAN_SCOPED.pop(key, None)
+    rc.forget("plans", key, spark=spark)
 
 
 def test_scratch_commit_dir_defers_cleanup():

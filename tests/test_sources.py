@@ -358,15 +358,13 @@ def test_snapshot_format_switch_parity(spark, sf_dir, tmp_path):
     assert [h["format"] for h in snapshot_history(path)] == ["parquet", "orc"]
 
 
-def test_read_handle_memo_bounded_and_invalidated(spark, sf_dir, tmp_path):
-    """The read_snapshot relation memo (r14 optimization) must stay
-    BOUNDED under scratch-clone churn (advice r15: every q_vacuum-
-    style mkdtemp clone inserts a fresh key) and must MISS when a
-    lineage is wiped and re-committed at the same path (the manifest
-    stat token), instead of serving a stale file listing."""
+def test_read_handle_memo_misses_on_recreated_lineage(spark, sf_dir, tmp_path):
+    """The read_snapshot relation memo (r14 optimization) must MISS
+    when a lineage is wiped and re-committed at the same path (the
+    manifest stat stamp), instead of serving a stale file listing.
+    Its bound is the registry's, tested once in test_memo_registry."""
     import shutil
 
-    from lakehouse_app_spark.sources import sinks
     from lakehouse_app_spark.sources.sinks import read_snapshot, write_snapshot
 
     t = load_tables(spark, sf_dir)
@@ -379,13 +377,6 @@ def test_read_handle_memo_bounded_and_invalidated(spark, sf_dir, tmp_path):
     shutil.rmtree(path)
     write_snapshot(small.limit(3), path, "second life")
     assert read_snapshot(spark, path).count() == 3  # not the stale 5
-
-    # -- bound: many distinct scratch paths never grow the memo past cap
-    for i in range(sinks._READ_HANDLES_MAX + 20):
-        p = str(tmp_path / f"churn_{i}")
-        write_snapshot(small.limit(1), p, "churn")
-        read_snapshot(spark, p)
-    assert len(sinks._READ_HANDLES) <= sinks._READ_HANDLES_MAX
 
 
 def test_read_handle_memo_misses_on_rewritten_chain_manifest(spark, sf_dir, tmp_path):
@@ -649,6 +640,7 @@ def test_layout_catalog_survives_process_restart(spark, sf_dir, tmp_path, monkey
     import subprocess
     import sys
 
+    from lakehouse_app_spark.runtime_cache import forget
     from lakehouse_app_spark.sources import layout as L
 
     cat = str(tmp_path / "cat")
@@ -664,7 +656,9 @@ def test_layout_catalog_survives_process_restart(spark, sf_dir, tmp_path, monkey
 
     # simulate process death: wipe the in-process memo; a rebuild
     # attempt would trip the booby-trapped builder
-    L._BUILT.pop(L._table_dir("t_restart", sf_dir), None)
+    tdir = L._table_dir("t_restart", sf_dir)
+    forget("layout.built", tdir)
+    forget("layout.handles", tdir, spark=spark)
 
     def must_not_build():
         raise AssertionError("layout rebuilt despite durable commit")
@@ -738,6 +732,7 @@ def test_layout_gc_sweeps_stale_fingerprints(spark, tmp_path, monkeypatch):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from lakehouse_app_spark.runtime_cache import forget
     from lakehouse_app_spark.sources import layout as L
 
     monkeypatch.setenv("SPARK_GRAFT_LAYOUT_DIR", str(tmp_path / "cat"))
@@ -751,7 +746,7 @@ def test_layout_gc_sweeps_stale_fingerprints(spark, tmp_path, monkeypatch):
 
     # regenerate the corpus → new fingerprint; old layout is stale
     pq.write_table(pa.table({"a": [1, 2]}), str(corpus / "t.parquet"))
-    L._BUILT.clear()
+    forget("layout.built")
     removed = L.gc_layouts(str(corpus))
     assert len(removed) == 1 and not os.path.isdir(removed[0])
     assert L.layout_path("t_gc", str(corpus)) is None  # stale never served
@@ -1248,9 +1243,9 @@ def test_lineage_table_builds_once_and_survives_processes(
     spark, tmp_path, monkeypatch
 ):
     """lineage_table commits a whole snapshot lineage exactly once per
-    corpus content: a second call (and a simulated fresh process —
-    cleared in-process memo) reuses the durable commit byte-for-byte;
-    a failed build leaves no readable half-lineage."""
+    corpus content: a second call (the durable commit is the only
+    memo) reuses it byte-for-byte; a failed build leaves no readable
+    half-lineage."""
     import os
 
     import pyarrow as pa
@@ -1283,14 +1278,11 @@ def test_lineage_table_builds_once_and_survives_processes(
         f: os.path.getmtime(os.path.join(r1, f)) for f in os.listdir(r1)
     }
     r2 = layout.lineage_table(spark, "lin", str(corpus), build)
-    assert r1 == r2 and len(calls) == 1  # in-process memo
-    layout._LINEAGES.clear()  # simulate a fresh process
-    r3 = layout.lineage_table(spark, "lin", str(corpus), build)
-    assert r3 == r1 and len(calls) == 1  # durable reuse, no rebuild
+    assert r1 == r2 and len(calls) == 1  # durable reuse, no rebuild
     assert {
         f: os.path.getmtime(os.path.join(r1, f)) for f in os.listdir(r1)
     } == mtimes
-    assert read_snapshot(spark, r3, 1).collect()[0]["s"] == "y"
+    assert read_snapshot(spark, r2, 1).collect()[0]["s"] == "y"
 
     # a failing build leaves no readable lineage behind (skip the
     # 30 s concurrent-winner poll: no concurrency in this test)
