@@ -474,9 +474,13 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str):
             n_buckets=8,
         )
 
-    # session-bound entry: a fresh SparkSession in the same process
-    # rebuilds and re-registers the tables (review r6)
-    memo("joins.bucketed", sf_dir, build, spark=spark)
+    # context-level entry: managed tables live in the catalog every
+    # newSession() of a SparkContext shares, so a second session must
+    # reuse them (a rebuild would drop and rewrite the files under the
+    # first session's live plans); a new SparkContext, whose catalog
+    # starts empty, rebuilds and re-registers them
+    sc = spark.sparkContext
+    memo("joins.bucketed", sf_dir, build, stamp=(sc.applicationId, sc.startTime))
     return spark.table(li), spark.table(od)
 
 

@@ -39,18 +39,23 @@ _SCOPED: list[DataFrame] = []
 # schema read under session confs) passes ``spark``, so a second live
 # session (newSession(): same SparkContext, own views and confs) never
 # sees another's entries; a process-level value (a staged dir, a
-# durable layout path) passes spark=None. A lookup hits only on an
-# equal stamp (a corpus fingerprint, a file stat). A miss builds with
+# durable layout path) passes spark=None, and so does a managed table
+# in the catalog all sessions of a SparkContext share, stamped with
+# that context. A lookup hits only on an equal stamp (a corpus
+# fingerprint, a file stat, a context). A miss builds with
 # NO lock held (foreachBatch callbacks build on other threads), the
 # first insert wins, and a losing or superseded value goes to its
 # on_drop. Each insert sweeps entries of a stopped SparkContext, then
-# evicts least-recently-used entries past MEMO_MAX (a full ``drive``
-# pass at sf0.01 peaks at 324 entries). release_caches() does NOT
+# evicts least-recently-used entries past MEMO_MAX. A full ``drive``
+# pass at sf0.01 peaks at 324 entries, so it evicts nothing; a
+# read_snapshot handle retains ~0.12 MB of JVM heap, so a loop reading
+# fresh lineage clones (q_vacuum, q_merge_multi) pins at most ~65 MB
+# at this bound (measured at sf0.1). release_caches() does NOT
 # clear the registry: it runs after every served request, and the
 # plan memo is what makes a repeated request cheap.
 # ---------------------------------------------------------------------------
 
-MEMO_MAX = 1024
+MEMO_MAX = 512
 
 _MEMO: OrderedDict[tuple, tuple] = OrderedDict()  # -> (stamp, value, sc, on_drop)
 _MEMO_LOCK = threading.Lock()
@@ -121,13 +126,9 @@ def memo(namespace, key, build, *, spark=None, stamp=None, on_drop=None) -> Any:
 
 def forget(namespace: str, *keys: Hashable, spark: Any = None) -> None:
     """Drop the named keys' entries (``spark``'s, or the process-level
-    ones), or with no keys every entry of ``namespace``; dropped values
-    go to their ``on_drop``."""
+    ones); dropped values go to their ``on_drop``."""
+    doomed = [_entry_key(namespace, k, spark) for k in keys]
     with _MEMO_LOCK:
-        if keys:
-            doomed = [_entry_key(namespace, k, spark) for k in keys]
-        else:
-            doomed = [k for k in _MEMO if k[0] == namespace]
         dropped = [_MEMO.pop(k) for k in doomed if k in _MEMO]
     _drop(dropped)
 

@@ -71,8 +71,8 @@ def test_registry_stamps_and_first_insert_wins(fresh_registry):
     rc.forget("t", "k")
     assert dropped == ["loser", "v1", "v2"] and rc.lookup("t", "k", stamp=2) is None
     assert "o" in rc.NamespaceKeys("t") and "k" not in rc.NamespaceKeys("t")
-    rc.forget("t")
-    assert "o" not in rc.NamespaceKeys("t")
+    rc.forget("t", "o", "i")
+    assert "o" not in rc.NamespaceKeys("t") and "i" not in rc.NamespaceKeys("t")
 
 
 def test_restaging_after_regeneration_retires_the_old_dir(spark, sf_dir, tmp_path):

@@ -123,30 +123,42 @@ def test_session_id_stable_per_session_and_not_address_based(spark):
 
 
 # one pure plan, one plan over the stored IVF layout, one spark.sql
-# builder that reads the session's temp views
-TWO_SESSION_KEYS = ("q_vs_retrieve", "q_tpch_q3", "q_agg_gsets")
+# builder that reads the session's temp views, and one plan over
+# managed tables in the catalog both sessions share
+TWO_SESSION_KEYS = ("q_vs_retrieve", "q_tpch_q3", "q_agg_gsets", "q_join_bucketed")
 
 
 def test_two_live_sessions_are_served_their_own_entries(spark, sf_dir):
     """A second live session (newSession(): same SparkContext, own
     temp views and confs) is served its own plans, built in its own
-    session, and neither session evicts the other's entries."""
+    session, and neither session evicts the other's entries. What the
+    sessions share stays shared: b's first q_join_bucketed reuses the
+    bucketed tables in the common catalog instead of rewriting them
+    under spark's memoized plan, which still reads after b's call."""
     from lakehouse_app_spark.registry import QUERIES
 
     b = spark.newSession()
-    for name in TWO_SESSION_KEYS:
-        QUERIES[name].builder(b, sf_dir)  # b's one-time ingest: tables, layouts
     got: dict = {}
-    for s in (spark, b, spark, b):
+
+    def serve(s):
         for name in TWO_SESSION_KEYS:
             df = QUERIES[name](s, sf_dir)
             assert df.sparkSession is s, name
-            got.setdefault((s is b, name), []).append(df)
+            got.setdefault((s, name), []).append(df)
+
+    for s in (spark, b):
+        for name in TWO_SESSION_KEYS:
+            QUERIES[name].builder(s, sf_dir)  # one-time ingest: tables, layouts
+        serve(s)
+    serve(spark)
+    serve(b)
     assert QUERIES["q_agg_gsets"](b, sf_dir).count() > 0  # b's own views
     for name in TWO_SESSION_KEYS:
-        (a1, a2), (b1, b2) = got[(False, name)], got[(True, name)]
+        (a1, a2), (b1, b2) = got[(spark, name)], got[(b, name)]
         assert a1 is a2 and b1 is b2, name  # neither evicted the other
         assert a1 is not b1, name
+    a_rows, b_rows = (got[(s, "q_join_bucketed")][0].collect() for s in (spark, b))
+    assert a_rows and sorted(a_rows) == sorted(b_rows)
 
 
 def test_plan_cache_repersists_scoped_intermediates_on_hit(spark, sf_dir):

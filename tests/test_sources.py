@@ -743,10 +743,12 @@ def test_layout_gc_sweeps_stale_fingerprints(spark, tmp_path, monkeypatch):
     L.derived_table(spark, "t_gc", str(corpus), lambda: spark.range(3))
     old_path = L.layout_path("t_gc", str(corpus))
     assert old_path is not None
+    old_tdir = L._table_dir("t_gc", str(corpus))
 
     # regenerate the corpus → new fingerprint; old layout is stale
     pq.write_table(pa.table({"a": [1, 2]}), str(corpus / "t.parquet"))
-    forget("layout.built")
+    forget("layout.built", old_tdir)
+    forget("layout.handles", old_tdir, spark=spark)
     removed = L.gc_layouts(str(corpus))
     assert len(removed) == 1 and not os.path.isdir(removed[0])
     assert L.layout_path("t_gc", str(corpus)) is None  # stale never served
