@@ -112,6 +112,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per query key (omitted for
-    non-SQL-expressible ops → driver records rows-only checks)."""
+    """DuckDB-runnable ANSI SQL oracle for every query key."""
     return dict(eng.ORACLES)

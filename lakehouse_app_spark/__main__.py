@@ -42,7 +42,7 @@ SCALE_SRC = "/root/testdata/sf0.1"
 def _build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="lakehouse_app_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
-    sub.add_parser("list", help="list declared queries (+oracle class)")
+    sub.add_parser("list", help="list declared queries")
     for c in ("run", "explain", "drive"):
         s = sub.add_parser(c)
         s.add_argument("query", nargs=None if c == "run" else "*")
@@ -82,13 +82,11 @@ def _bare_session(perturbed: bool):
 def _drive_key(name, query, oracle, spark, sf_dir, con) -> tuple[bool, str]:
     try:
         got = query(spark, sf_dir).toPandas()
-        want = None if oracle is None else con.execute(oracle).fetchdf()
+        want = con.execute(oracle).fetchdf()
     except Exception as ex:  # noqa: BLE001 - one key's error must not end the run
         traceback.print_exc()
         first = (str(ex).strip().splitlines() or [""])[0]
         return False, f"ERROR {type(ex).__name__}: {first[:300]}"
-    if want is None:
-        return True, f"{len(got):7d} rows  rows-only"
     from lakehouse_app_spark.parity import assert_frames_match
 
     try:
@@ -118,7 +116,7 @@ def _drive(args, spark) -> int:
     with oracle_connection(args.sf_dir) as con:
         for name in args.query or sorted(q):
             if name in q:
-                ok, status = _drive_key(name, q[name], o.get(name), spark, args.sf_dir, con)
+                ok, status = _drive_key(name, q[name], o[name], spark, args.sf_dir, con)
             else:
                 ok, status = False, "UNKNOWN KEY"
             if not ok:
@@ -174,25 +172,19 @@ def main(argv: list[str] | None = None, spark=None) -> int:
     args = _build_parser().parse_args(argv)
 
     if args.cmd == "list":
-        for name in sorted(QUERIES):
-            kind = "exact " if name in ORACLES else "rows-only"
-            print(f"{kind}  {name}")
+        print("\n".join(sorted(QUERIES)))
         print(f"{len(QUERIES)} queries ({len(ORACLES)} exact oracles)")
-        return 0
-
-    if args.cmd == "oracle":
-        if args.query not in ORACLES:
-            print(f"no oracle for {args.query!r}", file=sys.stderr)
-            return 1
-        print(ORACLES[args.query])
         return 0
 
     if args.cmd == "drive":
         return _drive(args, spark)
 
-    if args.cmd == "run" and args.query not in QUERIES:
+    if args.cmd in ("run", "oracle") and args.query not in QUERIES:
         print(f"unknown query {args.query!r} (try: list)", file=sys.stderr)
         return 1
+    if args.cmd == "oracle":
+        print(ORACLES[args.query])
+        return 0
 
     if spark is None:
         from lakehouse_app_spark import get_spark

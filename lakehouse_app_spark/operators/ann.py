@@ -27,7 +27,7 @@ from lakehouse_app_spark.operators.ann_index import (
     lloyd_sql,
     with_cid,
 )
-from lakehouse_app_spark.operators.dedup import spread
+from lakehouse_app_spark.operators.dedup import lsh_candidates, spread
 from lakehouse_app_spark.operators.vectors import as_double_array, cosine_sim
 from lakehouse_app_spark.registry import query
 from lakehouse_app_spark.runtime_cache import scoped_persist
@@ -79,9 +79,10 @@ BRP_BUCKET_LEN = 0.5    # bucket width over the unit-sphere projection
 def q_ann_brp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed random-projection LSH ANN — the same family MLlib's
     BucketedRandomProjectionLSH implements (scalar projections
-    quantized into buckets of width {BRP_BUCKET_LEN}, one equi-join
-    per hash table, exact rerank of the candidate union), hand-rolled
-    with DETERMINISTIC seeded directions so the whole query is
+    quantized into buckets of width {BRP_BUCKET_LEN}, one (table,
+    bucket) equi-join via :func:`lsh_candidates`, exact rerank of the
+    candidate union), hand-rolled with DETERMINISTIC seeded
+    directions so the whole query is
     exact-oracle (r15, verdict item 8 — the MLlib variant's hash
     tables are library-private, which kept this key rows-only for 8
     rounds). Directions are the first {BRP_TABLES} corpus vectors
@@ -102,9 +103,9 @@ def q_ann_brp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").cast("int").alias("j"),
         as_double_array("embedding").alias("dv"),
     )
-    packed = dirs.agg(
-        F.array_sort(F.collect_list(F.struct("j", "dv"))).alias("ds")
-    )
+    # the direction pack and the query vector are one-row constants:
+    # scalar subqueries, not cross joins
+    ds = dirs.agg(F.array_sort(F.collect_list(F.struct("j", "dv")))).scalar()
     bucket_arr = F.transform(
         F.col("ds"),
         lambda s: F.floor(
@@ -112,30 +113,21 @@ def q_ann_brp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.lit(BRP_BUCKET_LEN)
         ),
     )
-    buckets = (
-        t.embeddings.select(
-            "vec_id", as_double_array("embedding").alias("emb")
-        )
-        .join(F.broadcast(packed))
-        .select("vec_id", F.posexplode(bucket_arr).alias("j", "v"))
+    emb = t.embeddings.select(
+        F.col("vec_id").alias("id"), as_double_array("embedding").alias("emb")
     )
-    kb = buckets.where(F.col("vec_id") == 0).select("j", "v")
-    cand = (
-        buckets.join(F.broadcast(kb), ["j", "v"])
-        .select("vec_id")
-        .distinct()
+    buckets = emb.select("id", "emb", ds.alias("ds")).select(
+        "id", bucket_arr.alias("bands")
     )
-    qv = _query_vec(t)
+    # probe: the corpus against the query row's buckets (broadcast)
+    cand = lsh_candidates(
+        buckets, F.broadcast(buckets.where(F.col("id") == 0))
+    ).select(F.col("a_id").alias("id"))
     return (
-        cand.join(
-            t.embeddings.select(
-                "vec_id", as_double_array("embedding").alias("emb")
-            ),
-            "vec_id",
-        )
-        .join(F.broadcast(qv))
+        cand.join(emb, "id")
+        .select("id", "emb", _query_vec(t).scalar().alias("qv"))
         .select(
-            "vec_id",
+            F.col("id").alias("vec_id"),
             F.round(cosine_sim(F.col("emb"), F.col("qv")), 6).alias("sim"),
         )
         .orderBy(F.col("sim").desc(), "vec_id")
@@ -1583,16 +1575,15 @@ _HP_DOT = (
       FROM embeddings e, hp
       GROUP BY e.vec_id
     ),
-    b0 AS (SELECT vec_id, sketch & 255 AS v FROM sk),
-    b1 AS (SELECT vec_id, (sketch >> 8) & 255 AS v FROM sk),
+    bk AS (
+      SELECT vec_id, j AS band,
+             (sketch >> (j * {HP_BAND_BITS})) & {(1 << HP_BAND_BITS) - 1} AS v
+      FROM sk CROSS JOIN (SELECT unnest(range({HP_BITS // HP_BAND_BITS})) AS j)
+    ),
     cands AS (
-      SELECT DISTINCT a_id, b_id FROM (
-        SELECT a.vec_id AS a_id, b.vec_id AS b_id
-        FROM b0 a JOIN b0 b ON a.v = b.v AND a.vec_id < b.vec_id
-        UNION ALL
-        SELECT a.vec_id, b.vec_id
-        FROM b1 a JOIN b1 b ON a.v = b.v AND a.vec_id < b.vec_id
-      )
+      SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
+      FROM bk a JOIN bk b
+        ON a.band = b.band AND a.v = b.v AND a.vec_id < b.vec_id
     )
     SELECT c.a_id, c.b_id,
            round(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
@@ -1609,19 +1600,19 @@ _HP_DOT = (
 def q_ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane (sign-of-dot) LSH for cosine similarity —
     the classic Charikar sketch, hand-rolled so it is EXACT-oracle
-    (the MLlib variant q_ann_brp_lsh stays rows-only because its
-    hash tables are library-private). Each vector folds to a
-    {HP_BITS}-bit sketch (bit j = sign of its dot with hyperplane j;
-    hyperplanes are the first {HP_BITS} corpus vectors — the corpus
-    is zero-centered, so they are usable random directions, and both
-    engines can rebuild them), candidates come from two
-    {HP_BAND_BITS}-bit band-bucket equi-joins, and only candidates
-    pay the exact cosine (≥ {HP_TAU} kept). The sketch is a STORED
-    LAYOUT (8 bytes/doc) like the rest of the dedup tier; sketching
-    is one scan-local projection against the broadcast hyperplane
-    pack. P[bit collision] = 1 − θ/π per bit, so band width and bit
-    count tune recall exactly like MinHash bands — at 10⁹ vectors
-    you widen the sketch to ~64 bits and keep the same plan."""
+    (like the random-projection family of [[q_ann_brp_lsh]]). Each
+    vector folds to a {HP_BITS}-bit sketch (bit j = sign of its dot
+    with hyperplane j; hyperplanes are the first {HP_BITS} corpus
+    vectors — the corpus is zero-centered, so they are usable random
+    directions, and both engines can rebuild them), candidates come
+    from one equi-join on the {HP_BAND_BITS}-bit band buckets
+    (:func:`lsh_candidates`), and only candidates pay the exact cosine
+    (≥ {HP_TAU} kept). The sketch is a STORED LAYOUT (8 bytes/doc)
+    like the rest of the dedup tier; sketching is one scan-local
+    projection against the broadcast hyperplane pack.
+    P[bit collision] = 1 − θ/π per bit, so band width and bit count
+    tune recall exactly like MinHash bands — at 10⁹ vectors you widen
+    the sketch to ~64 bits and keep the same plan."""
     from lakehouse_app_spark.sources.layout import derived_table
 
     t = load_tables(spark, sf_dir)
@@ -1658,8 +1649,6 @@ def q_ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sk = derived_table(spark, "hp_sketch", sf_dir, build)
     mask = (1 << HP_BAND_BITS) - 1
-    # single-scan posexplode over the band values (the unioned
-    # formulation re-read the sketch layout once per band)
     band_arr = F.array(
         *[
             F.shiftright(F.col("sketch"), i * HP_BAND_BITS).bitwiseAND(
@@ -1668,14 +1657,8 @@ def q_ann_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(HP_BITS // HP_BAND_BITS)
         ]
     )
-    buckets = sk.select("vec_id", F.posexplode(band_arr).alias("band", "v"))
-    a = buckets.select(F.col("vec_id").alias("a_id"), "band", "v")
-    b = buckets.select(F.col("vec_id").alias("b_id"), "band", "v")
-    cand = (
-        a.join(b, ["band", "v"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates()
+    cand = lsh_candidates(
+        sk.select(F.col("vec_id").alias("id"), band_arr.alias("bands"))
     )
     from lakehouse_app_spark.operators.vectors import dot, l2_norm
 

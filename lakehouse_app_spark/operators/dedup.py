@@ -3,14 +3,16 @@
 The reference's dedup is an in-memory ``set()`` of (url, snippet)
 pairs (`app/app.py:111-124` — covered by ``q_dedup_sources``); this
 module is the scale-out generalization: exact fingerprint dedup,
-n-gram Jaccard verification, custom MinHash banding, SimHash with
-hamming-ball candidate search, and an MLlib MinHashLSH variant.
+n-gram Jaccard verification, custom MinHash banding, and SimHash with
+hamming-ball candidate search.
 
 Scale design: every method here is "signature → band/bucket →
 equi-join", which is the only shape that survives 100 TB — the
 quadratic pair space is never materialized; candidates come from
 hash-bucket collisions (equi-join ⇒ shuffle on the bucket key), and
-only candidates get the expensive verification.
+only candidates get the expensive verification. :func:`lsh_candidates`
+is that candidate step, the one copy every LSH key (here, in
+dedup_ext, ann and the streaming twin) calls.
 """
 
 from __future__ import annotations
@@ -188,6 +190,44 @@ def shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return derived_table(spark, "sh3_df20", sf_dir, build)
+
+
+def lsh_candidates(
+    left: DataFrame, right: DataFrame | None = None, carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Candidate pairs by band collision — README design rule 3's
+    "bucket → equi-join" step. ``left`` (and ``right``) are
+    (id, bands, *carry) frames; ``bands`` holds band k's bucket value
+    at position k. One scan-local posexplode per input yields
+    (band, value) rows, one equi-join on (band, value) pairs rows
+    that share a bucket, and one dropDuplicates keeps a pair that
+    collides in several bands once. Returns (a_id, b_id, a_<c>, b_<c>
+    for c in carry), a from ``left`` and b from ``right``; with
+    ``right=None`` the frame meets itself and each unordered pair
+    appears once, as a_id < b_id. A broadcast hint on ``right`` holds
+    for the join (the stream-static case). When a self-join shuffles,
+    its two sides canonicalize alike, so the scan and exchange run
+    once (ReusedExchange); a small frame is broadcast instead."""
+
+    # posexplode_OUTER: over a plain column, Catalyst infers
+    # size(bands) > 0 AND isnotnull(bands) for an inner generator and
+    # pushes it below the projection that computes the bands, so the
+    # signature (a text fold, a cosine) ran up to three times per row
+    # (measured 3x on q_dedup_incremental at sf0.1). The outer form's
+    # (null, null) row never meets the equi-join.
+    def side(df: DataFrame, p: str) -> DataFrame:
+        return df.select(
+            F.col("id").alias(f"{p}_id"),
+            *[F.col(c).alias(f"{p}_{c}") for c in carry],
+            F.posexplode_outer("bands").alias("band", "value"),
+        )
+
+    pairs = side(left, "a").join(
+        side(left if right is None else right, "b"), ["band", "value"]
+    )
+    if right is None:
+        pairs = pairs.where(F.col("a_id") < F.col("b_id"))
+    return pairs.drop("band", "value").dropDuplicates(["a_id", "b_id"])
 
 
 # ---------------------------------------------------------------- exact
@@ -398,17 +438,19 @@ def minhash16_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return derived_table(spark, "mh16_sig", sf_dir, build)
 
 
-# The ground-truth CTE chain both q_dedup_minhash's oracle and
-# downstream report oracles replay: exact-dup representatives →
-# word-trigram shingle sets → all true pairs at J ≥ MH_VERIFY_J.
-MINHASH_TRUTH_CTES = f"""
+# rep_docs in DuckDB (the string itself as the group key), and the
+# ground-truth CTE chain both q_dedup_minhash's oracle and downstream
+# report oracles replay: exact-dup representatives → word-trigram
+# shingle sets → all true pairs at J ≥ MH_VERIFY_J.
+REPS_CTES = """
     fp AS (
       SELECT doc_id,
              array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ')
                AS fp
       FROM documents
     ),
-    reps AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY fp),
+    reps AS (SELECT min(doc_id) AS doc_id FROM fp GROUP BY fp)"""
+MINHASH_TRUTH_CTES = REPS_CTES + f""",
     toks AS (
       SELECT d.doc_id, string_split(d.text, ' ') AS tk
       FROM documents d JOIN reps r ON d.doc_id = r.doc_id
@@ -446,8 +488,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two-tier: exact-dedup representatives (rep_docs) → word-trigram
     shingles → 16 seeded xxhash64 minima (one grouped pass, no 16×
-    explode) → 8 bands of 2 → band-bucket equi-join → verified
-    shingle-Jaccard ≥ 0.5. Shingles, not unigram token sets: on a
+    explode) → 8 bands of 2 → band-bucket equi-join
+    (:func:`lsh_candidates`) → verified shingle-Jaccard ≥
+    MH_VERIFY_J (0.9). Shingles, not unigram token sets: on a
     small vocabulary every token set overlaps every other (~0.8
     Jaccard between unrelated docs), so unigram MinHash buckets
     degenerate into near-cliques; trigram sets are near-unique per
@@ -480,9 +523,7 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the query shuffles only (band, bucket) keys and re-shingles
     # nothing but the docs that land in a candidate pair
     sig = minhash16_sig_table(spark, sf_dir)
-    # one scan-local posexplode generates every (band, bucket) row —
-    # the unioned-selects formulation re-scanned the signature layout
-    # once per band (8 scans; measured 1.9× slower at sf0.1)
+    # band k hashes minima (2k, 2k+1) into one bucket value
     band_arr = F.array(
         *[
             F.xxhash64(
@@ -491,18 +532,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(N_HASHES // BAND_SIZE)
         ]
     )
-    buckets = sig.select(
-        "doc_id", F.posexplode(band_arr).alias("band", "bucket")
+    cand = lsh_candidates(
+        sig.select(F.col("doc_id").alias("id"), band_arr.alias("bands"))
     ).transform(scoped_persist)
-    a = buckets.select(F.col("doc_id").alias("a_id"), "band", "bucket")
-    b = buckets.select(F.col("doc_id").alias("b_id"), "band", "bucket")
-    cand = (
-        a.join(b, ["band", "bucket"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates()
-        .transform(scoped_persist)
-    )
     # verification: true shingle-set Jaccard, re-shingling ONLY docs
     # that appear in a candidate pair (candidates ⊆ reps by
     # construction, so no rep filter is needed here)
@@ -573,6 +605,19 @@ def _with_token_hash(df: DataFrame, out: str = "th") -> DataFrame:
     )
 
 
+def _sql_token_hash(w: str) -> str:
+    """DuckDB twin of :func:`_with_token_hash`: the 62-bit portable
+    hash of the string expression ``w``."""
+    from lakehouse_app_spark.operators.corpus_prep import _FP_DUCK, _MH_P
+
+    (a1, b1), (a2, b2) = _SH_PARAMS
+    fp = _FP_DUCK.format(w=w)
+    return (
+        f"(({a1} * ({fp}) + {b1}) % {_MH_P}) * {1 << 31}"
+        f" + (({a2} * ({fp}) + {b2}) % {_MH_P})"
+    )
+
+
 def simhash(df: DataFrame) -> DataFrame:
     """62-bit SimHash per doc from shingle-frequency-weighted hash bits,
     entirely in Catalyst expressions (62 conditional-sum aggregate
@@ -632,10 +677,6 @@ def _simhash_oracle() -> str:
     verification. Generated, not hand-written: the 62 per-bit vote
     columns come from SIMHASH_BITS so a width change retunes the
     oracle with the engine."""
-    from lakehouse_app_spark.operators.corpus_prep import _FP_DUCK, _MH_P
-
-    (a1, b1), (a2, b2) = _SH_PARAMS
-    fp = _FP_DUCK.format(w="w")
     votes = ", ".join(
         f"SUM((th >> {b}) & 1) AS c{b}" for b in range(SIMHASH_BITS)
     )
@@ -647,27 +688,18 @@ def _simhash_oracle() -> str:
     n_chunks = (SIMHASH_BITS + CHUNK_BITS - 1) // CHUNK_BITS
     mask = (1 << CHUNK_BITS) - 1
     return f"""
-    WITH rep AS (
-      SELECT min(doc_id) AS doc_id
-      FROM (SELECT doc_id,
-                   array_to_string(list_sort(list_distinct(
-                     string_split(text, ' '))), ' ') AS fpset
-            FROM documents)
-      GROUP BY fpset
-    ),
+    WITH {REPS_CTES},
     sh_toks AS (
       SELECT d.doc_id,
              list_distinct(list_transform(range(1, len(tk) - 1),
                i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS toks
       FROM (SELECT doc_id, string_split(text, ' ') AS tk
             FROM documents) d
-      JOIN rep r ON d.doc_id = r.doc_id
+      JOIN reps r ON d.doc_id = r.doc_id
       WHERE len(tk) >= 3
     ),
     th AS (
-      SELECT doc_id,
-             (({a1} * ({fp}) + {b1}) % {_MH_P}) * {1 << 31}
-               + (({a2} * ({fp}) + {b2}) % {_MH_P}) AS th
+      SELECT doc_id, {_sql_token_hash("w")} AS th
       FROM (SELECT doc_id, unnest(toks) AS w FROM sh_toks)
     ),
     votes AS (
@@ -720,8 +752,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layout name carries the hash recipe generation: the r7 portable-
     # hash upgrade must not reuse a stored xxhash64-era signature table
     sh = derived_table(spark, "sh_sig_p62", sf_dir, build)
-    # single-scan posexplode over the 4 chunk values (the unioned
-    # formulation re-read the signature layout once per chunk)
     n_chunks = (SIMHASH_BITS + CHUNK_BITS - 1) // CHUNK_BITS
     chunk_arr = F.array(
         *[
@@ -730,20 +760,9 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j in range(n_chunks)
         ]
     )
-    chunks = sh.select(
-        "doc_id", "sh", F.posexplode(chunk_arr).alias("chunk", "cval")
-    )
-    a = chunks.select(
-        F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"), "chunk", "cval"
-    )
-    b = chunks.select(
-        F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"), "chunk", "cval"
-    )
-    cand = (
-        a.join(b, ["chunk", "cval"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", "a_sh", "b_sh")
-        .dropDuplicates(["a_id", "b_id"])
+    cand = lsh_candidates(
+        sh.select(F.col("doc_id").alias("id"), "sh", chunk_arr.alias("bands")),
+        carry=("sh",),
     )
     hamming = F.bit_count(F.col("a_sh").bitwiseXOR(F.col("b_sh"))).cast(
         "long"
@@ -751,47 +770,4 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.select("a_id", "b_id", hamming.alias("hamming"))
         .where(F.col("hamming") <= HAMMING_MAX)
-    )
-
-
-# ---------------------------------------------------------------- MLlib LSH
-
-
-@query("q_neardup_lsh")  # rows-only: MLlib model internals
-def q_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MLlib MinHashLSH variant (seed-pinned): trigram NGram →
-    binary HashingTF → approxSimilarityJoin at Jaccard distance
-    ≤ 0.4 (shingle features for the same bucket-degeneracy reason
-    as q_dedup_minhash)."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH, NGram, Tokenizer
-
-    from lakehouse_app_spark.sources.layout import derived_table
-
-    # featurization (tokenize → trigram → 2^17-dim binary TF) is the
-    # per-run recompute; store it once per corpus like the other
-    # signature layouts (SparseVector round-trips through parquet)
-    def build() -> DataFrame:
-        t = load_tables(spark, sf_dir)
-        docs = rep_docs(spread(t.documents))
-        tokenized = Tokenizer(inputCol="text", outputCol="words").transform(docs)
-        grams = NGram(n=3, inputCol="words", outputCol="grams").transform(
-            tokenized
-        )
-        return HashingTF(
-            inputCol="grams", outputCol="features", numFeatures=1 << 17,
-            binary=True,
-        ).transform(grams).select("doc_id", "features")
-
-    tf = derived_table(spark, "lshtf", sf_dir, build)
-    model = MinHashLSH(
-        inputCol="features", outputCol="hashes", numHashTables=8, seed=42
-    ).fit(tf)
-    joined = model.approxSimilarityJoin(tf, tf, 0.4, distCol="jaccard_dist")
-    return (
-        joined.where(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("a_id"),
-            F.col("datasetB.doc_id").alias("b_id"),
-            F.round("jaccard_dist", 6).alias("jaccard_dist"),
-        )
     )

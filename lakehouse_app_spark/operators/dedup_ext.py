@@ -1,6 +1,7 @@
 """Corpus-dedup extensions: exact substring-level dedup, repetition
-quality filters, cluster-blocked semantic dedup, and a MinHash
-estimator audit.
+quality filters, cluster-blocked semantic dedup, a MinHash estimator
+audit, and the MinHash-LSH near-dup join and ingest checks built on
+the portable signature layout.
 
 The reference deduplicates retrieved sources by exact pair identity
 (`app/app.py:111,117-124`); a pretraining corpus needs the stronger
@@ -31,6 +32,13 @@ from lakehouse_app_spark.operators.corpus_prep import (
     _mh_cols_from_fps,
     _MH_PARAMS,
     mh_sig_cte_sql,
+)
+from lakehouse_app_spark.operators.dedup import (
+    REPS_CTES,
+    lsh_candidates,
+    minhash16_sig_table,
+    spread,
+    word_shingles,
 )
 from lakehouse_app_spark.operators.vectors import cosine_sim
 from lakehouse_app_spark.registry import query
@@ -173,8 +181,6 @@ def q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     balanced hash aggregations regardless of corpus size. Thresholds
     compare unrounded doubles, identically derived in both engines
     from identical integer counts."""
-    from lakehouse_app_spark.operators.dedup import spread
-
     t = load_tables(spark, sf_dir)
     tk = F.split(F.col("text"), " ")
     # the three n-gram arms each consume the tokenized corpus:
@@ -306,57 +312,32 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so a width change would silently skew est_jaccard there).
 _N_MH = len(_MH_PARAMS)
 _N_BANDS = _N_MH // 2
+_MH_COLS = tuple(f"mh{i}" for i in range(_N_MH))
 
 
-def _band_structs(name):
-    """posexplode-able array of (h1, h2) band structs over the
-    signature columns named by ``name(i)`` — the one copy of the
-    2-hashes-per-band layout shared by the incremental batch ingest
-    and its streaming twin. Band k pairs hashes (2k, 2k+1)."""
-    return F.array(
+def _banded(sig: DataFrame) -> DataFrame:
+    """(id, mh*, bands) for :func:`lsh_candidates` from a
+    (doc_id, mh*) signature frame. Band k packs hashes (2k, 2k+1)
+    into one exact bucket value: each is < 2^31, so h1 * 2^31 + h2 is
+    equal iff both hashes are — the predicate :func:`_sql_bands`
+    spells out."""
+    bands = F.array(
         *[
-            F.struct(
-                F.col(name(2 * k)).alias("h1"),
-                F.col(name(2 * k + 1)).alias("h2"),
-            )
+            F.col(f"mh{2 * k}") * F.lit(1 << 31) + F.col(f"mh{2 * k + 1}")
             for k in range(_N_BANDS)
         ]
     )
-
-
-def _banded_pairs(sig) -> DataFrame:
-    """Banded candidate pairs over the signature table (2 hashes per
-    band, width from ``_MH_PARAMS``) — the ONE copy of the banding
-    predicate shared by the estimator audit, the from-layout
-    integrity check, and (via the same hash grouping) the
-    incremental/streaming ingest variants.
-    Output carries a_mh*/b_mh* for :func:`_sig_est`."""
-    a = sig.select(
-        F.col("doc_id").alias("a_id"),
-        *[F.col(f"mh{i}").alias(f"a_mh{i}") for i in range(_N_MH)],
+    return sig.select(
+        F.col("doc_id").alias("id"), *_MH_COLS, bands.alias("bands")
     )
-    b = sig.select(
-        F.col("doc_id").alias("b_id"),
-        *[F.col(f"mh{i}").alias(f"b_mh{i}") for i in range(_N_MH)],
-    )
-    out = None
-    for k in range(_N_BANDS):
-        band = a.join(
-            b,
-            (F.col(f"a_mh{2 * k}") == F.col(f"b_mh{2 * k}"))
-            & (F.col(f"a_mh{2 * k + 1}") == F.col(f"b_mh{2 * k + 1}"))
-            & (F.col("a_id") < F.col("b_id")),
-        )
-        out = band if out is None else out.unionAll(band)
-    return out.dropDuplicates(["a_id", "b_id"])
 
 
-def _sig_est(a_pfx: str = "a", b_pfx: str = "b"):
-    """Signature-parity Jaccard estimate (matching hashes / width) —
-    shared by every banded-candidate consumer."""
+def _sig_est():
+    """Signature-parity Jaccard estimate (matching hashes / width) of
+    a candidate pair's carried a_mh*/b_mh* columns."""
     return (
         sum(
-            F.when(F.col(f"{a_pfx}_mh{i}") == F.col(f"{b_pfx}_mh{i}"), 1)
+            F.when(F.col(f"a_mh{i}") == F.col(f"b_mh{i}"), 1)
             .otherwise(0)
             for i in range(_N_MH)
         )
@@ -382,56 +363,45 @@ def _sql_bands(a: str, b: str) -> str:
     )
 
 
+# Exact shingle-set Jaccard of a candidate pair's two `toks` arrays
+# (distinct shingles, so intersect/union sizes are set sizes).
+_SQL_EXACT_J = (
+    "len(list_intersect(a.toks, b.toks))"
+    " / CAST(len(list_distinct(a.toks || b.toks)) AS DOUBLE)"
+)
+
+
+def _exact_jaccard():
+    """Spark twin of ``_SQL_EXACT_J`` over a_toks/b_toks."""
+    return F.size(F.array_intersect("a_toks", "b_toks")) / F.size(
+        F.array_distinct(F.concat("a_toks", "b_toks"))
+    ).cast("double")
+
+
 def _mh_audit_oracle() -> str:
     est = _sql_sig_est("a", "b")
     return f"""
     WITH {mh_sig_cte_sql(with_toks=True)}
     SELECT a.doc_id AS a_id, b.doc_id AS b_id,
            round({est}, 6) AS est_jaccard,
-           round(len(list_intersect(a.toks, b.toks))
-                 / CAST(len(list_distinct(a.toks || b.toks)) AS DOUBLE), 6)
-             AS exact_jaccard,
-           round(abs({est}
-                 - len(list_intersect(a.toks, b.toks))
-                   / CAST(len(list_distinct(a.toks || b.toks)) AS DOUBLE)), 6)
-             AS abs_err
+           round({_SQL_EXACT_J}, 6) AS exact_jaccard,
+           round(abs({est} - {_SQL_EXACT_J}), 6) AS abs_err
     FROM sig a JOIN sig b
       ON a.doc_id < b.doc_id
      AND ({_sql_bands('a', 'b')})
     """
 
 
-@query("q_minhash_audit", oracle=_mh_audit_oracle())
-def q_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Estimator audit for the MinHash dedup tier: candidate pairs
-    come from 2×2 banding over exact-parity MinHash signatures of
-    word-TRIGRAM shingle sets (two equi-joins + union, never an
-    all-pairs scan), and each candidate reports the signature-
-    estimated Jaccard next to the exact shingle-set Jaccard with the
-    absolute error — the measurement that justifies trusting
-    [[q_dedup_minhash]] at scales where exact Jaccard is
-    unaffordable. Shingles, not unigram tokens, are load-bearing: on
-    a small vocabulary most documents share the hash-minimizing WORD,
-    so unigram signatures collapse into one degenerate band bucket
-    (measured: 3135 of 5000 docs in one bucket at sf0.1 → 10M pairs);
-    the ~900+-value shingle space keeps buckets at ~10 docs and the
-    candidate set in the hundreds — the same reason the dedup tier
-    shingles before hashing. Both band joins shuffle on the band key;
-    at 100 TB the signatures are a persisted table and this audit
-    runs on a sample partition."""
+def _candidates_with_toks(
+    spark: SparkSession, sf_dir: str, sig: DataFrame
+) -> DataFrame:
+    """Banded candidate pairs over a (doc_id, mh*) signature frame,
+    carrying a_mh*/b_mh* for :func:`_sig_est` and each side's
+    lowercased word-trigram set as a_toks/b_toks. Only the docs that
+    appear in a candidate pair are re-shingled — verify candidates
+    only."""
     t = load_tables(spark, sf_dir)
-    from lakehouse_app_spark.operators.dedup import spread, word_shingles
-
-    # Candidates come from the STORED signature layout (16 bytes/doc,
-    # [[q_dedup_from_layout]]'s table — write-path integrity is
-    # hash-proven there), so the audit never re-hashes the corpus.
-    # Only the exact-Jaccard arm touches text, and only for the docs
-    # that actually appear in a candidate pair — the repo's own
-    # verify-candidates-only discipline applied to the audit itself
-    # (previously it re-shingled and re-hashed all documents: ~5 s of
-    # char-fold per run vs ~0.1% of docs actually audited).
-    sig = minhash_sig_table(spark, sf_dir)
-    pairs = scoped_persist(_banded_pairs(sig))
+    pairs = scoped_persist(lsh_candidates(_banded(sig), carry=_MH_COLS))
     cand_ids = (
         pairs.select(F.col("a_id").alias("doc_id"))
         .unionAll(pairs.select(F.col("b_id").alias("doc_id")))
@@ -445,7 +415,7 @@ def q_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.lower(F.col("text")).alias("text"))
         .select("doc_id", word_shingles(3).alias("toks"))
     )
-    pairs = pairs.join(
+    return pairs.join(
         cand_toks.select(
             F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks")
         ),
@@ -456,10 +426,34 @@ def q_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "b_id",
     )
-    est = _sig_est()
-    exact = F.size(F.array_intersect("a_toks", "b_toks")) / F.size(
-        F.array_distinct(F.concat("a_toks", "b_toks"))
-    ).cast("double")
+
+
+@query("q_minhash_audit", oracle=_mh_audit_oracle())
+def q_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Estimator audit for the MinHash dedup tier: candidate pairs
+    come from 2×2 banding over exact-parity MinHash signatures of
+    word-TRIGRAM shingle sets (one band equi-join, never an
+    all-pairs scan), and each candidate reports the signature-
+    estimated Jaccard next to the exact shingle-set Jaccard with the
+    absolute error — the measurement that justifies trusting
+    [[q_dedup_minhash]] at scales where exact Jaccard is
+    unaffordable. Shingles, not unigram tokens, are load-bearing: on
+    a small vocabulary most documents share the hash-minimizing WORD,
+    so unigram signatures collapse into one degenerate band bucket
+    (measured: 3135 of 5000 docs in one bucket at sf0.1 → 10M pairs);
+    the ~900+-value shingle space keeps buckets at ~10 docs and the
+    candidate set in the hundreds — the same reason the dedup tier
+    shingles before hashing. The band join shuffles on the band key;
+    at 100 TB the signatures are a persisted table and this audit
+    runs on a sample partition.
+
+    Candidates come from the STORED signature layout (16 bytes/doc,
+    [[q_dedup_from_layout]]'s table — write-path integrity is
+    hash-proven there), so the audit never re-hashes the corpus; only
+    the exact-Jaccard arm touches text, and only for the docs in a
+    candidate pair."""
+    pairs = _candidates_with_toks(spark, sf_dir, minhash_sig_table(spark, sf_dir))
+    est, exact = _sig_est(), _exact_jaccard()
     return pairs.select(
         "a_id",
         "b_id",
@@ -469,18 +463,67 @@ def q_minhash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+NEARDUP_MAX_DIST = 0.4
+
+
+def _neardup_lsh_oracle() -> str:
+    return f"""
+    WITH {REPS_CTES},
+    {mh_sig_cte_sql(with_toks=True)},
+    rsig AS (SELECT s.* FROM sig s JOIN reps r ON s.doc_id = r.doc_id),
+    cand AS (
+      SELECT a.doc_id AS a_id, b.doc_id AS b_id, 1 - {_SQL_EXACT_J} AS d
+      FROM rsig a JOIN rsig b
+        ON a.doc_id < b.doc_id
+       AND ({_sql_bands('a', 'b')})
+    )
+    SELECT a_id, b_id, round(d, 6) AS jaccard_dist
+    FROM cand WHERE d <= {NEARDUP_MAX_DIST}
+    """
+
+
+@query("q_neardup_lsh", oracle=_neardup_lsh_oracle())
+def q_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH near-dup join at Jaccard distance ≤
+    NEARDUP_MAX_DIST (0.4) over the exact-dedup representatives
+    (``dedup.rep_docs``): banded candidates from the portable stored
+    signature layout (:func:`minhash_sig_table`), then the exact
+    distance of the lowercased word-trigram sets, candidates only —
+    MLlib's approxSimilarityJoin contract without its library-private
+    hash tables, so DuckDB replays it exactly (same signatures, same
+    bands, same distance). Trigram shingles for the same
+    bucket-degeneracy reason as [[q_dedup_minhash]]."""
+    # the representatives that have a trigram are exactly the keys of
+    # the mh16_sig layout (built over rep_docs): no per-query pass over
+    # the corpus text (~0.4 s a call at sf0.1 on 4 cores)
+    reps = minhash16_sig_table(spark, sf_dir).select("doc_id")
+    sig = minhash_sig_table(spark, sf_dir).join(reps, "doc_id", "left_semi")
+    dist = F.lit(1) - _exact_jaccard()
+    return (
+        _candidates_with_toks(spark, sf_dir, sig)
+        .select("a_id", "b_id", dist.alias("d"))
+        .where(F.col("d") <= NEARDUP_MAX_DIST)
+        .select("a_id", "b_id", F.round("d", 6).alias("jaccard_dist"))
+    )
+
+
 # --------------------------------------- dedup from the stored layout
 
 
-def _with_mh_sig(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, mh0..mh3) from an (id, toks) frame — the exact-parity
-    MinHash signature ([[q_minhash_audit]] recipe): ONE char-fold
-    fingerprint pass over the shingles into an `fps` array, then 4
-    seeded affine hashes as cheap `array_min`s. Two projections so the
-    fold is code-generated once, not once per hash function (r11
-    verdict: the inlined form compiled a ~6 s codegen unit)."""
-    return df.select(id_col, _fps_col()).select(
-        id_col, *_mh_cols_from_fps()
+def _with_mh_sig(docs: DataFrame) -> DataFrame:
+    """(doc_id, mh0..mh3) from a (doc_id, text) frame — the
+    exact-parity MinHash signature ([[q_minhash_audit]] recipe) of the
+    lowercased word-trigram set; docs with no trigram get no row. ONE
+    char-fold fingerprint pass over the shingles into an `fps` array,
+    then 4 seeded affine hashes as cheap `array_min`s. Two projections
+    so the fold is code-generated once, not once per hash function
+    (r11 verdict: the inlined form compiled a ~6 s codegen unit)."""
+    return (
+        docs.select("doc_id", F.lower(F.col("text")).alias("text"))
+        .select("doc_id", word_shingles(3).alias("toks"))
+        .where(F.size("toks") > 0)
+        .select("doc_id", _fps_col())
+        .select("doc_id", *_mh_cols_from_fps())
     )
 
 
@@ -491,47 +534,39 @@ def minhash_sig_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest-time half of MinHash dedup (16 bytes of signature per
     document; at 100 TB this column travels with the table and no
     dedup run ever re-shingles the text)."""
-    from lakehouse_app_spark.operators.dedup import spread, word_shingles
 
     def build() -> DataFrame:
         t = load_tables(spark, sf_dir)
-        return _with_mh_sig(
-            spread(t.documents)
-            .select("doc_id", F.lower(F.col("text")).alias("text"))
-            .select("doc_id", word_shingles(3).alias("toks"))
-            .where(F.size("toks") > 0)
-        )
+        return _with_mh_sig(spread(t.documents))
 
     return derived_table(spark, "mh_sig", sf_dir, build)
 
 
 def _from_layout_oracle() -> str:
-    eq = " + ".join(
-        f"(CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END)" for i in range(4)
-    )
     return f"""
     WITH {mh_sig_cte_sql()}
     SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-           round(({eq}) / 4.0, 6) AS est_jaccard
+           round({_sql_sig_est('a', 'b')}, 6) AS est_jaccard
     FROM sig a JOIN sig b
       ON a.doc_id < b.doc_id
-     AND ((a.mh0 = b.mh0 AND a.mh1 = b.mh1)
-          OR (a.mh2 = b.mh2 AND a.mh3 = b.mh3))
+     AND ({_sql_bands('a', 'b')})
     """
 
 
 @query("q_dedup_from_layout", oracle=_from_layout_oracle())
 def q_dedup_from_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash candidate generation as PURE EQUI-JOINS on the stored
+    """MinHash candidate generation as a PURE EQUI-JOIN on the stored
     signature layout — the SCALE.md ingest-time story exercised
     end-to-end, and [[q_minhash_audit]]'s cheap twin: the audit
-    re-shingles and re-hashes the corpus every run; this query reads
-    16 bytes/doc of stored signature and performs two band
-    equi-joins, nothing else. The DuckDB oracle recomputes the
+    re-shingles the candidate docs every run; this query reads
+    16 bytes/doc of stored signature and performs one band
+    equi-join, nothing else. The DuckDB oracle recomputes the
     signatures from text — the hash-match proves the STORED columns
     are bit-identical to a from-scratch recompute (write-path
     integrity), while the Spark plan never touches document text."""
-    pairs = _banded_pairs(minhash_sig_table(spark, sf_dir))
+    pairs = lsh_candidates(
+        _banded(minhash_sig_table(spark, sf_dir)), carry=_MH_COLS
+    )
     return pairs.select(
         "a_id", "b_id", F.round(_sig_est(), 6).alias("est_jaccard")
     )
@@ -656,59 +691,29 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     touching corpus text. Corpus signatures come from the stored
     :func:`minhash_sig_table` layout (built once at ingest, durable
     across processes since round 6); only the new batch pays
-    shingling+hashing, and the band equi-joins shuffle 16-byte
+    shingling+hashing, and the band equi-join shuffles 16-byte
     signatures, never documents. Output: (new_id, corpus_id,
     estimated Jaccard) for every banded candidate — the quarantine
     list an ingest pipeline reviews before committing the batch.
     Exact oracle: the signature arithmetic is the portable affine
     recipe of [[q_minhash_audit]], so DuckDB recomputes both sides
     from raw text and must agree hash-for-hash."""
-    from lakehouse_app_spark.operators.dedup import spread, word_shingles
-
     sig = minhash_sig_table(spark, sf_dir)
-    corpus = sig.where(F.col("doc_id") % 10 != 7).select(
-        F.col("doc_id").alias("corpus_id"),
-        *[F.col(f"mh{i}").alias(f"c_mh{i}") for i in range(_N_MH)],
-    )
+    corpus = sig.where(F.col("doc_id") % 10 != 7)
     # the new batch is signed FRESH from text — at ingest time the
     # batch has no stored layout yet (that write happens on commit)
     t = load_tables(spark, sf_dir)
-    new = _with_mh_sig(
-        spread(t.documents.where(F.col("doc_id") % 10 == 7))
-        .select("doc_id", F.lower(F.col("text")).alias("text"))
-        .select("doc_id", word_shingles(3).alias("toks"))
-        .where(F.size("toks") > 0)
-        .select(F.col("doc_id").alias("new_id"), "toks"),
-        id_col="new_id",
-    ).withColumnsRenamed({f"mh{i}": f"n_mh{i}" for i in range(_N_MH)})
-    # single-scan posexplode banding on BOTH sides (band k =
-    # (mh{2k}, mh{2k+1}) via the shared _band_structs layout) → one
-    # equi-join on the band key; a per-band join pair would re-sign
-    # the new batch per band
-    def bucketed(df, pfx, idcol):
-        arr = _band_structs(lambda i: f"{pfx}_mh{i}")
-        return df.select(
-            idcol,
-            *[f"{pfx}_mh{i}" for i in range(_N_MH)],
-            F.posexplode(arr).alias("band", "b"),
-        ).select(
-            idcol,
-            *[f"{pfx}_mh{i}" for i in range(_N_MH)],
-            "band",
-            F.col("b.h1").alias(f"{pfx}_h1"),
-            F.col("b.h2").alias(f"{pfx}_h2"),
-        )
+    new = _with_mh_sig(spread(t.documents.where(F.col("doc_id") % 10 == 7)))
+    return _incremental_pairs(new, corpus)
 
-    nb = bucketed(new, "n", "new_id")
-    cb = bucketed(corpus, "c", "corpus_id")
-    est = _sig_est("n", "c")
-    return (
-        nb.join(
-            cb,
-            (nb["band"] == cb["band"])
-            & (F.col("n_h1") == F.col("c_h1"))
-            & (F.col("n_h2") == F.col("c_h2")),
-        )
-        .dropDuplicates(["new_id", "corpus_id"])
-        .select("new_id", "corpus_id", F.round(est, 6).alias("est_jaccard"))
+
+def _incremental_pairs(new: DataFrame, corpus: DataFrame) -> DataFrame:
+    """(new_id, corpus_id, est_jaccard) for every banded candidate
+    between two (doc_id, mh*) signature frames — shared with the
+    streaming twin, whose ``corpus`` arrives broadcast-hinted."""
+    pairs = lsh_candidates(_banded(new), _banded(corpus), carry=_MH_COLS)
+    return pairs.select(
+        F.col("a_id").alias("new_id"),
+        F.col("b_id").alias("corpus_id"),
+        F.round(_sig_est(), 6).alias("est_jaccard"),
     )

@@ -1,4 +1,4 @@
-"""Sink round-trip as a declared (rows-only) query.
+"""Sink round-trip as a declared query.
 
 SURVEY.md §2.2 'Scans/sources/sinks': parquet sink with read-back
 verification. Writes the pricing-summary result partitioned by its

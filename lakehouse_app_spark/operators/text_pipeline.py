@@ -527,11 +527,8 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _novelty_oracle() -> str:
-    from lakehouse_app_spark.operators.corpus_prep import _FP_DUCK, _MH_P
-    from lakehouse_app_spark.operators.dedup import _SH_PARAMS
+    from lakehouse_app_spark.operators.dedup import _sql_token_hash
 
-    (a1, b1), (a2, b2) = _SH_PARAMS
-    fp = _FP_DUCK.format(w="w")
     return f"""
     WITH toks AS (
       SELECT doc_id,
@@ -542,9 +539,7 @@ def _novelty_oracle() -> str:
       WHERE len(tk) >= 3
     ),
     sh AS (
-      SELECT doc_id,
-             (({a1} * ({fp}) + {b1}) % {_MH_P}) * {1 << 31}
-               + (({a2} * ({fp}) + {b2}) % {_MH_P}) AS th
+      SELECT doc_id, {_sql_token_hash("w")} AS th
       FROM (SELECT doc_id, unnest(toks) AS w FROM toks)
     ),
     firsts AS (SELECT th, min(doc_id) AS fd FROM sh GROUP BY th)

@@ -1,8 +1,8 @@
 """Query registry: the engine's declared, oracle-checked surface.
 
 Each operator from SURVEY.md §2.2 registers a named query builder
-(callable ``(spark, sf_dir) -> DataFrame``) and, when DuckDB can
-reproduce it bit-for-bit, the equivalent ANSI SQL oracle string.
+(callable ``(spark, sf_dir) -> DataFrame``) and the DuckDB SQL oracle
+that reproduces its result exactly.
 ``__spark_entry__.py`` exposes these to the driver.
 """
 
@@ -15,8 +15,8 @@ QUERIES: dict[str, Callable[[Any, str], Any]] = {}
 ORACLES: dict[str, str] = {}
 
 
-def query(name: str, oracle: str | None = None):
-    """Register a query builder; ``oracle=None`` → rows-only check.
+def query(name: str, oracle: str):
+    """Register a query builder with its exact DuckDB oracle.
 
     The registered callable goes through the prepared-plan cache
     (runtime_cache.prepared_plan): pure plan builders are analyzed
@@ -34,8 +34,7 @@ def query(name: str, oracle: str | None = None):
             return prepared_plan(name, fn, spark, sf_dir)
 
         QUERIES[name] = prepared
-        if oracle is not None:
-            ORACLES[name] = " ".join(oracle.split())
+        ORACLES[name] = " ".join(oracle.split())
         fn.query_name = name
         prepared.query_name = name
         prepared.builder = fn

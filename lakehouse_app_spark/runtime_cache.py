@@ -47,12 +47,13 @@ _SCOPED: list[DataFrame] = []
 # first insert wins, and a losing or superseded value goes to its
 # on_drop. Each insert sweeps entries of a stopped SparkContext, then
 # evicts least-recently-used entries past MEMO_MAX. A full ``drive``
-# pass at sf0.01 peaks at 324 entries, so it evicts nothing; a
-# read_snapshot handle retains ~0.12 MB of JVM heap, so a loop reading
-# fresh lineage clones (q_vacuum, q_merge_multi) pins at most ~65 MB
-# at this bound (measured at sf0.1). release_caches() does NOT
-# clear the registry: it runs after every served request, and the
-# plan memo is what makes a repeated request cheap.
+# pass at sf0.01 peaks at 324 entries, so it evicts nothing. A
+# read_snapshot handle retains ~0.12 MB of JVM heap; the handles of
+# lineage clones inside a scratch tree (q_vacuum, q_merge_multi) leave
+# the registry when the tree is reaped, so clone churn no longer
+# fills it. release_caches() does NOT otherwise clear the registry:
+# it runs after every served request, and the plan memo is what makes
+# a repeated request cheap.
 # ---------------------------------------------------------------------------
 
 MEMO_MAX = 512
@@ -220,8 +221,6 @@ def release_caches() -> int:
     """Unpersist every scoped cache registered since the last call —
     and reap retired scratch directories (see scratch_commit_dir);
     returns how many caches were released."""
-    import shutil
-
     n = len(_SCOPED)
     for df in _SCOPED:
         try:
@@ -231,9 +230,29 @@ def release_caches() -> int:
     _SCOPED.clear()
     with _SCRATCH_LOCK:
         retired, _RETIRED_SCRATCH[:] = list(_RETIRED_SCRATCH), []
-    for _, d in retired:
-        shutil.rmtree(d, ignore_errors=True)
+    _reap([d for _, d in retired])
     return n
+
+
+def _reap(trees: list[str]) -> None:
+    """Remove retired scratch trees, then drop the read_snapshot
+    handles of lineages inside them: those can never hit again (a new
+    clone gets a new path), and each pins ~0.12 MB of JVM heap."""
+    import os
+    import shutil
+
+    if not trees:
+        return
+    roots = tuple(os.path.join(os.path.realpath(d), "") for d in trees)
+    for d in trees:
+        shutil.rmtree(d, ignore_errors=True)
+    with _MEMO_LOCK:
+        dead = [
+            k for k in _MEMO
+            if k[0] == "sinks.read_handles" and (k[2][0] + "/").startswith(roots)
+        ]
+        dropped = [_MEMO.pop(k) for k in dead]
+    _drop(dropped)
 
 
 _SCRATCH_LOCK = threading.Lock()
@@ -263,7 +282,6 @@ def scratch_commit_dir(prefix: str) -> str:
     n_prefixes) dead trees instead of growing without limit on
     tmpfs (advice r10)."""
     import os
-    import shutil
     import tempfile
 
     root = "/dev/shm" if os.path.isdir("/dev/shm") else None
@@ -285,8 +303,7 @@ def scratch_commit_dir(prefix: str) -> str:
             _RETIRED_SCRATCH[:] = [
                 e for i, e in enumerate(_RETIRED_SCRATCH) if i in keep
             ]
-    for rd in reap:  # rmtree outside the lock — it can be slow
-        shutil.rmtree(rd, ignore_errors=True)
+    _reap(reap)  # outside the lock — rmtree can be slow
     return d
 
 

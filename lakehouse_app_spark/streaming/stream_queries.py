@@ -1216,75 +1216,18 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded replay must produce exactly the batch result, so it
     shares that query's oracle SQL (registered below via the
     registry, keeping the recipe in one place)."""
-    from lakehouse_app_spark.operators.dedup import word_shingles
     from lakehouse_app_spark.operators.dedup_ext import (
-        _N_MH,
-        _band_structs,
-        _sig_est,
+        _incremental_pairs,
         _with_mh_sig,
         minhash_sig_table,
     )
 
     ensure_runtime_confs(spark)
-    n_mh = _N_MH
     staged = _staged_new_docs_dir(spark, sf_dir)
     schema = spark.read.parquet(staged).schema
-
-    def bucket_arr(pfx: str):
-        # shared band layout (review r6: this used to hardcode
-        # mh0..mh3 and would silently break on a width change)
-        return _band_structs(lambda i: f"{pfx}mh{i}")
-
-    new_sig = _with_mh_sig(
-        spark.readStream.schema(schema)
-        .parquet(staged)
-        .select("doc_id", F.lower(F.col("text")).alias("text"))
-        .select("doc_id", word_shingles(3).alias("toks"))
-        .where(F.size("toks") > 0)
-        .select(F.col("doc_id").alias("new_id"), "toks"),
-        id_col="new_id",
-    ).withColumnsRenamed({f"mh{i}": f"n_mh{i}" for i in range(n_mh)})
-    nb = new_sig.select(
-        "new_id",
-        *[f"n_mh{i}" for i in range(n_mh)],
-        F.posexplode(bucket_arr("n_")).alias("band", "b"),
-    ).select(
-        "new_id",
-        *[f"n_mh{i}" for i in range(n_mh)],
-        "band",
-        F.col("b.h1").alias("n_h1"),
-        F.col("b.h2").alias("n_h2"),
-    )
-
-    corpus = minhash_sig_table(spark, sf_dir).where(
-        F.col("doc_id") % 10 != 7
-    ).select(
-        F.col("doc_id").alias("corpus_id"),
-        *[F.col(f"mh{i}").alias(f"c_mh{i}") for i in range(n_mh)],
-    )
-    cb = corpus.select(
-        "corpus_id",
-        *[f"c_mh{i}" for i in range(n_mh)],
-        F.posexplode(bucket_arr("c_")).alias("band", "b"),
-    ).select(
-        "corpus_id",
-        *[f"c_mh{i}" for i in range(n_mh)],
-        F.col("band").alias("c_band"),
-        F.col("b.h1").alias("c_h1"),
-        F.col("b.h2").alias("c_h2"),
-    )
-
-    est = _sig_est("n", "c")
-    joined = (
-        nb.join(
-            F.broadcast(cb),
-            (F.col("band") == F.col("c_band"))
-            & (F.col("n_h1") == F.col("c_h1"))
-            & (F.col("n_h2") == F.col("c_h2")),
-        )
-        .dropDuplicates(["new_id", "corpus_id"])
-        .select("new_id", "corpus_id", F.round(est, 6).alias("est_jaccard"))
-    )
+    new_sig = _with_mh_sig(spark.readStream.schema(schema).parquet(staged))
+    corpus = minhash_sig_table(spark, sf_dir).where(F.col("doc_id") % 10 != 7)
+    joined = _incremental_pairs(new_sig, F.broadcast(corpus))
     return run_to_memory(joined, "stream_inc_dedup", output_mode="append", final_no_data_batch=False)
 
 

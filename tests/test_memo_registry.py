@@ -111,6 +111,33 @@ def test_restaging_after_regeneration_retires_the_old_dir(spark, sf_dir, tmp_pat
     assert not os.path.exists(old) and os.path.isdir(new)  # ... until the drain
 
 
+def test_reaped_clone_trees_leave_no_read_handles(spark, sf_dir):
+    """read_snapshot handles of lineages inside a scratch tree leave
+    the registry when release_caches() reaps the tree; the live
+    tree's handle stays."""
+    from lakehouse_app_spark.sources.sinks import read_snapshot, write_snapshot
+    from lakehouse_app_spark.sources.tables import load_tables
+
+    small = load_tables(spark, sf_dir).nation.limit(5)
+    trees = []
+    for _ in range(3):
+        trees.append(os.path.realpath(rc.scratch_commit_dir("rh_clone_")))
+        path = os.path.join(trees[-1], "tbl")
+        write_snapshot(small, path, "clone")
+        assert read_snapshot(spark, path).count() == 5
+        rc.release_caches()  # reaps the tree the new clone superseded
+
+    def handles_under(tree):
+        return [
+            k for k in rc._MEMO
+            if k[0] == "sinks.read_handles" and k[2][0].startswith(tree + "/")
+        ]
+
+    assert not any(os.path.exists(t) for t in trees[:-1])
+    assert [handles_under(t) for t in trees[:-1]] == [[], []]
+    assert len(handles_under(trees[-1])) == 1
+
+
 # Module-level containers and locks that are NOT memos: the registry's
 # own state, query-scoped persists, the scratch-dir retirement state,
 # the declared query surface, and the snapshot-refs write lock.

@@ -5,6 +5,7 @@ refactor that silently loses pushdown/broadcast/top-k rewriting fails
 here long before it costs a cluster-hour.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_app_spark import QUERIES
@@ -274,12 +275,27 @@ def test_chunk_dedup_chunks_before_shuffle(spark, sf_dir):
     assert gen < first_hash_exchange, plan
 
 
-def test_minhash_audit_bands_are_equi_joins(spark, sf_dir):
-    """LSH banding must produce two equi-joins on signature bands —
-    an all-pairs nested loop would defeat the entire design."""
-    plan = formatted_plan(QUERIES["q_minhash_audit"](spark, sf_dir))
+LSH_KEYS = [
+    "q_dedup_minhash", "q_dedup_simhash", "q_minhash_audit",
+    "q_dedup_from_layout", "q_dedup_incremental", "q_neardup_lsh",
+    "q_ann_hyperplane", "q_ann_brp_lsh", "q_stream_incremental_dedup",
+]
+
+
+@pytest.mark.parametrize("key", LSH_KEYS)
+def test_lsh_consumers_are_equi_joins(spark, sf_dir, monkeypatch, key):
+    """Every caller of dedup.lsh_candidates pairs its band buckets
+    with equi-joins: an all-pairs nested loop or cartesian product
+    anywhere in the plan would defeat the design. The stream twin is
+    checked on its streaming plan, before the replay runs it."""
+    from lakehouse_app_spark.streaming import stream_queries
+
+    monkeypatch.setattr(stream_queries, "run_to_memory", lambda df, *a, **k: df)
+    plan = formatted_plan(QUERIES[key].builder(spark, sf_dir))
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
+    if key == "q_stream_incremental_dedup":  # the static side stays broadcast
+        assert "BroadcastHashJoin" in plan, plan
 
 
 def test_bloom_prune_filter_is_broadcast(spark, sf_dir):
