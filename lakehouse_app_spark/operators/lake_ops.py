@@ -1199,7 +1199,7 @@ def q_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     story end-to-end: lineitem is stored range-layouted on
     ``l_orderkey`` (16 disjoint files, a build-once
     :func:`~lakehouse_app_spark.sources.layout.derived_table`), a
-    ``_stats.json`` manifest records each file's (min, max), and the
+    ``_stats_nd.json`` manifest records each file's (min, max), and the
     read path opens ONLY files whose range intersects the predicate
     — at 100 TB a narrow key range touches O(selectivity) of the
     files before Spark lists a single row group. The row-level
@@ -1213,8 +1213,8 @@ def q_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from lakehouse_app_spark.sources.layout import derived_table, layout_path
     from lakehouse_app_spark.sources.sinks import (
-        read_stats_pruned,
-        write_stats_manifest,
+        read_stats_pruned_nd,
+        write_stats_manifest_nd,
     )
 
     t = load_tables(spark, sf_dir)
@@ -1225,9 +1225,11 @@ def q_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: t.lineitem.repartitionByRange(16, "l_orderkey"),
     )
     path = layout_path("li_range16", sf_dir)
-    if not os.path.exists(os.path.join(path, "_stats.json")):
-        write_stats_manifest(spark, path, "l_orderkey")
-    pruned = read_stats_pruned(spark, path, _SP_LO, _SP_HI)
+    if not os.path.exists(os.path.join(path, "_stats_nd.json")):
+        write_stats_manifest_nd(spark, path, ["l_orderkey"])
+    pruned = read_stats_pruned_nd(
+        spark, path, bounds={"l_orderkey": (_SP_LO, _SP_HI)}
+    )
     return (
         pruned.where(F.col("l_orderkey").between(_SP_LO, _SP_HI))
         .groupBy("l_returnflag")

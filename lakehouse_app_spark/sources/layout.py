@@ -25,11 +25,15 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
+import time
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_app_spark.runtime_cache import NamespaceKeys, lookup, memo
+from lakehouse_app_spark.sources.sinks import _committed_versions, write_snapshot
 
 # Durable catalog root: env-overridable; defaults to the repo's
 # gitignored spark-warehouse/ so layouts survive process restarts.
@@ -88,17 +92,34 @@ def _table_dir(name: str, sf_dir: str) -> str:
 
 def _committed_version(tdir: str) -> int | None:
     """Latest manifest-committed version under ``tdir`` (None if no
-    committed snapshot exists). Mirrors sinks.read_snapshot: data
+    committed snapshot exists): sinks.py's snapshot log, where data
     without a manifest is an invisible half-commit."""
+    versions = _committed_versions(tdir)
+    return versions[-1] if versions else None
+
+
+def _build_once(tdir: str, sf_dir: str, commit: Callable[[], object]) -> int:
+    """Run ``commit`` to build ``tdir``'s first version, then record
+    the corpus marker; returns the latest committed version. If the
+    build fails, a concurrent builder may be mid-commit: poll briefly
+    for its manifest before giving up."""
     try:
-        versions = [
-            int(f[2:-5])
-            for f in os.listdir(tdir)
-            if f.startswith("_v") and f.endswith(".json")
-        ]
-    except FileNotFoundError:
-        return None
-    return max(versions) if versions else None
+        commit()
+    except Exception:
+        for _ in range(60):
+            if _committed_version(tdir) is not None:
+                break
+            time.sleep(0.5)
+        else:
+            raise
+    # corpus marker: records which source directory this fingerprint
+    # belongs to, so gc_layouts never sweeps a same-basename sibling
+    # corpus sharing the catalog (review r6)
+    marker = os.path.join(os.path.dirname(tdir), "_corpus.json")
+    if not os.path.exists(marker):
+        with open(marker, "w") as fh:
+            fh.write(json.dumps({"sf_dir": os.path.abspath(sf_dir)}))
+    return _committed_version(tdir)
 
 
 def derived_table(
@@ -112,18 +133,24 @@ def derived_table(
     committing it first if no process ever has — the durable
     stand-in for an ingest-time pipeline stage.
 
-    Commit protocol is manifest-last (data lands in ``v=<n>/``, the
-    ``_v<n>.json`` manifest is written only after the write
-    succeeds), so a crashed or concurrent builder can leave garbage
-    data files but never a readable half-commit; a concurrent loser
-    whose ``v=<n>`` write collides simply re-reads the winner's
-    commit."""
+    The build is one [[sinks.write_snapshot]] commit into the table
+    dir: the data is staged privately, ``v=<n>/`` is claimed by an
+    atomic rename and the ``_v<n>.json`` manifest is published last,
+    put-if-absent. A crashed builder leaves invisible garbage, never
+    a readable half-commit; racing builders each land their own
+    complete version, and a builder whose build fails waits for a
+    concurrent winner's commit."""
     tdir = _table_dir(name, sf_dir)
+
+    def commit() -> int:
+        return write_snapshot(
+            build(), tdir, note="derived-table layout", partition_by=partition_by
+        )
 
     def committed() -> str:
         ver = _committed_version(tdir)
         if ver is None:
-            ver = _commit_build(tdir, sf_dir, build, partition_by)
+            ver = _build_once(tdir, sf_dir, commit)
         return os.path.join(tdir, f"v={ver}")
 
     # the handle is the ANALYZED frame: a committed layout is immutable
@@ -136,87 +163,6 @@ def derived_table(
         lambda: spark.read.parquet(memo("layout.built", tdir, committed)),
         spark=spark,
     )
-
-
-def _commit_build(
-    tdir: str,
-    sf_dir: str,
-    build: Callable[[], DataFrame],
-    partition_by: list[str] | None,
-) -> int:
-    os.makedirs(tdir, exist_ok=True)
-    # Two-phase commit with an ATOMIC claim (review r6: the old
-    # scheme's list-then-errorifexists was check-then-act — two
-    # concurrent builders could interleave part files into the same
-    # v=N in the race window). Phase 1 writes into a uniquely-named
-    # staging dir (no coordination needed); phase 2 claims v=N via
-    # os.rename, which the filesystem makes atomic: exactly one
-    # process lands each version, a collided claimant retries under
-    # the next free slot with its already-built data, and readers
-    # still trust only manifest-last commits.
-    import uuid as _uuid
-
-    staging = os.path.join(
-        tdir, f"_staging-{os.getpid()}-{_uuid.uuid4().hex[:8]}"
-    )
-    try:
-        w = build().write.mode("errorifexists").format("parquet")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(staging)
-    except Exception:
-        import shutil
-        import time
-
-        shutil.rmtree(staging, ignore_errors=True)
-        # the build itself failed — if a concurrent winner is mid-
-        # commit, poll briefly for its manifest before giving up
-        for _ in range(60):
-            committed = _committed_version(tdir)
-            if committed is not None:
-                return committed
-            time.sleep(0.5)
-        raise
-    version = None
-    for _ in range(1000):  # bound: pathological claim storms error out
-        used = [
-            int(f.split("=", 1)[1])
-            for f in os.listdir(tdir)
-            if f.startswith("v=") and f.split("=", 1)[1].isdigit()
-        ] + [
-            int(f[2:-5])
-            for f in os.listdir(tdir)
-            if f.startswith("_v") and f.endswith(".json")
-        ]
-        candidate = max(used, default=-1) + 1
-        data_dir = os.path.join(tdir, f"v={candidate}")
-        try:
-            os.rename(staging, data_dir)
-            version = candidate
-            break
-        except OSError:
-            if not os.path.exists(data_dir):
-                raise  # rename failed for a non-race reason
-            continue  # lost the slot; retry under the next version
-    if version is None:
-        raise RuntimeError(f"could not claim a layout version under {tdir}")
-    manifest = {
-        "version": version,
-        "note": "derived-table layout",
-        "rows": None,
-        "format": "parquet",
-        "partition_by": partition_by or [],
-    }
-    with open(os.path.join(tdir, f"_v{version}.json"), "w") as fh:
-        fh.write(json.dumps(manifest))
-    # corpus marker: records which source directory this fingerprint
-    # belongs to, so gc_layouts never sweeps a same-basename sibling
-    # corpus sharing the catalog (review r6)
-    marker = os.path.join(os.path.dirname(tdir), "_corpus.json")
-    if not os.path.exists(marker):
-        with open(marker, "w") as fh:
-            fh.write(json.dumps({"sf_dir": os.path.abspath(sf_dir)}))
-    return version
 
 
 def corpus_scalar(spark: SparkSession, sf_dir: str, tag: str, compute):
@@ -259,15 +205,11 @@ def lineage_table(
     certifies exactly that), a fresh process reuses the durable
     commit. Returns the lineage root path (a sinks.py snapshot table
     dir usable with read_snapshot/change_feed/snapshot_history)."""
-    import shutil as _shutil
-    import time as _time
-    import uuid as _uuid
-
     tdir = _table_dir(name, sf_dir)
-    if _committed_version(tdir) is None:
-        parent = os.path.dirname(tdir)
-        os.makedirs(parent, exist_ok=True)
-        staging = f"{tdir}-staging-{os.getpid()}-{_uuid.uuid4().hex[:8]}"
+
+    def commit() -> None:
+        os.makedirs(os.path.dirname(tdir), exist_ok=True)
+        staging = f"{tdir}-staging-{os.getpid()}-{uuid.uuid4().hex[:8]}"
         try:
             build(staging)
             try:
@@ -276,22 +218,11 @@ def lineage_table(
                 # lost the claim race: a complete winner must exist
                 if _committed_version(tdir) is None:
                     raise
-                _shutil.rmtree(staging, ignore_errors=True)
-        except Exception:
-            _shutil.rmtree(staging, ignore_errors=True)
-            # the build itself failed — poll briefly for a concurrent
-            # winner mid-commit before giving up (same protocol as
-            # _commit_build)
-            for _ in range(60):
-                if _committed_version(tdir) is not None:
-                    break
-                _time.sleep(0.5)
-            else:
-                raise
-        marker = os.path.join(parent, "_corpus.json")
-        if not os.path.exists(marker):
-            with open(marker, "w") as fh:
-                fh.write(json.dumps({"sf_dir": os.path.abspath(sf_dir)}))
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+
+    if _committed_version(tdir) is None:
+        _build_once(tdir, sf_dir, commit)
     return tdir
 
 
@@ -317,8 +248,6 @@ def gc_layouts(sf_dir: str) -> list[str]:
     path — a same-basename sibling corpus sharing the catalog is
     never touched (pre-marker dirs are likewise left alone).
     Returns the removed directory paths."""
-    import shutil
-
     current = corpus_fingerprint(sf_dir)
     me = os.path.abspath(sf_dir)
     base = layout_base()

@@ -10,7 +10,19 @@ shuffle entirely.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import tempfile
+import threading
+import time
+import uuid
+from collections.abc import Callable
+from contextlib import suppress
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from lakehouse_app_spark.runtime_cache import memo
 
@@ -46,18 +58,15 @@ def write_bucketed_table(
     any stale location for this (to this catalog, new) table is
     cleared first. This is the in-memory-catalog analogue of a Hive
     metastore drop-and-recreate."""
-    import os as _os
-    import shutil as _shutil
-    from urllib.parse import urlparse as _urlparse
 
     spark = df.sparkSession
     if mode == "overwrite":
         # destructive preamble is overwrite-only: append must never
         # drop the existing table/location it is appending to
         spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-        wh = _urlparse(spark.conf.get("spark.sql.warehouse.dir"))
-        loc = _os.path.join(wh.path or wh.netloc, table_name.lower())
-        _shutil.rmtree(loc, ignore_errors=True)
+        wh = urlparse(spark.conf.get("spark.sql.warehouse.dir"))
+        loc = os.path.join(wh.path or wh.netloc, table_name.lower())
+        shutil.rmtree(loc, ignore_errors=True)
     (
         df.write.format(fmt)
         .mode(mode)
@@ -112,14 +121,15 @@ def overwrite_partitions(
     semantics). Static overwrite mode would truncate the whole table;
     dynamic mode scopes the delete to partitions the job actually
     produced, so a one-day backfill over a 5-year table rewrites
-    1/1800th of the data."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.format(fmt).mode("overwrite").partitionBy(*partition_by).save(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    1/1800th of the data. The mode is a writer option, so the
+    session's confs are left as they were."""
+    (
+        df.write.format(fmt)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .save(path)
+    )
 
 
 def zorder_key(x, y, bits: int = 16):
@@ -129,8 +139,6 @@ def zorder_key(x, y, bits: int = 16):
     min/max file statistics prune selective predicates on either
     column (the Delta OPTIMIZE ZORDER layout, as a plain expression).
     Pure bit arithmetic: shifts/masks only, no UDF."""
-    from pyspark.sql import functions as F
-
     # bigint domain: with int32 inputs, y's bit (bits-1) would shift
     # to position 2*bits-1 = the int32 sign bit at the default 16,
     # flipping keys negative and destroying range locality
@@ -151,10 +159,107 @@ def zorder_key(x, y, bits: int = 16):
 
 
 # ------------------------------------------------------------ time travel
+#
+# The snapshot log: a table dir holds one ``_v<n>.json`` manifest per
+# committed version beside its ``v=<n>/`` data (or ``dv=<n>/``
+# deletion-vector) dir. Only :func:`_commit` writes it and only
+# :func:`_committed_versions` lists it; readers trust a version only
+# once its manifest exists.
+
+
+def _atomic_write_json(path: str, payload: str, exclusive: bool = False) -> bool:
+    """Write ``payload`` to a temp file beside ``path``, then move it
+    into place in one step, so a reader never observes a torn file:
+    ``os.replace`` (the last writer wins) or, when ``exclusive``,
+    ``os.link`` — put-if-absent, returning False when ``path``
+    already exists."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path) or ".", prefix="._tmp_")
+    try:
+        os.fchmod(fd, 0o644)  # mkstemp's 0600 would hide it from other readers
+        with os.fdopen(fd, "w") as fh:
+            fh.write(payload)
+        if not exclusive:
+            os.replace(tmp, path)  # atomic on POSIX, same filesystem
+            return True
+        try:
+            os.link(tmp, path)
+        except FileExistsError:
+            return False
+        return True
+    finally:
+        with suppress(FileNotFoundError):
+            os.unlink(tmp)
+
+
+def _committed_versions(path: str, claimed: bool = False) -> list[int]:
+    """Sorted versions of the table at ``path`` that have a manifest
+    ([] when ``path`` does not exist). With ``claimed``, also every
+    version that a ``v=<n>``/``dv=<n>`` dir holds: an in-flight
+    commit's or a crashed writer's, which a new commit must skip."""
+    try:
+        names = os.listdir(path)
+    except FileNotFoundError:
+        return []
+    out = set()
+    for f in names:
+        if f.startswith("_v") and f.endswith(".json"):
+            out.add(int(f[2:-5]))
+        elif claimed:
+            kind, _, n = f.partition("=")
+            if kind in ("v", "dv") and n.isdigit():
+                out.add(int(n))
+    return sorted(out)
+
+
+def _commit(path: str, kind: str, write: Callable[[str], None], manifest: dict) -> int:
+    """The snapshot log's one commit; returns the committed version.
+
+    1. ``write(dir)`` lands the data in a private ``_staging-*`` dir,
+       with no coordination.
+    2. ``os.rename`` claims ``<kind>=<n>`` for the first version no
+       manifest or data dir holds. The rename is atomic, so exactly
+       one writer lands each dir; a loser retries under the next
+       version with its already-written data.
+    3. The manifest is published LAST and put-if-absent, from a fully
+       written temp file: readers never see a torn manifest, and no
+       two commits publish the same version (a ``v=<n>`` and a
+       ``dv=<n>`` claim do not collide, so the manifest decides; the
+       loser moves its data back to staging and retries).
+
+    A crash leaves a ``_staging-*`` dir or a manifest-less data dir,
+    both invisible to readers and reaped by [[expire_snapshots]] after
+    its grace window."""
+    os.makedirs(path, exist_ok=True)
+    staging = os.path.join(path, f"_staging-{os.getpid()}-{uuid.uuid4().hex[:8]}")
+    try:
+        write(staging)
+        for _ in range(1000):  # bound: a pathological claim storm errors out
+            version = 1 + max(_committed_versions(path, claimed=True), default=-1)
+            data_dir = os.path.join(path, f"{kind}={version}")
+            try:
+                os.rename(staging, data_dir)
+            except OSError:
+                if not os.path.exists(data_dir):
+                    raise  # the rename failed for a reason other than a race
+                continue
+            if _atomic_write_json(
+                os.path.join(path, f"_v{version}.json"),
+                json.dumps({"version": version, **manifest}),
+                exclusive=True,
+            ):
+                return version
+            os.rename(data_dir, staging)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+    raise RuntimeError(f"could not claim a snapshot version under {path}")
 
 
 def write_snapshot(
-    df: DataFrame, path: str, note: str = "", fmt: str = "parquet"
+    df: DataFrame,
+    path: str,
+    note: str = "",
+    fmt: str = "parquet",
+    partition_by: list[str] | None = None,
 ) -> int:
     """Append an immutable versioned snapshot of ``df`` under
     ``path`` and return the new version number.
@@ -162,37 +267,34 @@ def write_snapshot(
     A minimal Delta/Iceberg-style commit protocol over a pluggable
     file format (delta-spark/iceberg don't ship in this environment;
     the storage layer stays behind these helpers so a real table
-    format can slot in): data lands in ``v=<n>/`` first, then a
-    one-line manifest ``_v<n>.json`` is written LAST — readers only
-    trust versions with a manifest, so a crashed writer leaves
-    garbage data files but never a readable half-commit (the
-    manifest write is the atomic commit point, exactly Delta's
-    `_delta_log` trick). The manifest records ``fmt``, so one table's
-    history may mix formats and time travel still resolves each
-    version's codec — proving the format switch is a real seam, not
-    a dead parameter (tests/test_sources.py pins parquet↔ORC parity).
-    Each snapshot is a full copy (simplest correct semantics; an
-    incremental layout would store deltas + compaction like
-    [[compact_table]]).
+    format can slot in). The data is written to a private staging
+    dir, claimed as ``v=<n>/`` by an atomic rename, and the manifest
+    ``_v<n>.json`` is published LAST, put-if-absent ([[_commit]]):
+    readers only trust versions with a manifest, so a crashed writer
+    leaves invisible garbage but never a readable half-commit, and
+    racing writers get distinct versions — the atomic put-if-absent
+    that Delta's `_delta_log` requires of its store. The manifest
+    records ``fmt``, so one table's history may mix formats and time
+    travel still resolves each version's codec — proving the format
+    switch is a real seam, not a dead parameter
+    (tests/test_sources.py pins parquet↔ORC parity). Each snapshot is
+    a full copy (simplest correct semantics; an incremental layout
+    would store deltas + compaction like [[compact_table]]).
     """
-    import json as _json
-    import os as _os
-
-    _os.makedirs(path, exist_ok=True)
-    version = 1 + max(
-        (
-            int(f[2:-5])
-            for f in _os.listdir(path)
-            if f.startswith("_v") and f.endswith(".json")
-        ),
-        default=-1,
+    return _commit(
+        path,
+        "v",
+        lambda d: write_table(df, d, fmt, "errorifexists", partition_by),
+        {"note": note, "rows": None, "format": fmt, "partition_by": partition_by or []},
     )
-    data_dir = _os.path.join(path, f"v={version}")
-    df.write.mode("errorifexists").format(fmt).save(data_dir)
-    manifest = {"version": version, "note": note, "rows": None, "format": fmt}
-    with open(_os.path.join(path, f"_v{version}.json"), "w") as fh:
-        fh.write(_json.dumps(manifest))
-    return version
+
+
+def _head(path: str) -> int:
+    """The latest committed version; FileNotFoundError when none."""
+    committed = _committed_versions(path)
+    if not committed:
+        raise FileNotFoundError(f"no committed snapshots under {path}")
+    return committed[-1]
 
 
 def _read_manifest(
@@ -200,14 +302,24 @@ def _read_manifest(
 ) -> dict:
     """The version's manifest; appends the opened file's
     (st_ino, st_mtime_ns) to ``stamps`` when given."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, f"_v{version}.json")) as fh:
+    with open(os.path.join(path, f"_v{version}.json")) as fh:
         if stamps is not None:
-            st = _os.fstat(fh.fileno())
+            st = os.fstat(fh.fileno())
             stamps.append((st.st_ino, st.st_mtime_ns))
-        return _json.loads(fh.read())
+        return json.loads(fh.read())
+
+
+def _base_chain(
+    path: str, version: int, stamps: list[tuple[int, int]] | None = None
+) -> list[tuple[int, dict]]:
+    """(version, manifest) from ``version`` down its merge-on-read
+    ``base`` chain to the nearest materialized version, which comes
+    last. Every manifest read is stamped into ``stamps``."""
+    chain = [(version, _read_manifest(path, version, stamps))]
+    while chain[-1][1].get("base") is not None:
+        base = chain[-1][1]["base"]
+        chain.append((base, _read_manifest(path, base, stamps)))
+    return chain
 
 
 def read_snapshot(
@@ -227,36 +339,17 @@ def read_snapshot(
     applies ONE broadcast anti-join — so every consumer built on
     this function (time travel, [[change_feed]], [[restore_version]],
     MERGE) sees identical semantics for COW and MOR commits."""
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    committed = sorted(
-        int(f[2:-5])
-        for f in _os.listdir(path)
-        if f.startswith("_v") and f.endswith(".json")
-    )
-    if not committed:
-        raise FileNotFoundError(f"no committed snapshots under {path}")
     if version is None:
-        version = committed[-1]
-    if version not in committed:
+        version = _head(path)
+    elif version not in _committed_versions(path):
         raise FileNotFoundError(f"version {version} not committed in {path}")
-    dv_dirs: list[str] = []
-    dv_key = None
     stamps: list[tuple[int, int]] = []
-    man = _read_manifest(path, version, stamps)
-    v = version
-    while man.get("base") is not None:
-        dv_dirs.append(_os.path.join(path, f"dv={v}"))
-        if dv_key is None:
-            dv_key = man["dv_key"]
-        elif man["dv_key"] != dv_key:
-            raise ValueError(
-                f"mixed dv_key along base chain of v{version} in {path}"
-            )
-        v = man["base"]
-        man = _read_manifest(path, v, stamps)
+    *dvs, (v, man) = _base_chain(path, version, stamps)
+    dv_dirs = [os.path.join(path, f"dv={u}") for u, _ in dvs]
+    dv_keys = {m["dv_key"] for _, m in dvs}
+    if len(dv_keys) > 1:
+        raise ValueError(f"mixed dv_key along base chain of v{version} in {path}")
+    dv_key = next(iter(dv_keys), None)
     fmt = man.get("format", "parquet")
     # Memoized relation handle (r14 optimization): a committed
     # version's data directory is immutable, so re-running
@@ -273,13 +366,13 @@ def read_snapshot(
     # any deletion-vector commit above it — misses instead of being
     # served a stale file listing (advice r14, r15).
     def relation() -> DataFrame:
-        df = spark.read.format(fmt).load(_os.path.join(path, f"v={v}"))
+        df = spark.read.format(fmt).load(os.path.join(path, f"v={v}"))
         if dv_dirs:
             dv = spark.read.parquet(*dv_dirs).select(dv_key).distinct()
             df = df.join(F.broadcast(dv), on=dv_key, how="left_anti")
         return df
 
-    key = (_os.path.realpath(path), v, fmt, tuple(dv_dirs), dv_key)
+    key = (os.path.realpath(path), v, fmt, tuple(dv_dirs), dv_key)
     return memo(
         "sinks.read_handles", key, relation, spark=spark, stamp=tuple(stamps)
     )
@@ -294,13 +387,14 @@ def expire_snapshots(
     invisible at that instant — the inverse of the manifest-last
     commit), then the data directory; a crash in between leaves only
     unreferenced data files, never a readable half-deleted version.
-    Also sweeps orphaned ``v=*`` directories with no manifest — but
-    only ones older than ``orphan_grace_sec`` (mtime check), because
-    write_snapshot writes data first and the manifest last: a
-    manifest-less directory younger than the grace window may be an
-    in-flight concurrent commit whose manifest hasn't landed yet
-    (the same retention-vs-writer race Delta's VACUUM guards with its
-    default 7-day horizon). REACHABILITY RULE (Iceberg's): a version
+    Also sweeps what crashed commits leave — ``_staging-*`` dirs and
+    ``v=*``/``dv=*`` dirs with no live manifest — but only ones older
+    than ``orphan_grace_sec`` (mtime check), because [[_commit]]
+    writes data first and the manifest last: a manifest-less
+    directory younger than the grace window may be an in-flight
+    concurrent commit whose manifest hasn't landed yet (the same
+    retention-vs-writer race Delta's VACUUM guards with its default
+    7-day horizon). REACHABILITY RULE (Iceberg's): a version
     referenced by a surviving version's merge-on-read base chain is
     NOT expired even when it falls outside ``keep_last`` — deleting a
     DV commit's base would break the live head; run
@@ -311,55 +405,33 @@ def expire_snapshots(
     `expireSnapshots` reachability over the refs map, the guarantee
     that makes a tag a durable training-run pin. Returns the expired
     version numbers."""
-    import os as _os
-    import shutil as _shutil
-    import time as _time
-
-    committed = sorted(
-        int(f[2:-5])
-        for f in _os.listdir(path)
-        if f.startswith("_v") and f.endswith(".json")
-    )
+    committed = _committed_versions(path)
     survivors = set(committed[-keep_last:]) if keep_last > 0 else set()
     refs = _read_refs(path)
     survivors |= set(refs["tags"].values()) | set(refs["branches"].values())
-    reachable: set[int] = set()
-    for v in survivors:
-        while v is not None and v not in reachable:
-            reachable.add(v)
-            v = _read_manifest(path, v).get("base")
+    reachable = {u for v in survivors for u, _ in _base_chain(path, v)}
     expired = [v for v in committed if v not in reachable]
     for v in expired:
-        _os.remove(_os.path.join(path, f"_v{v}.json"))
-        _shutil.rmtree(_os.path.join(path, f"v={v}"), ignore_errors=True)
-        _shutil.rmtree(_os.path.join(path, f"dv={v}"), ignore_errors=True)
-    live = {f"v={v}" for v in reachable}
-    now = _time.time()
-    for d in _os.listdir(path):
-        if d.startswith("v=") and d not in live:
-            full = _os.path.join(path, d)
+        os.remove(os.path.join(path, f"_v{v}.json"))
+        shutil.rmtree(os.path.join(path, f"v={v}"), ignore_errors=True)
+        shutil.rmtree(os.path.join(path, f"dv={v}"), ignore_errors=True)
+    live = {f"{kind}={v}" for v in reachable for kind in ("v", "dv")}
+    now = time.time()
+    for d in os.listdir(path):
+        if d.startswith(("v=", "dv=", "_staging-")) and d not in live:
+            full = os.path.join(path, d)
             try:
-                age = now - _os.path.getmtime(full)
+                age = now - os.path.getmtime(full)
             except OSError:
                 continue
             if age >= orphan_grace_sec:
-                _shutil.rmtree(full, ignore_errors=True)
+                shutil.rmtree(full, ignore_errors=True)
     return expired
 
 
 def snapshot_history(path: str) -> list[dict]:
     """The table's commit log, oldest first — `DESCRIBE HISTORY`."""
-    import json as _json
-    import os as _os
-
-    out = []
-    for f in sorted(
-        (f for f in _os.listdir(path) if f.startswith("_v") and f.endswith(".json")),
-        key=lambda f: int(f[2:-5]),
-    ):
-        with open(_os.path.join(path, f)) as fh:
-            out.append(_json.loads(fh.read()))
-    return out
+    return [_read_manifest(path, v) for v in _committed_versions(path)]
 
 
 # ------------------------------------------------- named refs (tags/branches)
@@ -370,21 +442,16 @@ def snapshot_history(path: str) -> list[dict]:
 # written atomically (write-then-rename, the manifest convention), so
 # a reader never observes a torn refs file. In-process read-modify-
 # write is serialized by a module lock; cross-process the last atomic
-# rename wins — same single-writer-per-table assumption as
-# write_snapshot's version claim.
+# rename wins (a single ref writer per table is assumed; version
+# commits need no such assumption, see [[_commit]]).
 
-import threading as _threading
-
-_REFS_LOCK = _threading.Lock()
+_REFS_LOCK = threading.Lock()
 
 
 def _read_refs(path: str) -> dict:
-    import json as _json
-    import os as _os
-
     try:
-        with open(_os.path.join(path, "_refs.json")) as fh:
-            refs = _json.loads(fh.read())
+        with open(os.path.join(path, "_refs.json")) as fh:
+            refs = json.loads(fh.read())
     except FileNotFoundError:
         refs = {}
     refs.setdefault("tags", {})
@@ -393,20 +460,7 @@ def _read_refs(path: str) -> dict:
 
 
 def _write_refs(path: str, refs: dict) -> None:
-    import json as _json
-    import os as _os
-
-    _atomic_write_json(_os.path.join(path, "_refs.json"), _json.dumps(refs))
-
-
-def _committed_versions(path: str) -> list[int]:
-    import os as _os
-
-    return sorted(
-        int(f[2:-5])
-        for f in _os.listdir(path)
-        if f.startswith("_v") and f.endswith(".json")
-    )
+    _atomic_write_json(os.path.join(path, "_refs.json"), json.dumps(refs))
 
 
 def create_tag(path: str, name: str, version: int | None = None) -> int:
@@ -524,8 +578,6 @@ def delete_where(spark: SparkSession, path: str, condition) -> int:
 def update_where(spark: SparkSession, path: str, condition, assignments: dict) -> int:
     """Copy-on-write UPDATE: rewrite the latest snapshot with
     ``assignments`` (col -> Column expr) applied to matching rows."""
-    from pyspark.sql import functions as F
-
     cur = read_snapshot(spark, path)
     for col, expr in assignments.items():
         cur = cur.withColumn(col, F.when(condition, expr).otherwise(F.col(col)))
@@ -545,24 +597,15 @@ def delete_where_mor(
     terabytes — and readers pay one broadcast anti-join
     ([[read_snapshot]] resolves the chain) until
     [[apply_deletion_vectors]] (OPTIMIZE's DV compaction) folds the
-    chain into a materialized version. The manifest-last protocol is
-    preserved: the DV parquet lands first, the manifest is the atomic
-    commit point, so a crashed MOR delete leaves an invisible
-    sidecar, never a readable half-commit. Matching is evaluated
+    chain into a materialized version. It commits through the same
+    [[_commit]] as [[write_snapshot]]: the DV parquet is staged and
+    claimed as ``dv=<n>/`` first, the manifest is published last, so
+    a crashed MOR delete leaves an invisible sidecar, never a
+    readable half-commit. Matching is evaluated
     against the RESOLVED current head, so re-deleting an
     already-deleted key is a no-op, and ``key_col`` must identify
     rows uniquely (the [[change_feed]] key contract)."""
-    import json as _json
-    import os as _os
-
-    committed = sorted(
-        int(f[2:-5])
-        for f in _os.listdir(path)
-        if f.startswith("_v") and f.endswith(".json")
-    )
-    if not committed:
-        raise FileNotFoundError(f"no committed snapshots under {path}")
-    head = committed[-1]
+    head = _head(path)
     head_man = _read_manifest(path, head)
     if head_man.get("base") is not None and head_man["dv_key"] != key_col:
         # fail at COMMIT time, not at the next read: a mixed-key DV
@@ -572,25 +615,22 @@ def delete_where_mor(
             f"run apply_deletion_vectors before deleting by {key_col!r}"
         )
     cur = read_snapshot(spark, path, head)
-    version = head + 1
     keys = cur.where(condition).select(key_col).distinct()
     # one part file always: a DV is O(deleted keys) by contract, and
     # an empty delete must still land a schema-bearing file so the
     # reader's parquet load never hits a data-less directory
-    keys.coalesce(1).write.mode("errorifexists").parquet(
-        _os.path.join(path, f"dv={version}")
+    return _commit(
+        path,
+        "dv",
+        lambda d: keys.coalesce(1).write.parquet(d),
+        {
+            "note": note,
+            "rows": None,
+            "format": head_man.get("format", "parquet"),
+            "base": head,
+            "dv_key": key_col,
+        },
     )
-    manifest = {
-        "version": version,
-        "note": note,
-        "rows": None,
-        "format": _read_manifest(path, head).get("format", "parquet"),
-        "base": head,
-        "dv_key": key_col,
-    }
-    with open(_os.path.join(path, f"_v{version}.json"), "w") as fh:
-        fh.write(_json.dumps(manifest))
-    return version
 
 
 def apply_deletion_vectors(
@@ -605,29 +645,16 @@ def apply_deletion_vectors(
     live snapshot). No-op (returns the head unchanged) when the head
     is already materialized. O(live rows) once, amortized across the
     MOR deletes it folds — Delta's `REORG TABLE ... APPLY (PURGE)`."""
-    import os as _os
-
-    committed = sorted(
-        int(f[2:-5])
-        for f in _os.listdir(path)
-        if f.startswith("_v") and f.endswith(".json")
-    )
-    if not committed:
-        raise FileNotFoundError(f"no committed snapshots under {path}")
-    head = committed[-1]
-    man = _read_manifest(path, head)
-    if man.get("base") is None:
+    head = _head(path)
+    chain = _base_chain(path, head)
+    if len(chain) == 1:
         return head
     # preserve the chain's storage format for the materialized copy
-    v = head
-    while man.get("base") is not None:
-        v = man["base"]
-        man = _read_manifest(path, v)
     return write_snapshot(
         read_snapshot(spark, path, head),
         path,
         note=note,
-        fmt=man.get("format", "parquet"),
+        fmt=chain[-1][1].get("format", "parquet"),
     )
 
 
@@ -673,8 +700,6 @@ def merge_into(
     key the join is shuffle-free, and with a transactional format
     the rewrite touches only files holding matched keys; the clause
     logic is identical."""
-    from pyspark.sql import functions as F
-
     matched = list(matched)
     not_matched = list(not_matched)
     not_matched_by_source = list(not_matched_by_source)
@@ -743,8 +768,6 @@ def write_snapshot_checked(df: DataFrame, path: str, checks: dict, note: str = "
     rollback). One aggregate pass computes all violation counts
     before any data lands — the ingest-side deployment of
     q_dq_checks' audit."""
-    from pyspark.sql import functions as F
-
     counts = df.agg(
         *[F.count_if(~c).alias(name) for name, c in checks.items()]
     ).collect()[0]
@@ -757,107 +780,12 @@ def write_snapshot_checked(df: DataFrame, path: str, checks: dict, note: str = "
 # ------------------------------------------------ stats-based file skipping
 
 
-def _atomic_write_json(path: str, payload: str) -> None:
-    """Write-then-rename so a concurrent reader never observes a
-    truncated manifest and two concurrent writers leave one intact
-    winner — write_snapshot's manifest-last convention applied to the
-    stats sidecars (advice r13: a plain open(..., 'w') exposes a
-    half-written JSON to readers in the write window)."""
-    import os as _os
-    import tempfile as _tempfile
-
-    fd, tmp = _tempfile.mkstemp(
-        dir=_os.path.dirname(path) or ".", prefix="._stats_tmp_"
-    )
-    try:
-        with _os.fdopen(fd, "w") as fh:
-            fh.write(payload)
-        _os.replace(tmp, path)  # atomic on POSIX, same filesystem
-    except BaseException:
-        try:
-            _os.unlink(tmp)
-        except OSError:
-            pass
-        raise
-
-
-def write_stats_manifest(
-    spark: SparkSession, path: str, key_col: str, fmt: str = "parquet"
-) -> dict:
-    """Per-file (min, max) stats of ``key_col`` for the table at
-    ``path``, written as ``_stats.json`` beside the data — the
-    Delta/Iceberg data-skipping metadata made explicit. One grouped
-    scan (``input_file_name``) computes every file's range; readers
-    ([[read_stats_pruned]]) then skip whole files whose range cannot
-    intersect a predicate, BEFORE Spark ever lists row groups. On a
-    range-sorted layout ([[compact_table]] with ``sort_col``) the
-    ranges are disjoint, so a point/range predicate touches
-    O(selectivity) files."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    rows = (
-        spark.read.format(fmt)
-        .load(path)
-        .groupBy(F.input_file_name().alias("file"))
-        .agg(F.min(key_col).alias("lo"), F.max(key_col).alias("hi"))
-        .collect()
-    )
-    stats = {
-        "key": key_col,
-        "files": {r["file"]: [r["lo"], r["hi"]] for r in rows},
-    }
-    _atomic_write_json(
-        _os.path.join(path, "_stats.json"), _json.dumps(stats, default=str)
-    )
-    return stats
-
-
-def read_stats_pruned(
-    spark: SparkSession, path: str, lo, hi, fmt: str = "parquet"
-) -> DataFrame:
-    """Read only the files of ``path`` whose stats range intersects
-    [lo, hi] (closed interval) per the ``_stats.json`` manifest.
-    File-granular: rows OUTSIDE the interval can still appear (a
-    file straddling the bound is read whole), so callers keep the
-    row-level predicate in the plan — the manifest prune only bounds
-    I/O, exactly like Delta data skipping."""
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "_stats.json")) as fh:
-        stats = _json.loads(fh.read())
-    # non-JSON-native stats (date/timestamp keys) were stored via
-    # str(); compare bounds in the same domain — ISO-8601 strings
-    # order like their values. (Decimal keys would not: keep those
-    # out of the stats column or widen to double at write time.)
-    # files whose key column is all NULL store [null, null] bounds —
-    # no range evidence either way, so they are always read (and must
-    # not drive the str-domain probe or the comparison, review r6)
-    bounded = {
-        f: b
-        for f, b in stats["files"].items()
-        if b[0] is not None and b[1] is not None
-    }
-    sample = next(iter(bounded.values()), None)
-    if sample is not None and isinstance(sample[0], str):
-        lo, hi = str(lo), str(hi)
-    files = [
-        f for f, (flo, fhi) in bounded.items() if not (fhi < lo or flo > hi)
-    ] + [f for f in stats["files"] if f not in bounded]
-    if not files:
-        return spark.read.format(fmt).load(path).limit(0)
-    return spark.read.format(fmt).load(files)
-
-
 def write_stats_manifest_nd(
     spark: SparkSession, path: str, key_cols: list[str], fmt: str = "parquet"
 ) -> dict:
     """Multi-column per-file (min, max) stats for the table at
     ``path``, written as ``_stats_nd.json`` — the N-dimensional
-    generalization of [[write_stats_manifest]] and the explicit form
+    generalization of per-file (min, max) stats and the explicit form
     of Delta/Iceberg's per-column file statistics. One grouped scan
     computes every file's range in EVERY key column; the point of
     pairing this with a Z-ORDER clustered layout ([[zorder_key]]) is
@@ -877,10 +805,6 @@ def write_stats_manifest_nd(
     (ISO-8601 orders like its values), and any other non-native type
     (Decimal) is parsed back to a number instead of the lexicographic
     comparison that would prune '9' > '10' (advice r13)."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import functions as F
 
     df = spark.read.format(fmt).load(path)
     types = {c: df.schema[c].dataType.typeName() for c in key_cols}
@@ -907,7 +831,7 @@ def write_stats_manifest_nd(
         },
     }
     _atomic_write_json(
-        _os.path.join(path, "_stats_nd.json"), _json.dumps(stats, default=str)
+        os.path.join(path, "_stats_nd.json"), json.dumps(stats, default=str)
     )
     return stats
 
@@ -926,7 +850,7 @@ def read_stats_pruned_nd(
     carries null/row counts, additionally skip files that cannot
     satisfy ``require_non_null`` columns (every value NULL) or
     ``require_null`` columns (zero NULLs). File-granular like
-    [[read_stats_pruned]]: straddling files are read whole, so
+    a manifest prune: straddling files are read whole, so
     callers keep the row-level predicates in the plan; the prune only
     bounds I/O. A file lacking evidence in ANY requested column
     (all-NULL bounds / absent counts in a pre-r14 manifest) is
@@ -937,12 +861,10 @@ def read_stats_pruned_nd(
     orders like its values); a non-JSON-native NUMERIC stat (Decimal,
     serialized via str) is parsed back before comparing, never
     compared lexicographically (advice r13)."""
-    import json as _json
-    import os as _os
 
     bounds = bounds or {}
-    with open(_os.path.join(path, "_stats_nd.json")) as fh:
-        stats = _json.loads(fh.read())
+    with open(os.path.join(path, "_stats_nd.json")) as fh:
+        stats = json.loads(fh.read())
     types = stats.get("types", {})
     wanted = list(bounds) + list(require_non_null or []) + list(
         require_null or []
@@ -1020,10 +942,6 @@ def write_bloom_manifest(
     false-positive files are read (and the caller's row predicate
     keeps results exact) — the bloom only bounds I/O, exactly like
     the stats manifests."""
-    import json as _json
-    import os as _os
-
-    from pyspark.sql import functions as F
 
     df = spark.read.format(fmt).load(path)
     ctype = df.schema[col].dataType.simpleString()
@@ -1057,7 +975,7 @@ def write_bloom_manifest(
         },
     }
     _atomic_write_json(
-        _os.path.join(path, f"_bloom_{col}.json"), _json.dumps(manifest)
+        os.path.join(path, f"_bloom_{col}.json"), json.dumps(manifest)
     )
     return manifest
 
@@ -1077,13 +995,9 @@ def read_bloom_pruned(
     reader can never drift. False-positive files are read whole —
     callers keep the row-level IN/= predicate in the plan; no false
     negatives by bloom construction."""
-    import json as _json
-    import os as _os
 
-    from pyspark.sql import functions as F
-
-    with open(_os.path.join(path, f"_bloom_{col}.json")) as fh:
-        man = _json.loads(fh.read())
+    with open(os.path.join(path, f"_bloom_{col}.json")) as fh:
+        man = json.loads(fh.read())
     m_bits, k, ctype = man["m_bits"], man["k"], man["type"]
     probe = spark.range(1).select(
         *[
@@ -1146,8 +1060,6 @@ def change_feed(
     exchanges against this plan's one, the difference between
     O(commits) and O(1) shuffles when a CDF reader spans a day of
     commits at 100 TB."""
-    from pyspark.sql import functions as F
-
     if v_from >= v_to:
         # documented (v_from, v_to] semantics: a degenerate range is
         # an EMPTY feed with the full output schema, not an

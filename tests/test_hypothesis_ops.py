@@ -128,19 +128,19 @@ def test_stats_pruned_read_equals_full_filtered_read(
     from pyspark.sql import functions as F
 
     from lakehouse_app_spark.sources.sinks import (
-        read_stats_pruned,
-        write_stats_manifest,
+        read_stats_pruned_nd,
+        write_stats_manifest_nd,
     )
 
     hi = lo + width
     path = str(tmp_path_factory.mktemp("sp") / "t")
     df = spark.createDataFrame([(v,) for v in rows], "k long")
     df.repartitionByRange(4, "k").write.parquet(path)
-    write_stats_manifest(spark, path, "k")
+    write_stats_manifest_nd(spark, path, ["k"])
 
     pruned = sorted(
         r["k"]
-        for r in read_stats_pruned(spark, path, lo, hi)
+        for r in read_stats_pruned_nd(spark, path, bounds={"k": (lo, hi)})
         .where(F.col("k").between(lo, hi))
         .collect()
     )

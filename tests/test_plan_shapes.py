@@ -581,7 +581,7 @@ def test_stats_prune_reads_file_subset(spark, sf_dir):
     assert m, plan
     n_scanned = int(m.group(1))
     path = layout_path("li_range16", sf_dir)
-    with open(os.path.join(path, "_stats.json")) as fh:
+    with open(os.path.join(path, "_stats_nd.json")) as fh:
         n_total = len(json.load(fh)["files"])
     assert 1 <= n_scanned < n_total, (n_scanned, n_total, plan)
 

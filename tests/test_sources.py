@@ -163,7 +163,8 @@ def test_schema_evolution_merge(spark, tmp_path):
 
 def test_dynamic_partition_overwrite_replaces_only_touched(spark, sf_dir, tmp_path):
     """overwrite_partitions replaces the partitions in the incoming
-    frame and leaves every sibling partition byte-identical."""
+    frame and leaves every sibling partition byte-identical, without
+    setting or changing any of the session's confs."""
     from lakehouse_app_spark.sources.sinks import overwrite_partitions
 
     t = load_tables(spark, sf_dir)
@@ -182,7 +183,9 @@ def test_dynamic_partition_overwrite_replaces_only_touched(spark, sf_dir, tmp_pa
         F.col("o_orderkey") % 2 == 0
     )
     n_one = one.count()
+    confs_before = {r.key: r.value for r in spark.sql("SET").collect()}
     overwrite_partitions(one, out, partition_by=["o_orderpriority"])
+    assert {r.key: r.value for r in spark.sql("SET").collect()} == confs_before
     after = (
         read_table(spark, out)
         .groupBy("o_orderpriority")
@@ -592,10 +595,11 @@ def test_rest_json_streaming_source_incremental(spark, tmp_path):
 def test_expire_snapshots_retention(spark, sf_dir, tmp_path):
     """VACUUM-in-miniature: after expiring to keep_last=2, old
     versions are unreadable AND their files are gone, the survivors
-    read exactly as before. Orphaned uncommitted data dirs are swept
-    only once older than the grace window — a young manifest-less dir
-    may be an in-flight concurrent commit (data lands before the
-    manifest), so the default sweep must leave it alone."""
+    read exactly as before. Orphaned uncommitted data dirs (and a
+    crashed commit's staging dir) are swept only once older than the
+    grace window — a young manifest-less dir may be an in-flight
+    concurrent commit (data lands before the manifest), so the
+    default sweep must leave it alone."""
     import os
 
     import pytest as _pytest
@@ -610,23 +614,143 @@ def test_expire_snapshots_retention(spark, sf_dir, tmp_path):
     path = str(tmp_path / "tbl")
     for n in (3, 5, 7, 9):
         write_snapshot(t.orders.limit(n), path, note=f"n={n}")
-    # orphan: data dir without manifest (crashed writer)
-    t.orders.limit(1).write.parquet(os.path.join(path, "v=99"))
+    # orphans: data and DV dirs without a manifest, and a staging dir
+    # that a writer crashed in before claiming a version
+    orphans = ("v=99", "dv=98", "_staging-crashed")
+    for d in orphans:
+        t.orders.limit(1).write.parquet(os.path.join(path, d))
 
     expired = expire_snapshots(path, keep_last=2)
     assert expired == [0, 1]
     assert not os.path.exists(os.path.join(path, "v=0"))
-    # the orphan is YOUNGER than the default grace window: it must
-    # survive (could be a concurrent writer whose manifest hasn't
+    # the orphans are YOUNGER than the default grace window: they must
+    # survive (each could be a concurrent writer whose manifest hasn't
     # landed yet)...
-    assert os.path.exists(os.path.join(path, "v=99"))
+    assert all(os.path.exists(os.path.join(path, d)) for d in orphans)
     # ...and is swept once the grace window has elapsed (grace=0)
     expire_snapshots(path, keep_last=2, orphan_grace_sec=0.0)
-    assert not os.path.exists(os.path.join(path, "v=99"))
+    assert not any(os.path.exists(os.path.join(path, d)) for d in orphans)
     assert read_snapshot(spark, path, 2).count() == 7
     assert read_snapshot(spark, path).count() == 9
     with _pytest.raises(FileNotFoundError):
         read_snapshot(spark, path, 1)
+
+
+def test_racing_snapshot_writers_get_distinct_versions(spark, tmp_path):
+    """Writers released together on one table path all commit, under
+    distinct versions, and each version reads back exactly its own
+    writer's rows: the version claim and the manifest publish are
+    atomic, so no racer fails and no two commits merge. Two writers
+    race in 16 trials, then six (more than the cores) in one."""
+    import sys
+    import threading
+
+    from lakehouse_app_spark.sources.sinks import read_snapshot, write_snapshot
+
+    frames = [spark.range(100 * i, 100 * i + 7 + i) for i in range(6)]
+
+    def race(path: str, racers: list) -> None:
+        barrier = threading.Barrier(len(racers))
+        versions: list = [None] * len(racers)
+
+        def writer(i: int) -> None:
+            barrier.wait()
+            try:
+                versions[i] = write_snapshot(racers[i], path, note=f"w{i}")
+            except Exception as e:  # reported by the assertion below
+                versions[i] = e
+
+        threads = [
+            threading.Thread(target=writer, args=(i,)) for i in range(len(racers))
+        ]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+            assert not th.is_alive()
+        assert sorted(versions, key=str) == list(range(len(racers))), versions
+        for v, df in zip(versions, racers):
+            got = sorted(r.id for r in read_snapshot(spark, path, v).collect())
+            assert got == sorted(r.id for r in df.collect()), (v, got)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for trial in range(16):
+            race(str(tmp_path / f"race{trial}"), frames[:2])
+        race(str(tmp_path / "race_all"), frames)
+    finally:
+        sys.setswitchinterval(interval)
+
+
+def test_write_snapshot_commits_past_orphan_data_dir(spark, tmp_path):
+    """A crashed writer's manifest-less ``v=<n>/`` must not wedge the
+    table: the next commit claims the version after it."""
+    import os
+
+    from lakehouse_app_spark.sources.sinks import read_snapshot, write_snapshot
+
+    path = str(tmp_path / "tbl")
+    assert write_snapshot(spark.range(3), path) == 0
+    os.makedirs(os.path.join(path, "v=1"))
+    with open(os.path.join(path, "v=1", "part-junk"), "w") as fh:
+        fh.write("not parquet")
+    assert write_snapshot(spark.range(5), path) == 2
+    assert read_snapshot(spark, path).count() == 5
+    assert read_snapshot(spark, path, 0).count() == 3
+
+
+def test_delete_where_mor_commits_past_orphan_dv_dir(spark, tmp_path):
+    """A crashed MOR delete's manifest-less ``dv=<n>/`` must not wedge
+    the next MOR delete."""
+    import os
+
+    from lakehouse_app_spark.sources.sinks import (
+        delete_where_mor,
+        read_snapshot,
+        write_snapshot,
+    )
+
+    path = str(tmp_path / "tbl")
+    write_snapshot(spark.range(5), path)
+    spark.range(1).coalesce(1).write.parquet(os.path.join(path, "dv=1"))
+    assert delete_where_mor(spark, path, F.col("id") == 3, "id") == 2
+    assert sorted(r.id for r in read_snapshot(spark, path).collect()) == [0, 1, 2, 4]
+
+
+def test_commit_that_loses_the_manifest_retries_under_next_version(
+    spark, tmp_path, monkeypatch
+):
+    """A ``v=<n>`` claim and a racing ``dv=<n>`` claim do not collide,
+    so the put-if-absent manifest decides: the commit that finds
+    ``_v<n>.json`` already published moves its data back and commits
+    under the next version, leaving version n as the winner wrote it."""
+    import os
+
+    from lakehouse_app_spark.sources import sinks
+
+    path = str(tmp_path / "tbl")
+    sinks.write_snapshot(spark.range(5), path)
+    assert sinks.delete_where_mor(spark, path, F.col("id") == 0, "id") == 1
+    real = sinks._committed_versions
+    stale = []
+
+    def listing(p, claimed=False):
+        # the first claim listing predates the racing dv=1 commit
+        out = real(p, claimed)
+        if claimed and not stale:
+            stale.append(out)
+            return [v for v in out if v != 1]
+        return out
+
+    monkeypatch.setattr(sinks, "_committed_versions", listing)
+    assert sinks.write_snapshot(spark.range(100, 103), path) == 2
+    assert stale and not os.path.exists(os.path.join(path, "v=1"))
+    def ids(v: int) -> list[int]:
+        return sorted(r.id for r in sinks.read_snapshot(spark, path, v).collect())
+
+    assert ids(1) == [1, 2, 3, 4]
+    assert ids(2) == [100, 101, 102]
 
 
 def test_layout_catalog_survives_process_restart(spark, sf_dir, tmp_path, monkeypatch):
@@ -766,14 +890,14 @@ def test_stats_pruned_reader_empty_intersection_keeps_schema(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from lakehouse_app_spark.sources.sinks import (
-        read_stats_pruned,
-        write_stats_manifest,
+        read_stats_pruned_nd,
+        write_stats_manifest_nd,
     )
 
     path = str(tmp_path / "t")
     spark.range(100).withColumn("k", F.col("id")).write.parquet(path)
-    write_stats_manifest(spark, path, "k")
-    out = read_stats_pruned(spark, path, 10_000, 20_000)
+    write_stats_manifest_nd(spark, path, ["k"])
+    out = read_stats_pruned_nd(spark, path, bounds={"k": (10_000, 20_000)})
     assert out.columns == ["id", "k"]
     assert out.count() == 0
 
