@@ -126,12 +126,10 @@ def _measure_stream_floor(
         else:
             df = raw
         name = f"_floor_probe_{'s' if stateful else 'p'}"
-        # run_to_memory's production topology (2 state-store
-        # partitions) so the probe measures OUR streams' floor, not a
-        # 32-store worst case; the trailing no-data batch stays, it is
-        # the eviction the stateful arm measures
+        # the trailing no-data batch stays, it is the eviction the
+        # stateful arm measures
         t0 = time.perf_counter()
-        run_to_memory(df, name, output_mode="append", partitions=2)
+        run_to_memory(df, name, output_mode="append")
         return time.perf_counter() - t0
 
     # the adjacent re-probe only reads the stateful median; skip the
@@ -209,7 +207,7 @@ def _measure_tws_floor(spark, runs: int = 3) -> float:
             timeMode="None",
         )
         t0 = time.perf_counter()
-        run_tws(spark, out, "_tws_floor", partitions=2)
+        run_tws(spark, out, "_tws_floor")
         return time.perf_counter() - t0
 
     ts = sorted(once() for _ in range(runs))
@@ -291,7 +289,7 @@ def _measure_timer_floor(spark, runs: int = 3) -> float:
             )
         )
         t0 = time.perf_counter()
-        run_tws(spark, keyed, "_timer_floor", partitions=2)
+        run_tws(spark, keyed, "_timer_floor")
         return time.perf_counter() - t0
 
     ts = sorted(once() for _ in range(runs))

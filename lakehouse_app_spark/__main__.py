@@ -21,7 +21,7 @@ calls skip the builder.
 
 ``drive`` calls the contract the way its external caller does: on a
 bare SparkSession (none of the engine's confs; ``--perturbed`` for
-local[4], ANSI off and 7 shuffle partitions) it runs ``entry``, then
+local[3], an odd width, and ANSI off) it runs ``entry``, then
 judges every key against its DuckDB oracle with the comparator the
 tests use. Naming keys runs only those, without ``entry``. It exits 1
 on any mismatch, error or unknown key.
@@ -55,7 +55,7 @@ def _build_parser() -> argparse.ArgumentParser:
         else:
             s.add_argument(
                 "--perturbed", action="store_true",
-                help="local[4], ANSI off, 7 shuffle partitions",
+                help="local[3] (odd width), ANSI off",
             )
     s = sub.add_parser("oracle", help="print the DuckDB oracle SQL")
     s.add_argument("query")
@@ -69,9 +69,7 @@ def _bare_session(perturbed: bool):
 
     b = SparkSession.builder.appName("contract-caller")
     if perturbed:
-        b = (b.master("local[4]")
-             .config("spark.sql.ansi.enabled", "false")
-             .config("spark.sql.shuffle.partitions", "7"))
+        b = b.master("local[3]").config("spark.sql.ansi.enabled", "false")
     else:
         b = b.master("local[8]")
     spark = b.getOrCreate()

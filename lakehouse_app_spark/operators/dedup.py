@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from lakehouse_app_spark.registry import query
 from lakehouse_app_spark.runtime_cache import memo, scoped_persist
+from lakehouse_app_spark.session import width
 from lakehouse_app_spark.sources.tables import load_tables
 
 # ---------------------------------------------------------------- helpers
@@ -48,22 +49,10 @@ def _file_stamp(path: str) -> tuple:
         return (path,)
 
 
-def _spread_target(spark: SparkSession) -> int:
-    """spread()'s width: CORE parallelism, not shuffle.partitions.
-    spread() exists to parallelize scan-local MAP work (shingling,
-    hashing), which wants every core, while the engine's reducer
-    count is deliberately smaller (8 — see session.py). Coupling the
-    two (pre-r8) silently throttled the map stage to the reducer
-    width when the reducer default dropped."""
-    return max(
-        spark.sparkContext.defaultParallelism,
-        int(spark.conf.get("spark.sql.shuffle.partitions", "8")),
-    )
-
-
 def spread(docs: DataFrame) -> DataFrame:
-    """Round-robin the corpus across all cores before the expensive
-    map-side work (shingling, hashing, fingerprints).
+    """Round-robin the corpus across the session width (all cores,
+    ``session.width``) before the expensive map-side work (shingling,
+    hashing, fingerprints).
 
     A small parquet table arrives as ONE partition, so everything
     upstream of the first shuffle would otherwise run single-
@@ -82,7 +71,7 @@ def spread(docs: DataFrame) -> DataFrame:
     plans (no stable memo key) keep today's behavior: repartition.
     """
     spark = docs.sparkSession
-    npart = _spread_target(spark)
+    npart = width(spark)
     try:
         files = tuple(sorted(docs.inputFiles()))
     except Exception:

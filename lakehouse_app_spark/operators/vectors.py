@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakehouse_app_spark.registry import query
+from lakehouse_app_spark.session import width
 from lakehouse_app_spark.sources.tables import load_tables
 
 
@@ -251,8 +252,7 @@ def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     t = load_tables(spark, sf_dir)
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    a = _sides(t.embeddings, "a").repartition(npart)
+    a = _sides(t.embeddings, "a").repartition(width(spark))
     b = _sides(t.embeddings, "b")
     pairs = a.join(
         F.broadcast(b),
@@ -366,8 +366,7 @@ def q_neardup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     side so pair generation isn't bound to |blocks| tasks.
     """
     t = load_tables(spark, sf_dir)
-    npart = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    a = _sides(t.embeddings, "a").repartition(npart)
+    a = _sides(t.embeddings, "a").repartition(width(spark))
     b = _sides(t.embeddings, "b")
     pairs = a.join(
         F.broadcast(b),

@@ -29,9 +29,9 @@ from lakehouse_app_spark.sources.tables import TABLE_NAMES
 
 ITER = 3
 COPIES = 10
-# Input-split sizing for a >128 MB single-file corpus (see
-# session.RUNTIME_CONFS): with the 128 MB default the 140 MB lineitem
-# scans as ~2 input tasks however many cores there are.
+# Input-split sizing for a >128 MB single-file corpus: with the 128 MB
+# default the 140 MB lineitem scans as ~2 input tasks however many
+# cores there are.
 MAX_PARTITION_BYTES = str(16 * 1024 * 1024)
 
 # (table, [key columns to stride-shift]); stride = max(key)+1 of the

@@ -13,16 +13,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# AQE default ON, overridable per deployment profile. Measured both
-# ways at sf0.1: single-shuffle floor queries run 30-50% faster
-# without AQE (the stage barrier dominates), but multi-shuffle
-# queries (chained windows/aggregates: scd2_lookup, bm25, count-min)
-# REGRESS ~2× without it — un-coalesced 32-task stages beat the
-# barrier saving — and the full 182-query suite is net faster with
-# AQE on. Results are AQE-invariant (tests/test_plan_shapes.py), so
-# the env knob is pure deployment configuration.
-_AQE_DEFAULT = os.environ.get("SPARK_GRAFT_AQE", "true")
-
 # Runtime-settable SQL confs that every entry point must guarantee,
 # even when handed a SparkSession it did not create (the driver's).
 RUNTIME_CONFS = {
@@ -30,39 +20,31 @@ RUNTIME_CONFS = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Determinism: timezone-free comparisons against the DuckDB oracle.
     "spark.sql.session.timeZone": "UTC",
-    # AQE per deployment profile (see _AQE_DEFAULT above).
-    "spark.sql.adaptive.enabled": _AQE_DEFAULT,
+    # Measured both ways at sf0.1: single-shuffle floor queries run
+    # 30-50% faster without AQE (the stage barrier dominates), but
+    # multi-shuffle queries (chained windows/aggregates: scd2_lookup,
+    # bm25, count-min) regress ~2x without it, and the full suite is
+    # net faster with it on. Results are AQE-invariant
+    # (tests/test_plan_shapes.py).
+    "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # Arrow-accelerated pandas UDFs / toPandas.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # Right-size shuffles for the bench/correctness scale; AQE coalesces
-    # further. (Also applied to driver-owned sessions: 200 state-store
-    # partitions make local streaming queries pointlessly slow.)
-    # 8, not 32 (round-8 interleaved A/B over a 15-query shuffle-heavy
-    # subset at sf0.1: 32→8 measured 16.8→14.1 s min-of-3, with wins up
-    # to 1.6× on the dedup/sketch family and only q_drift_ks mildly
-    # regressing): at ~1 MB/partition the per-task launch overhead of a
-    # 32-way exchange dominates its parallelism. Pure deployment
-    # sizing — results are partition-count-invariant (AQE-invariance
-    # plan tests), and a cluster profile overrides via
-    # SPARK_GRAFT_SHUFFLE_PARTITIONS.
-    "spark.sql.shuffle.partitions": "8",
 }
 
-# Input-split sizing is a deployment profile, like shuffle width: the
-# 128 MB default is right for a many-file cluster corpus, but a
-# single-file local corpus larger than one split (the sf1 scale study:
-# lineitem 140 MB) scans as ~2 input tasks on 32 cores unless the
-# split size is lowered. Settable per deployment; results are
-# split-count-invariant (same AQE-invariance argument as shuffle
-# width).
-_MPB = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-if _MPB:
-    RUNTIME_CONFS["spark.sql.files.maxPartitionBytes"] = _MPB
+
+def width(spark: SparkSession) -> int:
+    """The session's one parallelism width: the cores it runs on.
+
+    Batch shuffles and state stores (``spark.sql.shuffle.partitions``,
+    set by :func:`ensure_runtime_confs`), ``spread()`` and the staged
+    stream files all use it; results are width-invariant."""
+    return spark.sparkContext.defaultParallelism
 
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Set runtime-settable confs on an existing session (idempotent).
+    """Set runtime-settable confs on an existing session (idempotent),
+    and its shuffle width to :func:`width`.
 
     Floor-shaving attempt recorded (round 8, negative result): the
     transformWithStateInPandas driver-worker is a fresh interpreter
@@ -77,7 +59,8 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     workers (A/B: floor 1.94-2.01 s stock vs 2.12-2.46 s injected).
     The tws_floor_sec instrument in bench.py stays the honest
     decomposition."""
-    for k, v in RUNTIME_CONFS.items():
+    confs = {**RUNTIME_CONFS, "spark.sql.shuffle.partitions": str(width(spark))}
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -88,20 +71,18 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
 def get_spark(
     app_name: str = "lakehouse-app-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    Defaults are sized for the local test harness (local[N], small
-    shuffles); on a real cluster the same code runs with cluster-mode
-    master/partition settings — every operator is declared against the
-    DataFrame API, so scaling is a config change, not a code change.
+    The master defaults to ``local[$SPARK_GRAFT_CPUS]`` (``local[*]``
+    when unset); on a real cluster ``SPARK_GRAFT_MASTER`` names it. The
+    width follows the master's cores (:func:`width`), and every
+    operator is declared against the DataFrame API, so scaling is a
+    config change, not a code change.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8"))
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -124,13 +105,4 @@ def get_spark(
         )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    # AFTER the RUNTIME_CONFS loop — that dict carries its own
-    # default for this key and silently overrode the parameter/env
-    # knob when this was set first (review r6, confirmed live)
-    builder = builder.config(
-        "spark.sql.shuffle.partitions", str(shuffle_partitions)
-    )
-    spark = builder.getOrCreate()
-    ensure_runtime_confs(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    return spark
+    return ensure_runtime_confs(builder.getOrCreate())

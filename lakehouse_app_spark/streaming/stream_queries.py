@@ -38,7 +38,7 @@ from lakehouse_app_spark.runtime_cache import (
     retire_scratch_dir,
     scratch_commit_dir,
 )
-from lakehouse_app_spark.session import ensure_runtime_confs
+from lakehouse_app_spark.session import ensure_runtime_confs, width
 from lakehouse_app_spark.sources.layout import corpus_fingerprint
 from lakehouse_app_spark.sources.tables import load_tables, normalize_event_ts
 
@@ -157,26 +157,24 @@ def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None
 
 def bounded_replay(
     spark: SparkSession, writer: DataStreamWriter, name: str, *,
-    partitions: int = 2, final_no_data_batch: bool = True,
-    unload_state: bool | None = None,
+    final_no_data_batch: bool = True, unload_state: bool | None = None,
 ) -> None:
     """Run ``writer``'s stream to completion (``availableNow``) on a
     scratch checkpoint under scoped confs; the one bounded-replay
     primitive behind :func:`run_to_memory` and the foreachBatch sinks.
 
-    ``partitions`` scopes ``spark.sql.shuffle.partitions``, which pins
-    the state-store partition count of a fresh checkpoint (see
-    :func:`run_to_memory`).
+    A fresh checkpoint pins its state stores at the session width
+    (``session.width``).
 
     ``final_no_data_batch=False`` scopes
     ``spark.sql.streaming.noDataMicroBatches.enabled=false``, skipping
     the trailing watermark-advance batch — one whole micro-batch cycle
     of per-partition state-store open/commit for a bounded run whose
-    output it cannot change. OPT-IN PER KEY, only where the r14
-    interleaved content A/B (AB_NODATA_r14.json) proved the result
+    output it cannot change. OPT-IN PER KEY, only where the result is
     invariant: a key whose final emission rides ON the trailing batch
     (q_stream_state_timers' timer expiry, q_stream_late_data's
-    append-mode flush) must keep the default.
+    append-mode flush) must keep the default
+    (tests/test_streaming_semantics.py::test_trailing_batch_keys_diverge_without_it).
 
     ``unload_state`` (default: on exactly when the trailing batch is
     skipped) scopes ``spark.sql.streaming.stateStore.unloadOnCommit``:
@@ -200,7 +198,6 @@ def bounded_replay(
     The confs are session-global while the replay runs — safe for the
     engine's sequential one-query-at-a-time replays."""
     confs = {
-        "spark.sql.shuffle.partitions": str(partitions),
         "spark.sql.streaming.checkpointFileManagerClass": _FS_CHECKPOINT_MANAGER,
     }
     if not final_no_data_batch:
@@ -227,8 +224,7 @@ def bounded_replay(
 
 def run_to_memory(
     df: DataFrame, name_prefix: str, output_mode: str = "complete",
-    partitions: int = 2, final_no_data_batch: bool = True,
-    unload_state: bool | None = None,
+    final_no_data_batch: bool = True, unload_state: bool | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into
     a memory sink; return the result table.
@@ -239,23 +235,13 @@ def run_to_memory(
     replay result the caller has let go — like any batch result.
     Single-batch replays (``final_no_data_batch=False``) release their
     state stores on commit; see :func:`bounded_replay` for both flags.
-
-    State-store partition count is pinned per checkpoint at first
-    start; size it to the operator, not the batch shuffle default —
-    at deployment scale this is a per-stream capacity decision, not a
-    global conf. Default 2: each JVM state-store instance carries
-    startup + snapshot cost that dwarfs its share of a 100k-row
-    replay, so join/window state wants few stores. Python-stateful
-    streams (``applyInPandasWithState``) invert the trade-off — the
-    per-key work runs in Arrow-fed pandas workers, so parallelism
-    across partitions pays for the extra stores (measured 2→16
-    partitions: 3.1s → 1.2s on the sf0.1 replay)."""
+    State stores run at the session width."""
     spark = df.sparkSession
     name = f"{name_prefix}_{next(_counter)}"
     writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     try:
         bounded_replay(
-            spark, writer, name, partitions=partitions,
+            spark, writer, name,
             final_no_data_batch=final_no_data_batch, unload_state=unload_state,
         )
         return spark.table(name)
@@ -366,10 +352,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # partitions=8 from the r9 interleaved A/B {2,4,8,16}: session
-    # state merges parallelize across stores (0.97 s vs 1.15 s at the
-    # JVM-state default of 2); 16 regresses (store-init overhead).
-    out = run_to_memory(agg, "session", partitions=8, final_no_data_batch=False)
+    out = run_to_memory(agg, "session", final_no_data_batch=False)
     return out.select(
         "user_id",
         F.col("session_window.start").cast("timestamp_ntz").alias("session_start"),
@@ -445,12 +428,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id", "event_type", "minute", "ts_l")
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "minute"])
     )
-    # partitions=8 from the r9 interleaved A/B {2,4,8,16}: the dedup
-    # state store is written once per distinct key, and that write
-    # volume parallelizes (1.19 s vs 1.44 s at 2); 16 regresses.
     out = run_to_memory(
-        keyed, "stream_dedup", output_mode="append", partitions=8,
-        final_no_data_batch=False,
+        keyed, "stream_dedup", output_mode="append", final_no_data_batch=False,
     )
     return out.select(
         "user_id", "event_type", F.col("minute").cast("timestamp_ntz").alias("minute")
@@ -495,15 +474,14 @@ def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # few-key aggregate state wants few state stores (run_to_memory's
-    # partitions=2 rationale); the trailing no-data batch is skipped
-    # (bounded_replay's opt-in contract: COMPLETE mode appends the full
-    # snapshot every batch and the read-back takes the max batch_id, so
-    # the extra snapshot cannot change the result — AB_NODATA_r14
-    # content-verified)
+    # the trailing no-data batch is skipped (bounded_replay's opt-in
+    # contract): COMPLETE mode appends the full snapshot every batch and
+    # the read-back takes the max batch_id, so the extra snapshot cannot
+    # change the result (the keys whose result does ride on that batch
+    # are pinned by test_trailing_batch_keys_diverge_without_it)
     bounded_replay(
         spark, agg.writeStream.foreachBatch(write_batch).outputMode("complete"),
-        "foreach", partitions=2, final_no_data_batch=False,
+        "foreach", final_no_data_batch=False,
     )
     rb = spark.read.parquet(out_dir)
     final = rb.join(
@@ -560,15 +538,8 @@ def q_stream_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # partitions=8 from an interleaved A/B over {2,4,8,16} run both
-    # idle and under a 24-thread CPU hog (round-8, within-run
-    # protocol): idle medians 3.60/2.42/1.68/1.41 s, loaded medians
-    # 4.02/2.54/2.13/2.79 s. 16 wins only on an idle host and tripled
-    # on the contended round-7 driver host; 8 is within 0.3 s of the
-    # idle best and strictly fastest under load.
     return run_to_memory(
-        stateful, "user_state", output_mode="update", partitions=8,
-        final_no_data_batch=False,
+        stateful, "user_state", output_mode="update", final_no_data_batch=False,
     )
 
 
@@ -896,7 +867,7 @@ def q_stream_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # TWS-scoped store confs + run-to-completion via run_tws (defined
     # below with q_stream_state_timers, the other TWS query)
-    return run_tws(spark, stateful, "state_v2", partitions=16, final_no_data_batch=False)
+    return run_tws(spark, stateful, "state_v2", final_no_data_batch=False)
 
 
 # ------------------------------------------- streaming vector search
@@ -1168,7 +1139,7 @@ def run_ivf_segment_append(
     # its whole store-cycle (bounded_replay's opt-in contract)
     bounded_replay(
         spark, vstream.writeStream.foreachBatch(append_segment).outputMode("append"),
-        "ivf_append", partitions=2, final_no_data_batch=False,
+        "ivf_append", final_no_data_batch=False,
     )
     return spark.read.parquet(seg_dir)
 
@@ -1185,7 +1156,7 @@ def _staged_new_docs_dir(spark: SparkSession, sf_dir: str) -> str:
             .where(F.col("doc_id") % 10 == 7)
             # several files → the replay batch signs in parallel
             # (a 1-file stage would shingle single-threaded)
-            .repartition(8)
+            .repartition(width(spark))
             .write.mode("overwrite")
             .parquet(d)
         )
@@ -1346,7 +1317,7 @@ def q_stream_state_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_streaming_semantics.py pins the multi-batch label
     behavior explicitly)."""
     keyed = session_timeout_transform(spark, events_stream(spark, sf_dir))
-    return run_tws(spark, keyed, "state_timers", partitions=16)
+    return run_tws(spark, keyed, "state_timers")
 
 
 def session_timeout_transform(spark: SparkSession, stream: DataFrame) -> DataFrame:
@@ -1524,7 +1495,7 @@ def _staged_new_lineitem_dir(spark: SparkSession, sf_dir: str) -> str:
                 )
             )
             .select("l_orderkey", "l_quantity", "l_shipdate")
-            .repartition(4)
+            .repartition(width(spark))
             .write.mode("overwrite")
             .parquet(d)
         )
@@ -1653,14 +1624,11 @@ def q_stream_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    # few-key month aggregates want few shuffle partitions (the
-    # foreachBatch body runs under session confs, the
-    # q_stream_foreach_sink treatment); stateless enrich — the
-    # trailing no-data batch writes nothing, skip it (bounded_replay's
-    # opt-in contract)
+    # stateless enrich — the trailing no-data batch writes nothing,
+    # skip it (bounded_replay's opt-in contract)
     bounded_replay(
         spark, stream.writeStream.foreachBatch(process).outputMode("append"),
-        "pruned_join", partitions=4, final_no_data_batch=False,
+        "pruned_join", final_no_data_batch=False,
     )
     return spark.read.parquet(out_dir).select(
         "ship_month", "n_new", "new_qty", "n_base", "base_qty"
@@ -1668,7 +1636,7 @@ def q_stream_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_tws(
-    spark: SparkSession, keyed: DataFrame, name: str, partitions: int = 16,
+    spark: SparkSession, keyed: DataFrame, name: str,
     final_no_data_batch: bool = True,
 ) -> DataFrame:
     """Run a transformWithStateInPandas stream to completion under the
@@ -1688,7 +1656,7 @@ def run_tws(
     }
     with scoped_confs(spark, confs):
         return run_to_memory(
-            keyed, name, output_mode="update", partitions=partitions,
+            keyed, name, output_mode="update",
             final_no_data_batch=final_no_data_batch,
         )
 
@@ -1984,13 +1952,7 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("value_kept"),
         )
     )
-    # partitions=8 from an interleaved A/B over {1,2,4,8} at sf0.1
-    # (2.26/1.84/1.74/1.65 s min-of-3): the per-batch windowed agg
-    # shuffles ~3.4k (window × type) groups, so parallelism across
-    # state stores pays like q_stream_session's merge did
-    out = run_to_memory(
-        agg, "late_data", output_mode="append", partitions=8
-    )
+    out = run_to_memory(agg, "late_data", output_mode="append")
     surv = _flatten_window(
         out.where(F.col("event_type") != "zz_sentinel")
     )

@@ -26,7 +26,7 @@ load_all_queries()
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="lakehouse-app-spark-tests", shuffle_partitions=8)
+    s = get_spark(app_name="lakehouse-app-spark-tests")
     yield s
 
 

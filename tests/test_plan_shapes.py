@@ -708,18 +708,15 @@ def test_unigram_encode_corpus_pass_is_broadcast_join(spark, sf_dir):
 
 
 def test_spread_gates_on_actual_scan_width(spark, tmp_path):
-    """spread() must be a no-op when the scan ALREADY plans >=
-    shuffle.partitions partitions (the cluster-scale case) and keep
+    """spread() must be a no-op when the scan ALREADY plans >= the
+    session width's partitions (the cluster-scale case) and keep
     repartitioning narrow local scans (r6 verdict item 5). The probe
     is the real planned width, not the file count — Spark bin-packs
     small files into one FilePartition, so file count alone
     over-estimates (review r7)."""
-    from lakehouse_app_spark.operators.dedup import (
-        _spread_target,
-        spread,
-    )
+    from lakehouse_app_spark.operators.dedup import spread
 
-    npart = _spread_target(spark)
+    npart = spark.sparkContext.defaultParallelism
     wide_dir = str(tmp_path / "wide")
     spark.range(npart * 100).repartition(npart).write.parquet(wide_dir)
 

@@ -797,8 +797,7 @@ def test_layout_catalog_survives_process_restart(spark, sf_dir, tmp_path, monkey
         f"os.environ['SPARK_GRAFT_LAYOUT_DIR'] = {cat!r}\n"
         "from lakehouse_app_spark.session import get_spark\n"
         "from lakehouse_app_spark.sources.layout import derived_table\n"
-        "s = get_spark(app_name='layout-reuse-probe', master='local[2]',"
-        " shuffle_partitions=2)\n"
+        "s = get_spark(app_name='layout-reuse-probe', master='local[2]')\n"
         "def boom():\n"
         "    raise SystemExit('rebuilt in fresh process')\n"
         f"print('ROWS=' + str(derived_table(s, 't_restart', {sf_dir!r}, boom).count()))\n"

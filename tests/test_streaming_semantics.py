@@ -417,7 +417,7 @@ def test_tws_liststate_accumulates_across_micro_batches(spark, tmp_path):
         "RocksDBStateStoreProvider",
     )
     try:
-        res = run_to_memory(out, "tws_list", output_mode="update", partitions=2)
+        res = run_to_memory(out, "tws_list", output_mode="update")
         # update-mode memory sink keeps every emitted row and collect
         # order is not guaranteed — reduce to the final state per key
         # by max batch count
@@ -512,12 +512,7 @@ def test_tws_event_time_timers_across_micro_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    out = run_tws(
-        spark,
-        session_timeout_transform(spark, stream),
-        "tws_timer_test",
-        partitions=2,
-    )
+    out = run_tws(spark, session_timeout_transform(spark, stream), "tws_timer_test")
     got: dict = {}
     for r in out.collect():
         got.setdefault(r["user_id"], []).append(
@@ -741,7 +736,7 @@ def test_tws_initial_state_warm_start(spark, tmp_path):
     )
     res = {
         r["k"]: (r["n"], r["total"])
-        for r in run_tws(spark, out, "tws_warm", partitions=2).collect()
+        for r in run_tws(spark, out, "tws_warm").collect()
     }
     # warm-start + delta == full recompute; warm-only keys stay silent
     assert res == {1: (6, 115.0), 3: (1, 7.0)}, res
@@ -942,11 +937,11 @@ def test_late_data_key_drops_and_merges(spark, sf_dir, check_parity):
 def test_replay_confs_restored_when_checkpoint_creation_fails(
     spark, monkeypatch
 ):
-    """Every conf a bounded replay scopes — run_to_memory's partition
-    width, checkpoint manager, no-data-batch and state-unload
-    switches, and run_tws's RocksDB layer above them — is back to its
-    prior value (or unset) when the replay fails before its stream
-    starts."""
+    """Every conf a bounded replay scopes — checkpoint manager,
+    no-data-batch and state-unload switches, and run_tws's RocksDB
+    layer above them — is back to its prior value (or unset) when the
+    replay fails before its stream starts, and the session width it
+    does not scope is untouched."""
     import tempfile
 
     from lakehouse_app_spark.streaming.stream_queries import (
@@ -972,10 +967,10 @@ def test_replay_confs_restored_when_checkpoint_creation_fails(
     stream = spark.readStream.format("rate").load()
     monkeypatch.setattr(tempfile, "mkdtemp", no_checkpoint)
     with pytest.raises(OSError, match="checkpoint root"):
-        run_to_memory(stream, "ckpt_fail", partitions=3, final_no_data_batch=False)
+        run_to_memory(stream, "ckpt_fail", final_no_data_batch=False)
     assert {k: spark.conf.get(k, None) for k in keys} == before
     with pytest.raises(OSError, match="checkpoint root"):
-        run_tws(spark, stream, "ckpt_fail_tws", partitions=3, final_no_data_batch=False)
+        run_tws(spark, stream, "ckpt_fail_tws", final_no_data_batch=False)
     assert {k: spark.conf.get(k, None) for k in keys} == before
 
 

@@ -1,0 +1,100 @@
+"""The session's one parallelism width (``session.width``, the cores):
+table loads set the shuffle width to it, bounded replays run their
+state stores at it, and a guard that no module picks a width of its
+own again."""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+import time
+
+from lakehouse_app_spark import session
+
+PKG = pathlib.Path(session.__file__).parent
+ROOT = PKG.parent
+WIDTH_CONF = "spark.sql.shuffle.partitions"
+REPLAY_HELPERS = {"bounded_replay", "run_to_memory", "run_tws"}
+
+
+def test_load_tables_sets_the_session_width(spark, sf_dir):
+    """A session handed in with its own shuffle width (the driver's)
+    runs at the cores once its tables load."""
+    from lakehouse_app_spark.sources.tables import load_tables
+
+    caller = spark.newSession()  # its own confs and table memo
+    caller.conf.set(WIDTH_CONF, "7")
+    load_tables(caller, sf_dir)
+    assert int(caller.conf.get(WIDTH_CONF)) == spark.sparkContext.defaultParallelism
+
+
+def test_stateful_replay_runs_state_stores_at_session_width(spark, tmp_path):
+    """A bounded replay scopes no width: a fresh checkpoint pins its
+    state stores at the session width."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from lakehouse_app_spark.streaming.stream_queries import run_to_memory
+
+    stores: list[int] = []
+
+    class Probe(StreamingQueryListener):
+        def onQueryStarted(self, e):
+            pass
+
+        def onQueryProgress(self, e):
+            ops = e.progress.stateOperators
+            if ops:
+                stores.append(ops[0].numShufflePartitions)
+
+        def onQueryIdle(self, e):
+            pass
+
+        def onQueryTerminated(self, e):
+            pass
+
+    src = str(tmp_path / "src")
+    spark.range(40).selectExpr("id % 5 AS k").write.parquet(src)
+    session.ensure_runtime_confs(spark)
+    probe = Probe()
+    spark.streams.addListener(probe)
+    try:
+        stream = spark.readStream.schema("k long").parquet(src)
+        out = run_to_memory(stream.groupBy("k").count(), "width_probe")
+        assert out.count() == 5
+        for _ in range(40):  # listener callbacks are async
+            if stores:
+                break
+            time.sleep(0.25)
+    finally:
+        spark.streams.removeListener(probe)
+    assert stores and set(stores) == {spark.sparkContext.defaultParallelism}, stores
+
+
+def _sources():
+    yield from PKG.rglob("*.py")
+    yield from (ROOT / "tests").glob("*.py")
+    yield ROOT / "bench.py"
+
+
+def test_no_module_picks_a_width():
+    """Only session.py names the shuffle-width conf, and no call passes
+    a width to a replay helper."""
+    found = set()
+    for path in _sources():
+        rel = path.relative_to(ROOT).as_posix()
+        in_pkg = path.is_relative_to(PKG)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                in_pkg and rel != "lakehouse_app_spark/session.py"
+                and isinstance(node, ast.Constant) and isinstance(node.value, str)
+                and WIDTH_CONF in node.value
+            ):
+                found.add((rel, node.lineno, WIDTH_CONF))
+            elif isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                if name in REPLAY_HELPERS and any(
+                    k.arg == "partitions" for k in node.keywords
+                ):
+                    found.add((rel, node.lineno, name))
+    assert found == set()
