@@ -167,10 +167,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    return run_to_memory(
-        enriched, "stream_static", output_mode="append",
-        final_no_data_batch=False,
-    )
+    return run_to_memory(enriched, "stream_static", output_mode="append")
 
 
 @query(

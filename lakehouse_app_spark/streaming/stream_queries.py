@@ -157,7 +157,7 @@ def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None
 
 def bounded_replay(
     spark: SparkSession, writer: DataStreamWriter, name: str, *,
-    final_no_data_batch: bool = True, unload_state: bool | None = None,
+    final_no_data_batch: bool = True,
 ) -> None:
     """Run ``writer``'s stream to completion (``availableNow``) on a
     scratch checkpoint under scoped confs; the one bounded-replay
@@ -166,23 +166,25 @@ def bounded_replay(
     A fresh checkpoint pins its state stores at the session width
     (``session.width``).
 
-    ``final_no_data_batch=False`` scopes
-    ``spark.sql.streaming.noDataMicroBatches.enabled=false``, skipping
-    the trailing watermark-advance batch — one whole micro-batch cycle
-    of per-partition state-store open/commit for a bounded run whose
-    output it cannot change. OPT-IN PER KEY, only where the result is
-    invariant: a key whose final emission rides ON the trailing batch
-    (q_stream_state_timers' timer expiry, q_stream_late_data's
-    append-mode flush) must keep the default
-    (tests/test_streaming_semantics.py::test_trailing_batch_keys_diverge_without_it).
+    Spark runs a trailing no-data micro-batch only when a watermarked
+    stateful operator asks for one to advance its watermark: the
+    interval join (q_stream_join, q_stream_join_outer), q_stream_late_data,
+    q_stream_state_timers and q_stream_dedup. The first three emit on it
+    (null-extended rows, the append-mode flush, timer expiry), so they
+    keep it (tests/test_streaming_semantics.py::test_trailing_batch_keys_diverge_without_it).
+    q_stream_dedup's output cannot change on it, so it alone passes
+    ``final_no_data_batch=False``, which scopes
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false``.
 
-    ``unload_state`` (default: on exactly when the trailing batch is
-    skipped) scopes ``spark.sql.streaming.stateStore.unloadOnCommit``:
-    a one-data-batch replay closes its state-store providers when its
-    tasks commit, instead of leaving them loaded — pointing at a
-    deleted checkpoint — until the maintenance sweep. A replay of
-    several data batches passes ``False``: every batch would reload
-    its state from the checkpoint.
+    The replay's state-store providers are closed (``StateStore.unloadAll``)
+    before its checkpoint is deleted, on success or failure: a provider
+    left loaded over a deleted checkpoint fails Spark's next maintenance
+    tick, whose error handler then closes the stores of whatever replay
+    is in flight. The call reaches them because a replay's checkpoint
+    is a local scratch dir, so it runs in local mode, where the state
+    stores live in the driver JVM. Closing every loaded provider
+    requires that no other stateful stream is running in the JVM, the
+    same sequential-replay condition the scoped confs rely on.
 
     The checkpoint is written through Hadoop's FileSystem API
     (``FileSystemBasedCheckpointFileManager``), not the default
@@ -202,10 +204,6 @@ def bounded_replay(
     }
     if not final_no_data_batch:
         confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    if unload_state is None:
-        unload_state = not final_no_data_batch
-    if unload_state:
-        confs["spark.sql.streaming.stateStore.unloadOnCommit"] = "true"
     with scoped_confs(spark, confs):
         ckpt = tempfile.mkdtemp(prefix=f"ckpt_{name}_", dir=_checkpoint_root())
         try:
@@ -216,6 +214,8 @@ def bounded_replay(
                 .awaitTermination()
             )
         finally:
+            state = spark.sparkContext._jvm.org.apache.spark.sql.execution.streaming.state
+            getattr(getattr(state, "StateStore$"), "MODULE$").unloadAll()
             # the replay ran to completion and its result lives in the
             # sink — the checkpoint's WAL/state tree is dead weight in
             # the RAM-backed scratch dir; reclaim it
@@ -224,7 +224,7 @@ def bounded_replay(
 
 def run_to_memory(
     df: DataFrame, name_prefix: str, output_mode: str = "complete",
-    final_no_data_batch: bool = True, unload_state: bool | None = None,
+    final_no_data_batch: bool = True,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (availableNow) into
     a memory sink; return the result table.
@@ -233,17 +233,12 @@ def run_to_memory(
     analyzed plan holds the sink, so the temp view the memory sink
     registers is dropped before returning and the session keeps no
     replay result the caller has let go — like any batch result.
-    Single-batch replays (``final_no_data_batch=False``) release their
-    state stores on commit; see :func:`bounded_replay` for both flags.
-    State stores run at the session width."""
+    See :func:`bounded_replay` for ``final_no_data_batch``."""
     spark = df.sparkSession
     name = f"{name_prefix}_{next(_counter)}"
     writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
     try:
-        bounded_replay(
-            spark, writer, name,
-            final_no_data_batch=final_no_data_batch, unload_state=unload_state,
-        )
+        bounded_replay(spark, writer, name, final_no_data_batch=final_no_data_batch)
         return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
@@ -286,7 +281,7 @@ def tumbling_agg(events: DataFrame) -> DataFrame:
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows × event_type (stream == batch check)."""
     agg = tumbling_agg(events_stream(spark, sf_dir))
-    return _flatten_window(run_to_memory(agg, "tumbling", final_no_data_batch=False))
+    return _flatten_window(run_to_memory(agg, "tumbling"))
 
 
 @query(
@@ -315,7 +310,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour", "30 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    return _flatten_window(run_to_memory(agg, "sliding", final_no_data_batch=False))
+    return _flatten_window(run_to_memory(agg, "sliding"))
 
 
 @query(
@@ -352,7 +347,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    out = run_to_memory(agg, "session", final_no_data_batch=False)
+    out = run_to_memory(agg, "session")
     return out.select(
         "user_id",
         F.col("session_window.start").cast("timestamp_ntz").alias("session_start"),
@@ -474,14 +469,9 @@ def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    # the trailing no-data batch is skipped (bounded_replay's opt-in
-    # contract): COMPLETE mode appends the full snapshot every batch and
-    # the read-back takes the max batch_id, so the extra snapshot cannot
-    # change the result (the keys whose result does ride on that batch
-    # are pinned by test_trailing_batch_keys_diverge_without_it)
     bounded_replay(
         spark, agg.writeStream.foreachBatch(write_batch).outputMode("complete"),
-        "foreach", final_no_data_batch=False,
+        "foreach",
     )
     rb = spark.read.parquet(out_dir)
     final = rb.join(
@@ -538,9 +528,7 @@ def q_stream_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_to_memory(
-        stateful, "user_state", output_mode="update", final_no_data_batch=False,
-    )
+    return run_to_memory(stateful, "user_state", output_mode="update")
 
 
 @query(
@@ -576,7 +564,7 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("total_value").desc(), F.col("user_id"))
         .limit(10)
     )
-    return run_to_memory(ranked, "topk", output_mode="complete", final_no_data_batch=False)
+    return run_to_memory(ranked, "topk", output_mode="complete")
 
 
 # NOTE: Spark 4's transformWithStateInPandas (the
@@ -867,7 +855,7 @@ def q_stream_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # TWS-scoped store confs + run-to-completion via run_tws (defined
     # below with q_stream_state_timers, the other TWS query)
-    return run_tws(spark, stateful, "state_v2", final_no_data_batch=False)
+    return run_tws(spark, stateful, "state_v2")
 
 
 # ------------------------------------------- streaming vector search
@@ -1016,7 +1004,7 @@ def q_stream_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("hits")
         )
     )
-    out = run_to_memory(top, "stream_vs", output_mode="complete", final_no_data_batch=False)
+    out = run_to_memory(top, "stream_vs", output_mode="complete")
     return out.select("qid", F.explode("hits").alias("h")).select(
         "qid", F.col("h.v").alias("vec_id"), F.col("h.s").alias("sim")
     )
@@ -1134,12 +1122,9 @@ def run_ivf_segment_append(
         ).select("vec_id", "emb", "cid")
         assigned.write.mode("append").partitionBy("cid").parquet(seg_dir)
 
-    # stateless per-batch assignment: the trailing no-data batch can
-    # write nothing (foreachBatch is not even invoked for it) — skip
-    # its whole store-cycle (bounded_replay's opt-in contract)
     bounded_replay(
         spark, vstream.writeStream.foreachBatch(append_segment).outputMode("append"),
-        "ivf_append", final_no_data_batch=False,
+        "ivf_append",
     )
     return spark.read.parquet(seg_dir)
 
@@ -1199,7 +1184,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_sig = _with_mh_sig(spark.readStream.schema(schema).parquet(staged))
     corpus = minhash_sig_table(spark, sf_dir).where(F.col("doc_id") % 10 != 7)
     joined = _incremental_pairs(new_sig, F.broadcast(corpus))
-    return run_to_memory(joined, "stream_inc_dedup", output_mode="append", final_no_data_batch=False)
+    return run_to_memory(joined, "stream_inc_dedup", output_mode="append")
 
 
 # ------------------------------------------- streaming media decode
@@ -1233,8 +1218,7 @@ def q_stream_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(path).schema
     stream = spark.readStream.schema(schema).parquet(path)
     return run_to_memory(
-        decode_wav_features(stream), "media_decode", output_mode="append",
-        final_no_data_batch=False,
+        decode_wav_features(stream), "media_decode", output_mode="append"
     )
 
 
@@ -1624,21 +1608,16 @@ def q_stream_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    # stateless enrich — the trailing no-data batch writes nothing,
-    # skip it (bounded_replay's opt-in contract)
     bounded_replay(
         spark, stream.writeStream.foreachBatch(process).outputMode("append"),
-        "pruned_join", final_no_data_batch=False,
+        "pruned_join",
     )
     return spark.read.parquet(out_dir).select(
         "ship_month", "n_new", "new_qty", "n_base", "base_qty"
     )
 
 
-def run_tws(
-    spark: SparkSession, keyed: DataFrame, name: str,
-    final_no_data_batch: bool = True,
-) -> DataFrame:
+def run_tws(spark: SparkSession, keyed: DataFrame, name: str) -> DataFrame:
     """Run a transformWithStateInPandas stream to completion under the
     TWS-scoped store confs, restored after: RocksDB is REQUIRED by the
     API; row-count tracking is a per-batch full-store scan a bounded
@@ -1655,10 +1634,7 @@ def run_tws(
         "enabled": "false",
     }
     with scoped_confs(spark, confs):
-        return run_to_memory(
-            keyed, name, output_mode="update",
-            final_no_data_batch=final_no_data_batch,
-        )
+        return run_to_memory(keyed, name, output_mode="update")
 
 
 # ---------------------------------------- streaming change-feed apply
@@ -1736,12 +1712,7 @@ def q_stream_change_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(dn).alias("dn"),
         F.sum(sign * to_i(F.col("o_totalprice"))).alias("ds"),
     )
-    # maxFilesPerTrigger=1 makes this a multi-batch replay: keep its
-    # state stores loaded between batches (bounded_replay's unload_state)
-    out = run_to_memory(
-        dagg, "cdf_apply", output_mode="complete", final_no_data_batch=False,
-        unload_state=False,
-    )
+    out = run_to_memory(dagg, "cdf_apply", output_mode="complete")
     merged = mv0.join(out, "o_custkey", "left").select(
         "o_custkey",
         (F.col("n0") + F.coalesce(F.col("dn"), F.lit(0))).alias("n_orders"),

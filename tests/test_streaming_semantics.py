@@ -10,6 +10,8 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from lakehouse_app_spark import QUERIES
+
 
 def _write_batch(spark, path, rows):
     spark.createDataFrame(rows, "event_id long, ts timestamp, v double").coalesce(
@@ -938,10 +940,10 @@ def test_replay_confs_restored_when_checkpoint_creation_fails(
     spark, monkeypatch
 ):
     """Every conf a bounded replay scopes — checkpoint manager,
-    no-data-batch and state-unload switches, and run_tws's RocksDB
-    layer above them — is back to its prior value (or unset) when the
-    replay fails before its stream starts, and the session width it
-    does not scope is untouched."""
+    no-data-batch switch, and run_tws's RocksDB layer above them — is
+    back to its prior value (or unset) when the replay fails before its
+    stream starts, and the session width and state-unload switch it
+    does not scope are untouched."""
     import tempfile
 
     from lakehouse_app_spark.streaming.stream_queries import (
@@ -970,7 +972,7 @@ def test_replay_confs_restored_when_checkpoint_creation_fails(
         run_to_memory(stream, "ckpt_fail", final_no_data_batch=False)
     assert {k: spark.conf.get(k, None) for k in keys} == before
     with pytest.raises(OSError, match="checkpoint root"):
-        run_tws(spark, stream, "ckpt_fail_tws", final_no_data_batch=False)
+        run_tws(spark, stream, "ckpt_fail_tws")
     assert {k: spark.conf.get(k, None) for k in keys} == before
 
 
@@ -1021,15 +1023,70 @@ def test_trailing_batch_keys_diverge_without_it(spark, monkeypatch, key):
 
     replay = stream_queries.bounded_replay
 
-    def without_trailing_batch(*args, unload_state=None, **kw):
-        # flip only the trailing batch; keep the state stores loaded
-        # across the data batches as the key's own call would
+    def without_trailing_batch(*args, **kw):
         kw["final_no_data_batch"] = False
-        return replay(*args, unload_state=bool(unload_state), **kw)
+        return replay(*args, **kw)
 
     monkeypatch.setattr(stream_queries, "bounded_replay", without_trailing_batch)
     with pytest.raises(AssertionError):
         assert_frames_match(QUERIES[key](spark, sf_dir).toPandas(), want, key)
+
+
+NO_INPUT_BATCH_KEYS = {
+    "q_stream_join", "q_stream_join_outer", "q_stream_late_data",
+    "q_stream_state_timers",
+}
+
+
+@pytest.mark.parametrize(
+    "key", sorted(k for k in QUERIES if k.startswith("q_stream_"))
+)
+def test_replay_closes_its_state_stores(spark, sf_dir, key):
+    """Only the keys whose output rides on a trailing batch (the
+    interval join, q_stream_late_data, q_stream_state_timers) run a
+    micro-batch without input, and no state-store provider is still
+    loaded once a key returns: its checkpoint is gone by then, so a
+    loaded provider would fail Spark's next maintenance tick."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from lakehouse_app_spark.runtime_cache import forget
+
+    seen = {"started": 0, "terminated": 0, "no_input": 0}
+
+    class Probe(StreamingQueryListener):
+        def onQueryStarted(self, e):
+            seen["started"] += 1
+
+        def onQueryProgress(self, e):
+            seen["no_input"] += e.progress.numInputRows == 0
+
+        def onQueryIdle(self, e):
+            pass
+
+        def onQueryTerminated(self, e):
+            seen["terminated"] += 1
+
+    # the interval-join pair serves a memoized sink, and a build that
+    # ran no replay memoizes its plan: forget both so the replay runs
+    forget("stream.interval_sink", sf_dir, spark=spark)
+    forget("plans", (sf_dir, key), spark=spark)
+    probe = Probe()
+    spark.streams.addListener(probe)
+    try:
+        QUERIES[key](spark, sf_dir)
+        for _ in range(40):  # listener callbacks are async
+            if seen["started"] and seen["terminated"] == seen["started"]:
+                break
+            time.sleep(0.25)
+    finally:
+        spark.streams.removeListener(probe)
+    assert seen["started"] and seen["terminated"] == seen["started"], seen
+    assert bool(seen["no_input"]) == (key in NO_INPUT_BATCH_KEYS), seen
+    loaded = spark.sparkContext._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.execution.streaming.state.StateStore$"
+    ).getDeclaredField("loadedProviders")
+    loaded.setAccessible(True)
+    assert loaded.get(None).size() == 0
 
 
 def test_events_schema_read_once_per_file_version(spark, tmp_path):

@@ -1,7 +1,8 @@
 """The session's one parallelism width (``session.width``, the cores):
 table loads set the shuffle width to it, bounded replays run their
 state stores at it, and a guard that no module picks a width of its
-own again."""
+own again, nor a replay shape beyond q_stream_dedup's skipped trailing
+batch."""
 
 from __future__ import annotations
 
@@ -97,4 +98,36 @@ def test_no_module_picks_a_width():
                     k.arg == "partitions" for k in node.keywords
                 ):
                     found.add((rel, node.lineno, name))
+    assert found == set()
+
+
+def _calls_by_function(tree: ast.AST, fn: str | None = None):
+    """Every call in ``tree`` with the name of its innermost enclosing
+    function (None at module level)."""
+    for node in ast.iter_child_nodes(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield from _calls_by_function(node, node.name)
+            continue
+        if isinstance(node, ast.Call):
+            yield fn, node
+        yield from _calls_by_function(node, fn)
+
+
+def test_no_call_picks_a_replay_shape():
+    """No call passes ``unload_state=`` (every replay closes its state
+    stores in one teardown), and in the engine only q_stream_dedup
+    chooses ``final_no_data_batch=``; a helper that takes the flag may
+    forward it. Tests pass the flag to exercise the switch itself."""
+    found = set()
+    for path in _sources():
+        rel = path.relative_to(ROOT).as_posix()
+        in_tests = path.parent.name == "tests"
+        for fn, call in _calls_by_function(ast.parse(path.read_text())):
+            for k in call.keywords:
+                forwarded = isinstance(k.value, ast.Name) and k.value.id == k.arg
+                if k.arg == "unload_state" or (
+                    k.arg == "final_no_data_batch" and not in_tests
+                    and fn != "q_stream_dedup" and not forwarded
+                ):
+                    found.add((rel, call.lineno, fn, k.arg))
     assert found == set()
