@@ -3,8 +3,8 @@ reference's notebook console (`Lakehouse Apps console.py:6-39`,
 which drives list/create/deploy by hand): list the declared query
 surface, run any query against a scale-factor directory, show its
 optimized physical plan, print its DuckDB oracle, check every key
-against its oracle through the ``__spark_entry__`` contract, or run
-the sf1 scale study.
+against its oracle through the ``__spark_entry__`` contract, or time
+the sf1 scale subset with ``bench.py``.
 
 Usage:
     python -m lakehouse_app_spark list
@@ -30,6 +30,7 @@ on any mismatch, error or unknown key.
 from __future__ import annotations
 
 import argparse
+import importlib
 import os
 import sys
 import traceback
@@ -94,13 +95,17 @@ def _drive_key(name, query, oracle, spark, sf_dir, con) -> tuple[bool, str]:
     return True, f"{len(got):7d} rows  MATCH"
 
 
+def _from_root(module: str):
+    """Import a module that lives at the checkout root, not in the package."""
+    if ROOT not in sys.path:
+        sys.path.insert(0, ROOT)
+    return importlib.import_module(module)
+
+
 def _drive(args, spark) -> int:
     from lakehouse_app_spark.parity import oracle_connection
 
-    if ROOT not in sys.path:
-        sys.path.insert(0, ROOT)
-    import __spark_entry__ as e
-
+    e = _from_root("__spark_entry__")
     if spark is None:
         spark = _bare_session(args.perturbed)
     q, o = e.queries(), e.oracle_sql()
@@ -184,16 +189,16 @@ def main(argv: list[str] | None = None, spark=None) -> int:
         print(ORACLES[args.query])
         return 0
 
+    if args.cmd == "scale":
+        from lakehouse_app_spark.scale import COPIES, KEYS, build_corpus
+
+        dst = os.path.join(ROOT, "spark-warehouse", "scale_sf1")
+        build_corpus(SCALE_SRC, dst, COPIES)
+        return _from_root("bench").main(KEYS, dst, os.path.join(ROOT, "SCALE_SF1.json"))
     if spark is None:
         from lakehouse_app_spark import get_spark
 
         spark = get_spark()
-    if args.cmd == "scale":
-        from lakehouse_app_spark.scale import run_study
-
-        run_study(spark, SCALE_SRC, os.path.join(ROOT, "spark-warehouse", "scale_sf1"),
-                  os.path.join(ROOT, "SCALE_SF1.json"))
-        return 0
     if args.cmd == "explain":
         return _explain(args, spark)
     QUERIES[args.query](spark, args.sf_dir).show(args.rows, truncate=False)

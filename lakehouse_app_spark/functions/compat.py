@@ -70,10 +70,18 @@ def fpsum(col: Column | str, alias: str, scale: int = 10000) -> Column:
 def fp_long_sum(col: Column | str, scale: int = 10000) -> Column:
     """The scaled-long accumulation at :func:`fpsum`'s core, undivided
     and unaliased — for callers composing it further (e.g. fixed-point
-    averages dividing by a count). ONE copy of the +0.5-truncate
-    recipe."""
+    averages dividing by a count)."""
+    return F.sum(fp_long(col, scale))
+
+
+def fp_long(col: Column | str, scale: int = 10000) -> Column:
+    """The per-row integerizer of :func:`fpsum`: ``CAST(x*scale + 0.5
+    AS LONG)`` — ONE copy of the +0.5-truncate recipe, for callers
+    that sum signed or staged integers themselves. Same non-negative
+    fixed-point precondition; the oracle side is
+    ``CAST(round(x * scale) AS BIGINT)``."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum((c * scale + F.lit(0.5)).cast("long"))
+    return (c * scale + F.lit(0.5)).cast("long")
 
 
 def fpsum_sql(expr: str, alias: str, scale: int = 10000) -> str:

@@ -588,8 +588,8 @@ def q_pq_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition still sorted its candidate rows. A LONG min buffer is
     # hash-aggregable: the plan is HashAggregate→Exchange→
     # HashAggregate with no sort anywhere (guide §2.3
-    # aggregate-before-shuffle; plan diff in
-    # plans/r15/q_pq_quantize_{before,after}.txt)
+    # aggregate-before-shuffle; see the plan with
+    # `python -m lakehouse_app_spark explain q_pq_quantize`)
     enc = F.round(F.col("dist") * 1e6).cast("long") * 16 + F.col("cid")
     best = d.groupBy("vec_id", "j").agg(F.min(enc).alias("e"))
     b_dist = F.shiftright(F.col("e"), 4).cast("double") / 1e6

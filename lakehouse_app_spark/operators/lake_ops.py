@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakehouse_app_spark.functions.compat import fp_long, fpsum
 from lakehouse_app_spark.registry import query
 from lakehouse_app_spark.sources.tables import load_tables
 
@@ -475,18 +476,7 @@ def _ensure_zorder16(
         ).repartitionByRange(16, "zval"),
     )
     path = layout_path("li_zorder16", sf_dir)
-    mpath = os.path.join(path, "_stats_nd.json")
-    fresh = not os.path.exists(mpath)
-    if not fresh:
-        # a pre-r14 manifest ({col: [lo, hi]} entries, no row/null
-        # counts) still prunes correctly but can't serve
-        # q_metadata_only_agg — upgrade it in place
-        import json as _json
-
-        with open(mpath) as fh:
-            entries = _json.load(fh)["files"].values()
-        fresh = any("rows" not in e for e in entries)
-    if fresh:
+    if not os.path.exists(os.path.join(path, "_stats_nd.json")):
         write_stats_manifest_nd(spark, path, ["l_partkey", "l_suppkey"])
     return path
 
@@ -615,11 +605,7 @@ def q_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            (
-                F.sum(F.round(F.col("l_extendedprice") * 10000).cast("bigint"))
-                .cast("double")
-                / 10000.0
-            ).alias("sum_price"),
+            fpsum("l_extendedprice", "sum_price"),
         )
     )
 
@@ -985,14 +971,7 @@ def q_zorder_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("l_returnflag")
             .agg(
                 F.count(F.lit(1)).alias("n"),
-                (
-                    F.sum(
-                        F.round(F.col("l_extendedprice") * 10000).cast(
-                            "bigint"
-                        )
-                    ).cast("double")
-                    / 10000.0
-                ).alias("sum_price"),
+                fpsum("l_extendedprice", "sum_price"),
             )
             .select(F.lit(state).alias("state"), "l_returnflag", "n",
                     "sum_price")
@@ -1142,7 +1121,6 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-image's integer cancels its base row bit-exactly."""
     from lakehouse_app_spark.sources.sinks import read_snapshot
 
-    to_i = lambda c: (c * 10000 + F.lit(0.5)).cast("long")  # noqa: E731
     path, feed_dir = _cdc_orders_lineage(spark, sf_dir)
     # the stored materialized view over v0
     mv0 = (
@@ -1150,7 +1128,7 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n0"),
-            F.sum(to_i(F.col("o_totalprice"))).alias("s0"),
+            F.sum(fp_long("o_totalprice")).alias("s0"),
         )
     )
     # stored CDF rows → signed per-customer adjustments (commit-sized)
@@ -1163,7 +1141,7 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(0)
     dagg = feed.groupBy("o_custkey").agg(
         F.sum(dn).alias("dn"),
-        F.sum(sign * to_i(F.col("o_totalprice"))).alias("ds"),
+        F.sum(sign * fp_long("o_totalprice")).alias("ds"),
     )
     merged = mv0.join(dagg, "o_custkey", "left").select(
         "o_custkey",
@@ -1235,11 +1213,7 @@ def q_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_returnflag")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            (
-                F.sum(F.round(F.col("l_extendedprice") * 10000).cast("bigint"))
-                .cast("double")
-                / 10000.0
-            ).alias("sum_price"),
+            fpsum("l_extendedprice", "sum_price"),
         )
     )
 

@@ -733,8 +733,8 @@ def q_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate-and-broadcast-back form re-derived `vals` from a
     # SECOND orders scan because the subtree feeds two consumers and
     # Spark does not de-duplicate it (guide §7.2 duplicated subtrees;
-    # r14 optimization — 2 scans → 1, 4 Exchanges → 2, plan diff in
-    # plans/r14/q_drift_ks_{before,after}.txt)
+    # r14 optimization — 2 scans → 1, 4 Exchanges → 2; see the plan
+    # with `python -m lakehouse_app_spark explain q_drift_ks`)
     w = (
         Window.partitionBy("category")
         .orderBy("v")
@@ -900,8 +900,8 @@ def q_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-derived `bc` (scan + reference-minmax broadcast + bin
     # aggregate) from a SECOND pair of scans because the subtree
     # feeds two consumers (guide §7.2 duplicated subtrees; r14
-    # optimization — 4 scans → 2, plan diff in
-    # plans/r14/q_drift_psi_{before,after}.txt). The unavoidable two
+    # optimization — 4 scans → 2; see the plan with
+    # `python -m lakehouse_app_spark explain q_drift_psi`). The unavoidable two
     # passes are reference min/max then binning; everything after is
     # a ≤|categories|×PSI_BINS-row window.
     w_cat = Window.partitionBy("category").rowsBetween(

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_app_spark.functions.compat import DEC, dsum, fpsum
+from lakehouse_app_spark.functions.compat import DEC, dsum, fp_long, fp_long_sum, fpsum
 from lakehouse_app_spark.registry import query
 from lakehouse_app_spark.runtime_cache import scoped_persist
 from lakehouse_app_spark.sources.tables import load_tables
@@ -92,9 +92,7 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     big_orders = (
         t.lineitem.groupBy("l_orderkey")
-        .agg(
-            F.sum((F.col("l_quantity") * 10000 + F.lit(0.5)).cast("long")).alias("qty")
-        )
+        .agg(fp_long_sum("l_quantity").alias("qty"))
         .where(F.col("qty") > 1400000)
         .select(F.col("l_orderkey").alias("big_orderkey"))
     )
@@ -1116,10 +1114,7 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(first_nation), F.col("n_name") == F.col("fn"))
         .select("s_suppkey")
     )
-    vi = (
-        (F.col("ps_supplycost") * F.col("ps_availqty") * 10000 + F.lit(0.5))
-        .cast("long")
-    )
+    vi = fp_long(F.col("ps_supplycost") * F.col("ps_availqty"))
     scoped = ps.join(
         F.broadcast(sup_scope), F.col("ps_suppkey") == F.col("s_suppkey")
     ).select("ps_partkey", vi.alias("vi")).transform(scoped_persist)

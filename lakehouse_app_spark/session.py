@@ -56,9 +56,7 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     prepends sparkPythonPath (the zips) ahead of user PYTHONPATH at
     worker launch, so the zip still wins resolution, while the env
     mutation re-keys the daemon worker pool and forfeits warm
-    workers (A/B: floor 1.94-2.01 s stock vs 2.12-2.46 s injected).
-    The tws_floor_sec instrument in bench.py stays the honest
-    decomposition."""
+    workers (A/B: floor 1.94-2.01 s stock vs 2.12-2.46 s injected)."""
     confs = {**RUNTIME_CONFS, "spark.sql.shuffle.partitions": str(width(spark))}
     for k, v in confs.items():
         try:

@@ -328,8 +328,8 @@ def read_snapshot(
     """Time-travel read: the given committed version, or the latest
     one when ``version`` is None. Uncommitted ``v=*`` directories
     (no manifest) are invisible. The data format comes from the
-    version's own manifest (pre-format manifests default to
-    parquet), so mixed-format histories read transparently.
+    version's own manifest, so mixed-format histories read
+    transparently.
 
     MERGE-ON-READ resolution: a version committed by
     [[delete_where_mor]] carries no data directory — its manifest
@@ -350,7 +350,7 @@ def read_snapshot(
     if len(dv_keys) > 1:
         raise ValueError(f"mixed dv_key along base chain of v{version} in {path}")
     dv_key = next(iter(dv_keys), None)
-    fmt = man.get("format", "parquet")
+    fmt = man["format"]
     # Memoized relation handle (r14 optimization): a committed
     # version's data directory is immutable, so re-running
     # spark.read per call re-paid file listing + parquet footer
@@ -626,7 +626,7 @@ def delete_where_mor(
         {
             "note": note,
             "rows": None,
-            "format": head_man.get("format", "parquet"),
+            "format": head_man["format"],
             "base": head,
             "dv_key": key_col,
         },
@@ -654,7 +654,7 @@ def apply_deletion_vectors(
         read_snapshot(spark, path, head),
         path,
         note=note,
-        fmt=chain[-1][1].get("format", "parquet"),
+        fmt=chain[-1][1]["format"],
     )
 
 
@@ -781,7 +781,7 @@ def write_snapshot_checked(df: DataFrame, path: str, checks: dict, note: str = "
 
 
 def write_stats_manifest_nd(
-    spark: SparkSession, path: str, key_cols: list[str], fmt: str = "parquet"
+    spark: SparkSession, path: str, key_cols: list[str]
 ) -> dict:
     """Multi-column per-file (min, max) stats for the table at
     ``path``, written as ``_stats_nd.json`` — the N-dimensional
@@ -806,7 +806,7 @@ def write_stats_manifest_nd(
     (Decimal) is parsed back to a number instead of the lexicographic
     comparison that would prune '9' > '10' (advice r13)."""
 
-    df = spark.read.format(fmt).load(path)
+    df = spark.read.parquet(path)
     types = {c: df.schema[c].dataType.typeName() for c in key_cols}
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for c in key_cols:
@@ -840,21 +840,19 @@ def read_stats_pruned_nd(
     spark: SparkSession,
     path: str,
     bounds: dict | None = None,
-    fmt: str = "parquet",
     require_non_null: list[str] | None = None,
     require_null: list[str] | None = None,
 ) -> DataFrame:
     """Read only the files whose per-column stats ranges intersect
     EVERY [lo, hi] interval in ``bounds`` (col -> (lo, hi), closed)
-    per the ``_stats_nd.json`` manifest — and, when the manifest
-    carries null/row counts, additionally skip files that cannot
-    satisfy ``require_non_null`` columns (every value NULL) or
-    ``require_null`` columns (zero NULLs). File-granular like
+    per the ``_stats_nd.json`` manifest, and additionally skip files
+    that cannot satisfy ``require_non_null`` columns (every value
+    NULL) or ``require_null`` columns (zero NULLs). File-granular like
     a manifest prune: straddling files are read whole, so
     callers keep the row-level predicates in the plan; the prune only
-    bounds I/O. A file lacking evidence in ANY requested column
-    (all-NULL bounds / absent counts in a pre-r14 manifest) is
-    conservatively read.
+    bounds I/O. A file whose bounds in a requested column are NULL
+    (every value NULL, so no range evidence) is conservatively read
+    for that column's range.
 
     Stats domains: comparisons honor the manifest's recorded column
     type — string/date/timestamp stats compare as strings (ISO-8601
@@ -865,7 +863,7 @@ def read_stats_pruned_nd(
     bounds = bounds or {}
     with open(os.path.join(path, "_stats_nd.json")) as fh:
         stats = json.loads(fh.read())
-    types = stats.get("types", {})
+    types = stats["types"]
     wanted = list(bounds) + list(require_non_null or []) + list(
         require_null or []
     )
@@ -875,20 +873,14 @@ def read_stats_pruned_nd(
     _STR_DOMAIN = {"string", "date", "timestamp", "timestamp_ntz", "varchar"}
 
     def _keep(entry: dict) -> bool:
-        # pre-r14 manifests map file -> {col: [lo, hi]}; current ones
         # file -> {rows, stats: {col: [lo, hi, nulls]}}
-        col_stats = entry["stats"] if "stats" in entry else entry
-        rows = entry.get("rows") if "stats" in entry else None
+        col_stats, rows = entry["stats"], entry["rows"]
         for c, (lo, hi) in bounds.items():
-            b = col_stats[c]
-            flo, fhi = b[0], b[1]
+            flo, fhi, _ = col_stats[c]
             if flo is None or fhi is None:
-                continue  # no evidence in this dimension -> keep
+                continue  # all NULL: no evidence in this dimension -> keep
             if isinstance(flo, str):
-                t = types.get(c)
-                if t is None or t in _STR_DOMAIN:
-                    # genuinely string-ordered domain (or a pre-r14
-                    # manifest with no type record: legacy behavior)
+                if types[c] in _STR_DOMAIN:
                     lo, hi = str(lo), str(hi)
                 else:
                     # numeric stat serialized via default=str
@@ -898,21 +890,17 @@ def read_stats_pruned_nd(
             if fhi < lo or flo > hi:
                 return False
         for c in require_non_null or []:
-            b = col_stats[c]
-            nulls = b[2] if len(b) > 2 else None
-            if nulls is not None and rows is not None and nulls >= rows:
+            if col_stats[c][2] >= rows:
                 return False  # all NULL: IS NOT NULL can't match
         for c in require_null or []:
-            b = col_stats[c]
-            nulls = b[2] if len(b) > 2 else None
-            if nulls is not None and nulls == 0:
+            if col_stats[c][2] == 0:
                 return False  # zero NULLs: IS NULL can't match
         return True
 
     files = [f for f, entry in stats["files"].items() if _keep(entry)]
     if not files:
-        return spark.read.format(fmt).load(path).limit(0)
-    return spark.read.format(fmt).load(files)
+        return spark.read.parquet(path).limit(0)
+    return spark.read.parquet(*files)
 
 
 BLOOM_M_BITS = 4096  # bits per file bloom (64 bigint words)
@@ -923,9 +911,6 @@ def write_bloom_manifest(
     spark: SparkSession,
     path: str,
     col: str,
-    m_bits: int = BLOOM_M_BITS,
-    k: int = BLOOM_K,
-    fmt: str = "parquet",
 ) -> dict:
     """Per-file BLOOM FILTER sidecar for ``col`` — the point-lookup
     complement to [[write_stats_manifest_nd]]'s min/max + null
@@ -943,8 +928,9 @@ def write_bloom_manifest(
     keeps results exact) — the bloom only bounds I/O, exactly like
     the stats manifests."""
 
-    df = spark.read.format(fmt).load(path)
+    df = spark.read.parquet(path)
     ctype = df.schema[col].dataType.simpleString()
+    m_bits, k = BLOOM_M_BITS, BLOOM_K
     n_words = m_bits // 64
     pos = [
         F.pmod(F.xxhash64(F.col(col), F.lit(s)), F.lit(m_bits))
@@ -985,7 +971,6 @@ def read_bloom_pruned(
     path: str,
     col: str,
     values: list,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Read only the files whose bloom sidecar CAN contain at least
     one of ``values`` (equality-probe semantics: a file is kept iff
@@ -1022,8 +1007,8 @@ def read_bloom_pruned(
         if any(may_contain(words, i) for i in range(len(values)))
     ]
     if not files:
-        return spark.read.format(fmt).load(path).limit(0)
-    return spark.read.format(fmt).load(files)
+        return spark.read.parquet(path).limit(0)
+    return spark.read.parquet(*files)
 
 
 def change_feed(

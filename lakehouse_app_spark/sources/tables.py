@@ -56,9 +56,7 @@ def normalize_event_ts(raw: DataFrame) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> SimpleNamespace:
+def load_tables(spark: SparkSession, sf_dir: str) -> SimpleNamespace:
     """Load all testdata tables as DataFrames; register temp views.
 
     Returns a namespace with one attribute per table. Memoized per
@@ -71,11 +69,10 @@ def load_tables(
     sf0.001 smoke and sf0.01 correctness in one session).
     """
     ns = memo("tables", sf_dir, lambda: _read_tables(spark, sf_dir), spark=spark)
-    if register_views:
-        memo(
-            "tables.views", None, lambda: _register_views(ns),
-            spark=spark, stamp=sf_dir,
-        )
+    memo(
+        "tables.views", None, lambda: _register_views(ns),
+        spark=spark, stamp=sf_dir,
+    )
     return ns
 
 

@@ -1683,17 +1683,17 @@ def q_stream_change_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay itself. Money arithmetic is the shared scaled-BIGINT
     fixed point, so a pre-image's integer cancels its base row
     bit-exactly across the stream/batch boundary."""
+    from lakehouse_app_spark.functions.compat import fp_long
     from lakehouse_app_spark.operators.lake_ops import _cdc_orders_lineage
     from lakehouse_app_spark.sources.sinks import read_snapshot
 
     root, fdir = _cdc_orders_lineage(spark, sf_dir)
-    to_i = lambda c: (c * 10000 + F.lit(0.5)).cast("long")  # noqa: E731
     mv0 = (
         read_snapshot(spark, root, 0)
         .groupBy("o_custkey")
         .agg(
             F.count(F.lit(1)).alias("n0"),
-            F.sum(to_i(F.col("o_totalprice"))).alias("s0"),
+            F.sum(fp_long("o_totalprice")).alias("s0"),
         )
     )
     schema = spark.read.parquet(fdir).schema
@@ -1710,7 +1710,7 @@ def q_stream_change_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dagg = feed.groupBy("o_custkey").agg(
         F.sum(dn).alias("dn"),
-        F.sum(sign * to_i(F.col("o_totalprice"))).alias("ds"),
+        F.sum(sign * fp_long("o_totalprice")).alias("ds"),
     )
     out = run_to_memory(dagg, "cdf_apply", output_mode="complete")
     merged = mv0.join(out, "o_custkey", "left").select(

@@ -1,12 +1,17 @@
-"""The console's ``drive`` parity check, ``explain``'s memo header and
-the sf1 scale study's corpus replication."""
+"""The console's ``drive`` parity check, ``explain``'s memo header,
+the sf1 scale study's corpus replication and ``bench.py``'s per-key
+record."""
 
+import ast
+import json
+import os
 import re
 
 import duckdb
 
+import bench
 from lakehouse_app_spark import ORACLES
-from lakehouse_app_spark.__main__ import main
+from lakehouse_app_spark.__main__ import ROOT, main
 from lakehouse_app_spark.scale import build_corpus
 
 
@@ -51,3 +56,54 @@ def test_build_corpus_replicates_facts_and_keeps_fixed_dims(sf_dir, tmp_path):
         "JOIN read_parquet('{p}/orders.parquet') o ON l.l_orderkey = o.o_orderkey"
     )
     assert _count(tmp_path, join) == 2 * _count(sf_dir, join)
+
+
+def test_bench_times_every_key_under_one_rule(spark, sf_dir, tmp_path):
+    keys = ["q_scan_count", "q_stream_tumbling"]
+    out = tmp_path / "bench.json"
+    assert bench.main(keys, sf_dir, str(out)) == 0
+    rec = json.loads(out.read_text())
+    assert rec["n_failed"] == 0 and rec["n_queries"] == 2
+    for k in keys:
+        assert len(rec["reps"][k]) == 3 and min(rec["reps"][k]) > 0, rec["reps"]
+        assert rec["queries"][k] > 0 and rec["duckdb_queries"][k] > 0, k
+    assert "tws_watch" not in rec
+    floors = {k for k in rec if "floor" in k}
+    assert floors == {"floor_per_query_sec", "floor_adjusted_ratio"}, floors
+
+
+def test_bench_unknown_key_exits_1(sf_dir, tmp_path):
+    out = tmp_path / "bench.json"
+    assert bench.main(["q_nope"], sf_dir, str(out)) == 1
+    assert not out.exists()
+
+
+def _env_reads(path: str) -> list[str]:
+    """Every environment read in ``path``: the key when it is a
+    literal, else the source of the whole access."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read())
+    parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+    reads = []
+    for node in ast.walk(tree):
+        if not (isinstance(node, ast.Attribute) and node.attr in ("environ", "getenv")):
+            continue
+        use = parents[node]
+        if node.attr == "environ" and isinstance(use, ast.Attribute):
+            use = parents[use]  # os.environ.get(...) / .setdefault(...)
+        key = None
+        if isinstance(use, ast.Subscript):
+            key = use.slice
+        elif isinstance(use, ast.Call) and use.args:
+            key = use.args[0]
+        reads.append(key.value if isinstance(key, ast.Constant) else ast.unparse(use))
+    return reads
+
+
+def test_timer_reads_no_env_knob_but_the_sf_dir():
+    reads = {
+        f: _env_reads(os.path.join(ROOT, f))
+        for f in ("bench.py", os.path.join("lakehouse_app_spark", "scale.py"))
+    }
+    assert "SPARK_GRAFT_SF_DIR" in reads["bench.py"], reads
+    assert all(set(r) <= {"SPARK_GRAFT_SF_DIR"} for r in reads.values()), reads

@@ -200,8 +200,9 @@ def test_minhash_sig_folds_each_char_once(spark, sf_dir):
     the optimized plan (projected into an `fps` array the 4 affine
     hashes consume) — the r11 inlined form carried it 4x, which both
     quadrupled per-char work and produced a whole-stage-codegen unit
-    that cost ~6 s to compile (the single row that pushed BENCH_r11
-    to 1.914x). CollapseProject must NOT re-inline the fold."""
+    that cost ~6 s to compile (see the plan with `python -m
+    lakehouse_app_spark explain q_minhash_sig`). CollapseProject must
+    NOT re-inline the fold."""
     df = QUERIES["q_minhash_sig"](spark, sf_dir)
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     # the fold is the only aggregate() lambda in this query
