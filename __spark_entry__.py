@@ -43,48 +43,23 @@ def entry(spark: SparkSession) -> DataFrame:
 # (a) new keys, (b) changed plans, (c) the keys the driver has
 # re-sampled least recently, so the whole surface accumulates FRESH
 # driver-green coverage instead of re-checking a fixed showcase.
-# Round-15 window (optimization round — no new keys): (a/b) every
-# plan this round touched — q_corpus_pipeline (stage joins fused to
-# one-scan expression composition), q_pq_quantize (argmin as a
-# hash-aggregable long min), q_kmv_distinct (pair algebra as array
-# expressions over one sketch row per source), q_ann_brp_lsh
-# (MLlib's private hash tables replaced by deterministic seeded
-# projections — EXACT-oracle for the first time, closing the last
-# declared rows-only gap), and the 15 streaming keys whose bounded
-# replays now skip the trailing no-data micro-batch, plus the
-# interval-join pair kept on the trailing batch (q_stream_join_outer
-# is the divergence witness that forced the opt-in design); (c) the
-# LEAST-recently-driver-sampled keys (last sampled ≤ r10): the
-# dedup/media/pipeline tier, then analytics/sketches, then the
-# TPC-H tail.
+# This window: (a/b) every plan the cache review changed: the 11
+# dropped scoped persists (q_pmi_collocations, q_entropy_kl,
+# q_ngram_jaccard, q_ngram_containment, q_join_bloom_prune,
+# q_hll_distinct, q_mutual_info, q_pagerank), the keys that now share
+# one word-pair or word-trigram helper (q_bigram_lm, q_recursive_cte,
+# q_kmv_distinct, and q_triangles, which reads the word_graph layout
+# built from it), and the three file round-trips whose scratch dirs
+# now come from scratch_commit_dir; (c) the previous _NEXT_UP queue,
+# then the head of the never-rotated backlog in registry order.
 _SHOWCASE = [
-    # (a/b) this round's changed plans
-    "q_corpus_pipeline", "q_pq_quantize", "q_kmv_distinct",
-    "q_ann_brp_lsh",
-    # the no-data-batch streaming keys + the kept-on join pair
-    "q_stream_tumbling", "q_stream_sliding", "q_stream_session",
-    "q_stream_dedup", "q_stream_user_state", "q_stream_topk",
-    "q_stream_state_v2", "q_stream_vector_search",
-    "q_stream_incremental_dedup", "q_stream_media_decode",
-    "q_stream_change_apply", "q_stream_static_join",
-    "q_stream_foreach_sink", "q_stream_ivf_append",
-    "q_stream_pruned_join", "q_stream_join", "q_stream_join_outer",
-    # (c) least-recently-sampled (≤ r10), oldest classes first
-    "q_dedup_report", "q_dedup_keep_best", "q_dedup_keep_latest",
-    "q_ingest_pipeline", "q_media_decode", "q_media_decode_image",
-    "q_audio_features", "q_media_frames", "q_mmr_diversify",
-    "q_bloom_membership", "q_drift_ks", "q_drift_psi",
-    "q_mutual_info", "q_freq_pairs", "q_gopher_repetition",
-    "q_ngram_jaccard", "q_recursive_hierarchy",
-    "q_tpch_q17", "q_tpch_q18", "q_tpch_q21", "q_tpch_q22",
-    "q_join_interval_bucket", "q_profile_table", "q_hll_distinct",
-    "q_scd2_lookup", "q_approx_quantiles_audit", "q_bootstrap_ci",
-    "q_sink_roundtrip", "q_subquery_scalar",
-]
-
-# Keys that would rotate in next if the driver over-samples past 50:
-# the rest of the ≤ r10 least-sampled backlog, oldest classes first.
-_NEXT_UP = [
+    # (a/b) changed plans
+    "q_pmi_collocations", "q_entropy_kl", "q_ngram_jaccard",
+    "q_ngram_containment", "q_join_bloom_prune", "q_hll_distinct",
+    "q_mutual_info", "q_pagerank", "q_triangles", "q_bigram_lm",
+    "q_recursive_cte", "q_kmv_distinct", "q_sink_roundtrip",
+    "q_csv_ingest", "q_json_ingest",
+    # (c) the previous _NEXT_UP queue
     "q_knn_join", "q_neardup_embed", "q_embed_quantize",
     "q_context_pack", "q_multimodal_bytes", "q_vocab_coverage",
     "q_text_stats", "q_fuzzy_match", "q_sample_hash",
@@ -93,6 +68,22 @@ _NEXT_UP = [
     "q_cohens_kappa", "q_corr_matrix", "q_histogram",
     "q_target_encode", "q_ewma", "q_twa", "q_funnel",
     "q_attribution", "q_cohort_retention", "q_sequence_gaps",
+    # (c) the backlog's head
+    "q_scan_count", "q_project", "q_filter_pred", "q_derived_col",
+    "q_json_extract", "q_join_inner", "q_join_multiway", "q_join_left",
+    "q_join_semi", "q_join_anti",
+]
+
+# Keys that would rotate in next if the driver over-samples past 50:
+# the backlog of keys no window has named, in registry order.
+_NEXT_UP = [
+    "q_join_range", "q_join_asof", "q_join_salted", "q_join_bucketed",
+    "q_join_asof_tolerance", "q_fuzzy_join", "q_join_dpp",
+    "q_agg_pricing", "q_agg_distinct", "q_agg_approx", "q_agg_rollup",
+    "q_agg_cube", "q_agg_gsets", "q_format_docs", "q_dedup_sources",
+    "q_grouping_id", "q_window_rank", "q_topk_per_group",
+    "q_window_running", "q_window_lag", "q_window_sessionize",
+    "q_orderby_limit", "q_set_union", "q_set_intersect", "q_set_except",
 ]
 
 

@@ -24,25 +24,6 @@ def dsum(col: Column | str, alias: str) -> Column:
     return F.sum(c.cast(DEC)).cast("double").alias(alias)
 
 
-def davg(col: Column | str, alias: str) -> Column:
-    """Order-insensitive AVG: exact decimal sum / count, in double.
-
-    Oracle: ``CAST(SUM(CAST(x AS DECIMAL(25,6))) AS DOUBLE) / COUNT(*)``.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(c.cast(DEC)).cast("double") / F.count(F.lit(1))).alias(alias)
-
-
-def r6(col: Column, alias: str | None = None) -> Column:
-    c = F.round(col, 6)
-    return c.alias(alias) if alias else c
-
-
-def r4(col: Column, alias: str | None = None) -> Column:
-    c = F.round(col, 4)
-    return c.alias(alias) if alias else c
-
-
 def fpsum(col: Column | str, alias: str, scale: int = 10000) -> Column:
     """Order-insensitive SUM of a fixed-point-valued double via scaled
     BIGINT accumulation — ~4× cheaper than the DECIMAL(25,6) path

@@ -734,22 +734,16 @@ def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderstatus").alias("y"),
         )
     )
-    # scoped_persist is load-bearing: joint feeds the cell-term join
-    # AND three marginal rollups AND both entropy arms — unpersisted,
-    # Spark re-derives the whole union-scan-aggregate subtree for
-    # EACH consumer (8 scans of the two fact tables observed in the
-    # r14 before-plan; guide §7.2 duplicated subtrees). Cached, the
-    # contingency table (|X|×|Y| cells) is computed once and every
-    # rollup reads KB from memory (2 scans total, one per union arm).
-    joint = scoped_persist(
-        pairs.groupBy("feature_pair", "x", "y").agg(
-            F.count(F.lit(1)).alias("c")
-        )
+    # not pinned: at run time AQE reuses the joint aggregate's
+    # shuffle for every consumer (ReusedExchange), so each fact table
+    # is still scanned once
+    joint = pairs.groupBy("feature_pair", "x", "y").agg(
+        F.count(F.lit(1)).alias("c")
     )
-    # marginals and totals as window sums over the cached cell table
+    # marginals and totals as window sums over the cell table
     # (three window specs over ≤|X|×|Y| rows) instead of three
     # groupBy-and-broadcast-back rollups: each broadcast build was its
-    # own job against the cache, 27 jobs per execution at the floor —
+    # own job, 27 jobs per execution at the floor —
     # now the cell terms, both entropies (distinct marginal
     # projections of the same windowed frame) and the final fuse are
     # a handful of aggregate-sized jobs (r14 optimization)

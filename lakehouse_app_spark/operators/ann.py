@@ -1431,7 +1431,6 @@ def q_ann_ivf_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # key stays exact either way.
 RETRAIN_NUM = 103
 RETRAIN_DEN = 100
-RETRAIN_RATIO = RETRAIN_NUM / RETRAIN_DEN  # display/test convenience
 
 _RETRAIN_CHAIN, _RETRAIN_CENTS, _RETRAIN_ASG = lloyd_sql(
     N_CENTROIDS, KM_ITERS + 1

@@ -171,14 +171,14 @@ def ivf_index(
     return cents, assigned
 
 
-def lloyd_sql(n: int, iters: int, src: str = "embeddings") -> tuple[str, str, str]:
+def lloyd_sql(n: int, iters: int) -> tuple[str, str, str]:
     """The oracle's replica of :func:`lloyd_cents` +
     final assignment, as a CTE chain. Returns (cte_sql,
     final_cents_name, final_assign_name); embed into ``WITH``."""
     parts = [
         f"""cents0 AS (
       SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cvec
-      FROM {src} WHERE vec_id < {n}
+      FROM embeddings WHERE vec_id < {n}
     )"""
     ]
     for i in range(iters + 1):
@@ -189,7 +189,7 @@ def lloyd_sql(n: int, iters: int, src: str = "embeddings") -> tuple[str, str, st
                row_number() OVER (PARTITION BY e.vec_id
                  ORDER BY round(list_cosine_similarity(
                    CAST(e.embedding AS DOUBLE[]), c.cvec), 6) DESC, c.cid) AS rn
-        FROM {src} e, cents{i} c
+        FROM embeddings e, cents{i} c
       ) WHERE rn = 1
     )"""
         )

@@ -78,11 +78,12 @@ def _pair_counts(wt: DataFrame) -> DataFrame:
     )
 
 
-def _bpe_oracle(k: int = BPE_MERGES) -> str:
+def _bpe_oracle() -> str:
     """Unrolled training replay (the [[q_pagerank]]/Lloyd convention:
     iterative recurrences unroll rather than recurse, since a
     recursive CTE may reference its own table only once and never
     under an aggregate)."""
+    k = BPE_MERGES
     best = """best{i} AS (
       SELECT l, r, cnt FROM (
         SELECT p.l, p.r, CAST(SUM(freq) AS BIGINT) AS cnt
@@ -180,10 +181,11 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rules
 
 
-def _encode_oracle(k: int = BPE_MERGES) -> str:
+def _encode_oracle() -> str:
     """Oracle for [[q_bpe_encode]]: the training replay of
     :func:`_bpe_oracle` carried one merge further (wt{k} applies the
     k-th rule) plus the per-word symbol count and the document join."""
+    k = BPE_MERGES
     best = """best{i} AS (
       SELECT l, r FROM (
         SELECT p.l, p.r, CAST(SUM(freq) AS BIGINT) AS cnt

@@ -630,7 +630,7 @@ def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from lakehouse_app_spark.operators.dedup import shingle_postings
 
-    sh = shingle_postings(spark, sf_dir).transform(scoped_persist)
+    sh = shingle_postings(spark, sf_dir)
     sz = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("doc_id").alias("a_id"), "s")
     b = sh.select(F.col("doc_id").alias("b_id"), "s")

@@ -9,23 +9,11 @@ the full write path (partitioned layout, schema round-trip) that the
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from lakehouse_app_spark.registry import QUERIES, query
-from lakehouse_app_spark.runtime_cache import memo
+from lakehouse_app_spark.runtime_cache import scratch_commit_dir
 from lakehouse_app_spark.sources.sinks import read_table, write_table
-
-
-def _scratch_dir(tag: str, sf_dir: str) -> str:
-    """One stable scratch dir per (query, corpus), reused with
-    mode=overwrite across repeated invocations."""
-    return memo(
-        "io_ops.scratch", (tag, sf_dir),
-        lambda: tempfile.mkdtemp(prefix=f"{tag}_"),
-    )
-
 
 import lakehouse_app_spark.operators.aggregates  # noqa: F401  (registers q_agg_pricing's oracle)
 from lakehouse_app_spark.registry import ORACLES as _ORACLES
@@ -41,10 +29,7 @@ from lakehouse_app_spark.registry import ORACLES as _ORACLES
 # could not see.
 @query("q_sink_roundtrip", oracle=_ORACLES["q_agg_pricing"])
 def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fixed per-corpus scratch path + overwrite: these builders are
-    # never plan-cached (they schedule jobs), so a fresh mkdtemp per
-    # call leaked one full data copy per invocation (review r6)
-    out = _scratch_dir("sink_roundtrip", sf_dir)
+    out = scratch_commit_dir("sink_roundtrip_")
     result = QUERIES["q_agg_pricing"](spark, sf_dir)
     write_table(result, out, partition_by=["l_returnflag"])
     back = read_table(spark, out)
@@ -80,7 +65,7 @@ def q_json_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_app_spark.sources.tables import load_tables
 
     t = load_tables(spark, sf_dir)
-    out = _scratch_dir("json_ingest", sf_dir)
+    out = scratch_commit_dir("json_ingest_")
     cols = ["doc_id", "source", "lang", "text"]
     # no coalesce(1): multiple JSONL part files verify identically
     # (explicit schema + order-insensitive aggregates) and the write
@@ -122,7 +107,7 @@ def q_csv_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_app_spark.sources.tables import load_tables
 
     t = load_tables(spark, sf_dir)
-    out = _scratch_dir("csv_ingest", sf_dir)
+    out = scratch_commit_dir("csv_ingest_")
     cols = ["doc_id", "lang", "text", "n_chars"]
     (
         t.documents.select(*cols)

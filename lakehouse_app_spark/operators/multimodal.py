@@ -129,11 +129,10 @@ def byte_features(media: DataFrame) -> DataFrame:
 
     import numpy as np
 
-    def round_half_up(x: float, digits: int = 4) -> float:
+    def round_half_up(x: float) -> float:
         # SQL engines round halves away from zero; Python's round() is
         # banker's — byte means hit exact .xx5 boundaries constantly.
-        scale = 10.0 ** digits
-        return math.floor(x * scale + 0.5) / scale
+        return math.floor(x * 10000.0 + 0.5) / 10000.0
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -14,9 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lakehouse_app_spark.operators.dedup import spread
+from lakehouse_app_spark.operators.dedup import spread, word_pairs
 from lakehouse_app_spark.registry import query
-from lakehouse_app_spark.runtime_cache import scoped_persist
 from lakehouse_app_spark.sources.tables import load_tables
 
 # ---------------------------------------------------------------- profile
@@ -235,21 +234,11 @@ def _build_word_graph(t):
     def build() -> DataFrame:
         # spread pays in the build (single-row-group input, corpus-
         # sized tokenize); the stored table is vocab²-bounded
-        pairs = (
-            spread(t.documents)
-            .select(F.split(F.lower(F.col("text")), " ").alias("ts"))
-            .where(F.size("ts") >= 2)
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(ts) - 1),"
-                        " i -> struct(ts[i-1] AS w1, ts[i] AS w2))"
-                    )
-                ).alias("p")
-            )
-            .select("p.w1", "p.w2")
+        edges = (
+            word_pairs(spread(t.documents))
+            .groupBy("w1", "w2")
+            .agg(F.count(F.lit(1)).alias("wt"))
         )
-        edges = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("wt"))
         outw = edges.groupBy("w1").agg(F.sum("wt").alias("tot"))
         return edges.join(outw, "w1")
 
@@ -309,9 +298,9 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the word-bigram transition graph, three
     synchronous iterations — the iterative-algorithm shape (shared
     edge table, loop of join + aggregate) that also covers label
-    propagation and embedding-graph ranking. The edge table is built
-    once and persisted; each iteration shuffles only |nodes| rank
-    rows, never the corpus. The oracle is the SAME recurrence
+    propagation and embedding-graph ranking. The edge table is the
+    stored word_graph layout; each iteration shuffles only |nodes|
+    rank rows, never the corpus. The oracle is the SAME recurrence
     unrolled as SQL, with each iteration's mass sum decimal-exact so
     accumulation order can't diverge between engines."""
     from lakehouse_app_spark.sources.layout import derived_table
@@ -322,15 +311,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus — graph extraction is ingest work, iteration is query
     # work); each ranking run reads (w1, w2, wt, tot) and never
     # touches document text. q_triangles reads the same layout.
-    e = derived_table(
-        spark, "word_graph", sf_dir, _build_word_graph(t)
-    ).transform(scoped_persist)
-    nodes = (
-        e.select(F.col("w1").alias("node"))
-        .union(e.select("w2"))
-        .distinct()
-        .transform(scoped_persist)
-    )
+    e = derived_table(spark, "word_graph", sf_dir, _build_word_graph(t))
+    nodes = e.select(F.col("w1").alias("node")).union(e.select("w2")).distinct()
     cnt = nodes.agg(F.count(F.lit(1)).alias("n"))
     r = nodes.crossJoin(F.broadcast(cnt)).select(
         "node", (F.lit(1.0) / F.col("n")).alias("r")
@@ -338,7 +320,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(PR_ITERS):
         # rank table is one row per vocab node — orders of magnitude
         # smaller than the edge table, so broadcast it: each iteration
-        # then streams the persisted edges through a broadcast-hash
+        # then streams the stored edges through a broadcast-hash
         # join with zero edge shuffle (the only exchange left is the
         # |nodes|-row mass aggregation).
         mass = (
@@ -403,12 +385,8 @@ def q_entropy_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back. Per-group term sums are decimal-exact so the
     few-term float accumulation can't diverge between engines."""
     t = load_tables(spark, sf_dir)
-    sl = (
-        t.documents.groupBy("source", "lang")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .transform(scoped_persist)
-    )
-    # marginals/total as window sums over the cached (source, lang)
+    sl = t.documents.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("n"))
+    # marginals/total as window sums over the (source, lang)
     # table instead of three rollup-and-broadcast-back joins — each
     # broadcast build was its own floor-priced job (the q_mutual_info
     # treatment, r14). The global-total window runs on one partition,

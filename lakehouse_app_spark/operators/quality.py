@@ -394,7 +394,7 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def observed_write(df: DataFrame, path: str, metrics: dict, fmt: str = "parquet"):
+def observed_write(df: DataFrame, path: str, metrics: dict):
     """Write ``df`` while collecting inline metrics in the SAME pass
     via ``DataFrame.observe`` — the zero-extra-scan deployment of the
     [[q_dq_checks]] audit: at 100 TB a separate metrics pass re-reads
@@ -406,7 +406,7 @@ def observed_write(df: DataFrame, path: str, metrics: dict, fmt: str = "parquet"
 
     obs = Observation("write_metrics")
     observed = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    observed.write.mode("overwrite").format(fmt).save(path)
+    observed.write.mode("overwrite").parquet(path)
     return obs.get
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lakehouse_app_spark.operators.corpus_prep import _FP_DUCK, _FP_SPARK
+from lakehouse_app_spark.operators.dedup import source_word_trigrams
 from lakehouse_app_spark.registry import query
 from lakehouse_app_spark.runtime_cache import scoped_persist
 from lakehouse_app_spark.sources.tables import load_tables
@@ -319,14 +320,8 @@ def q_join_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost of the join. Integer keys hash by two universal hashes
     directly — no fingerprint fold needed."""
     t = load_tables(spark, sf_dir)
-    # persist the filter-build inputs: urgent feeds the bit build AND
-    # the closing join, and bits feeds TWO broadcasts — without the
-    # pins each consumer re-runs the scan+build lineage (the
-    # q_bloom_membership convention; review r6)
-    urgent = scoped_persist(
-        t.orders.where(F.col("o_orderpriority") == "1-URGENT").select(
-            "o_orderkey"
-        )
+    urgent = t.orders.where(F.col("o_orderpriority") == "1-URGENT").select(
+        "o_orderkey"
     )
 
     def positions(key):
@@ -348,7 +343,6 @@ def q_join_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("slot")
         .agg(F.bit_or("m").alias("bits"))
     )
-    bits = scoped_persist(bits)
     facts = t.lineitem.select(
         "l_orderkey", "l_returnflag", "l_extendedprice", "l_discount",
         *positions("l_orderkey"),
@@ -470,21 +464,7 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AND shrinking the per-shingle hash fold to distinct shingles.
     # (The r10 word-level KR composition attacked the fold itself and
     # lost; not hashing duplicates at all is the cheaper theorem.)
-    sh = (
-        t.documents.select("source", F.split(F.lower("text"), " ").alias("tk"))
-        .where(F.size("tk") >= 3)
-        .select(
-            "source",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(tk) - 2), "
-                    "i -> concat(tk[i-1], ' ', tk[i], ' ', tk[i+1]))"
-                )
-            ).alias("s"),
-        )
-        .distinct()
-        .transform(scoped_persist)
-    )
+    sh = source_word_trigrams(t.documents)
     fp = F.expr(_FP_SPARK.format(w="s"))
     h = (F.lit(_HLL_A) * fp + F.lit(_HLL_B)) % F.lit(_P)
     hashed = sh.select("source", h.alias("h"))
@@ -643,22 +623,9 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, pair algebra runs on KB-sized aggregates, and the raw
     shingle stream is touched exactly once."""
     t = load_tables(spark, sf_dir)
-    sh = (
+    sh = source_word_trigrams(
         t.documents.where(F.col("source").isin(*KMV_SOURCES))
-        .select("source", F.split(F.lower("text"), " ").alias("tk"))
-        .where(F.size("tk") >= 3)
-        .select(
-            "source",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(tk) - 2), "
-                    "i -> concat(tk[i-1], ' ', tk[i], ' ', tk[i+1]))"
-                )
-            ).alias("s"),
-        )
-        .distinct()
-        .transform(scoped_persist)
-    )
+    ).transform(scoped_persist)
     fp = F.expr(_FP_SPARK.format(w="s"))
     hd = sh.select(
         "source", ((F.lit(_KMV_A) * fp + F.lit(_KMV_B)) % F.lit(_P)).alias("h")

@@ -50,24 +50,11 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     every iteration, so an inline ``edges`` CTE would re-run the
     explode+DISTINCT once per hop — the graph is built once, the
     loop only joins against it."""
+    from lakehouse_app_spark.operators.dedup import word_pairs
     from lakehouse_app_spark.runtime_cache import scoped_persist
 
     t = load_tables(spark, sf_dir)
-    edges = (
-        t.documents.select(F.split(F.lower(F.col("text")), " ").alias("ts"))
-        .where(F.size("ts") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(ts) - 1),"
-                    " i -> struct(ts[i-1] AS w1, ts[i] AS w2))"
-                )
-            ).alias("p")
-        )
-        .select("p.w1", "p.w2")
-        .distinct()
-        .transform(scoped_persist)
-    )
+    edges = word_pairs(t.documents).distinct().transform(scoped_persist)
     edges.createOrReplaceTempView("bigram_edges")
     return spark.sql(
         """

@@ -21,8 +21,8 @@ from lakehouse_app_spark.registry import query
 from lakehouse_app_spark.sources.tables import load_tables
 
 
-def tokens(col: str = "text") -> Column:
-    return F.split(F.lower(F.col(col)), " ")
+def tokens() -> Column:
+    return F.split(F.lower(F.col("text")), " ")
 
 
 @query(

@@ -16,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lakehouse_app_spark.operators.dedup import word_pairs
 from lakehouse_app_spark.registry import query
-from lakehouse_app_spark.runtime_cache import scoped_persist
 from lakehouse_app_spark.sources.tables import load_tables
 
 CHUNK = 120
@@ -94,20 +94,9 @@ def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size. The normalizing sum is a window over that already-
     aggregated table."""
     t = load_tables(spark, sf_dir)
-    pairs = (
-        t.documents.select(F.split(F.lower(F.col("text")), " ").alias("ts"))
-        .where(F.size("ts") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(ts) - 1),"
-                    " i -> struct(ts[i-1] AS w1, ts[i] AS w2))"
-                )
-            ).alias("p")
-        )
-        .select("p.w1", "p.w2")
+    counted = (
+        word_pairs(t.documents).groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n"))
     )
-    counted = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("w1")
     return counted.select(
         "w1",
@@ -479,13 +468,10 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir)
     tk = F.split(F.lower(F.col("text")), " ")
     docs = t.documents.select(tk.alias("tk"))
-    # persisted: uni feeds THREE consumers (w1 lookup, w2 lookup, the
-    # total) and bi feeds two (the total, the scored chain) —
-    # unpersisted, each consumer re-derived its whole
-    # scan→explode→aggregate subtree (5 corpus scans in one plan;
-    # guide §7.2 duplicated subtrees, r14 optimization: 5 scans → 2,
-    # one per n-gram arm). Both tables are (n-gram) vocabulary-sized.
-    uni = scoped_persist(
+    # not pinned: AQE reuses the unigram shuffle for all three of its
+    # consumers; the bigram aggregate runs once per consumer (2 text
+    # scans), which measured cheaper than a persist
+    uni = (
         docs.select(F.explode("tk").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
@@ -497,7 +483,7 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at("tk", (i + 1).cast("int")).alias("w2"),
         ),
     )
-    bi = scoped_persist(
+    bi = (
         docs.where(F.size("tk") >= 2)
         .select(F.explode(pairs).alias("s"))
         .groupBy(F.col("s.w1").alias("w1"), F.col("s.w2").alias("w2"))

@@ -32,13 +32,6 @@ def assert_in_plan(df: DataFrame, *needles: str) -> str:
     return plan
 
 
-def assert_not_in_plan(df: DataFrame, *needles: str) -> str:
-    plan = formatted_plan(df)
-    for needle in needles:
-        assert needle not in plan, f"plan should not contain {needle!r}:\n{plan}"
-    return plan
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters: [...] line(s) of the scan nodes."""
     return "\n".join(

@@ -19,7 +19,12 @@ sf0.01 correctness pass) leak at most the old behavior on 10× less
 data.
 
 :func:`memo` (with :func:`lookup`/:func:`store`) is the only place
-the engine memoizes anything across calls; see ``MEMO_MAX``."""
+the engine memoizes anything across calls; see ``MEMO_MAX``.
+
+A cache stays only if it pays: tests/test_memo_registry.py lists
+every registry namespace and every scoped_persist site together with
+the A/B (or the shared state) that keeps it, and fails on one it does
+not list."""
 
 from __future__ import annotations
 

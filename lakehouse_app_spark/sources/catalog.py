@@ -30,8 +30,8 @@ def describe_table(spark: SparkSession, name: str) -> DataFrame:
     )
 
 
-def render_html(df: DataFrame, limit: int = 100) -> str:
+def render_html(df: DataFrame) -> str:
     """Presentation edge only (ref `to_html` + style prepend,
     `lakehouse_app_helpers.py:37,54-58`): never part of a plan."""
     style = "<style>table{border-collapse:collapse}td,th{padding:4px}</style>"
-    return style + df.limit(limit).toPandas().to_html(index=False)
+    return style + df.limit(100).toPandas().to_html(index=False)

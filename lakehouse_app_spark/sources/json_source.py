@@ -27,11 +27,6 @@ def records_to_df(spark: SparkSession, records: list[dict[str, Any]]) -> DataFra
     return spark.read.json(rdd)
 
 
-def json_lines_to_df(spark: SparkSession, path: str) -> DataFrame:
-    """NDJSON file(s) → DataFrame; schema inferred, nested structs kept."""
-    return spark.read.json(path)
-
-
 def dict_to_kv_df(spark: SparkSession, payload: dict[str, Any]) -> DataFrame:
     """Dict → one row per key: the reference's ``orient="index"``
     transpose (`lakehouse_app_helpers.py:102-107`)."""

@@ -61,11 +61,6 @@ def _ReportVersionError(msg):
 
 _resolved: str | None | bool = False  # False = not probed yet
 
-# Quarantined trees (see _build_vendor_copy's heal path) are only
-# needed while a concurrent process might still hold them on
-# sys.path / worker PYTHONPATH; anything older than this is garbage.
-_QUARANTINE_TTL_SEC = 3600.0
-
 
 def _vendor_root() -> str:
     from lakehouse_app_spark.sources.layout import layout_base
@@ -103,39 +98,17 @@ def _precompile(tree: str) -> None:
         pass  # imports still work, just slower
 
 
-def _sweep_quarantine(dst: str) -> None:
-    """Reap quarantine dirs left by crashed/raced heals (review r8:
-    they leaked indefinitely). Age-gated: a fresh quarantine may
-    still be on a live process's sys.path."""
-    import glob
-    import time
-
-    for q in glob.glob(f"{dst}.quarantine-*"):
-        try:
-            if time.time() - os.path.getmtime(q) > _QUARANTINE_TTL_SEC:
-                shutil.rmtree(q, ignore_errors=True)
-        except OSError:
-            pass
-
-
 def _build_vendor_copy(src_root: str) -> str:
     """Copy ``google/protobuf`` (py files only) from ``src_root`` into
     the warehouse vendor dir, apply the version shim, and mark the
     copy complete. Concurrency-safe the same way layout commits are
     (staging + atomic rename, marker-last): each builder assembles a
     private staging dir and claims the final path with one
-    ``os.rename``; a loser discards its staging and polls briefly for
-    the winner's marker, so no process ever imports from a
-    half-written tree."""
+    ``os.rename``; a loser discards its staging and uses the winner's
+    tree, so no process ever imports from a half-written tree."""
     dst = _vendor_root()
     marker = os.path.join(dst, "_complete")
-    _sweep_quarantine(dst)
     if os.path.exists(marker):
-        # pre-round-9 trees were built without .pyc caches; heal once
-        if not os.path.isdir(
-            os.path.join(dst, "google", "protobuf", "__pycache__")
-        ):
-            _precompile(dst)
         return dst
     staging = f"{dst}.staging-{os.getpid()}"
     shutil.rmtree(staging, ignore_errors=True)
@@ -156,34 +129,10 @@ def _build_vendor_copy(src_root: str) -> str:
     try:
         os.rename(staging, dst)
     except OSError:
-        if not os.path.exists(dst):
-            shutil.rmtree(staging, ignore_errors=True)
-            raise  # non-race failure
-        # dst exists. A winner's rename always carries the marker
-        # (staging is complete before the claim), so dst-with-marker
-        # = lost race → use the winner's tree. dst-WITHOUT-marker can
-        # only be pre-staging-era or crashed garbage → self-heal.
-        # The heal NEVER deletes dst (review r7: a concurrent process
-        # may have it on sys.path / worker PYTHONPATH, and two
-        # rmtree+rename healers can interleave into a mixed tree):
-        # instead the bad dir is QUARANTINED with one atomic rename —
-        # exactly one healer wins that rename, every tree that ever
-        # sits at dst is a complete pre-assembled staging, and a
-        # process importing from the quarantined path keeps a
-        # consistent (renamed, never mutated) tree.
-        if os.path.exists(marker):
-            shutil.rmtree(staging, ignore_errors=True)
-            return dst
-        try:
-            os.rename(dst, f"{dst}.quarantine-{os.getpid()}")
-        except OSError:
-            pass  # another healer quarantined it first
-        try:
-            os.rename(staging, dst)
-        except OSError:
-            shutil.rmtree(staging, ignore_errors=True)
-            if os.path.exists(marker):  # a concurrent healer beat us
-                return dst
+        shutil.rmtree(staging, ignore_errors=True)
+        # the staging dir holds the marker before the claim, so a dir
+        # at dst with the marker is a winner's complete tree
+        if not os.path.exists(marker):
             raise
     return dst
 

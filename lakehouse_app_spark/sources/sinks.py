@@ -45,7 +45,6 @@ def write_bucketed_table(
     table_name: str,
     bucket_col: str,
     n_buckets: int = 32,
-    fmt: str = "parquet",
     mode: str = "overwrite",
 ) -> None:
     """Bucketed managed table: co-locates `bucket_col` so equi-joins
@@ -68,7 +67,7 @@ def write_bucketed_table(
         loc = os.path.join(wh.path or wh.netloc, table_name.lower())
         shutil.rmtree(loc, ignore_errors=True)
     (
-        df.write.format(fmt)
+        df.write.format("parquet")
         .mode(mode)
         .bucketBy(n_buckets, bucket_col)
         .sortBy(bucket_col)
@@ -76,8 +75,8 @@ def write_bucketed_table(
     )
 
 
-def read_table(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    return spark.read.format(fmt).load(path)
+def read_table(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(path)
 
 
 def compact_table(
@@ -86,7 +85,6 @@ def compact_table(
     dst: str,
     target_files: int,
     sort_col: str | None = None,
-    fmt: str = "parquet",
 ) -> DataFrame:
     """Small-file compaction (the OSS stand-in for Delta OPTIMIZE,
     SURVEY.md §7.6): rewrite a fragmented table into ``target_files``
@@ -100,20 +98,19 @@ def compact_table(
     Writes to ``dst`` (never in place — the swap is the caller's
     atomic rename/metastore update).
     """
-    df = spark.read.format(fmt).load(src)
+    df = spark.read.parquet(src)
     if sort_col is not None:
         df = df.repartitionByRange(target_files, sort_col)
     else:
         df = df.coalesce(target_files)
-    df.write.format(fmt).mode("overwrite").save(dst)
-    return spark.read.format(fmt).load(dst)
+    df.write.mode("overwrite").parquet(dst)
+    return spark.read.parquet(dst)
 
 
 def overwrite_partitions(
     df: DataFrame,
     path: str,
     partition_by: list[str],
-    fmt: str = "parquet",
 ) -> None:
     """Dynamic partition overwrite: replace ONLY the partitions
     present in ``df``, leaving sibling partitions untouched — the
@@ -124,11 +121,10 @@ def overwrite_partitions(
     1/1800th of the data. The mode is a writer option, so the
     session's confs are left as they were."""
     (
-        df.write.format(fmt)
-        .mode("overwrite")
+        df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_by)
-        .save(path)
+        .parquet(path)
     )
 
 
@@ -585,7 +581,7 @@ def update_where(spark: SparkSession, path: str, condition, assignments: dict) -
 
 
 def delete_where_mor(
-    spark: SparkSession, path: str, condition, key_col: str, note: str = "delete_mor"
+    spark: SparkSession, path: str, condition, key_col: str
 ) -> int:
     """MERGE-ON-READ DELETE — Delta deletion vectors / Iceberg
     equality deletes, the write-path alternative to
@@ -624,7 +620,7 @@ def delete_where_mor(
         "dv",
         lambda d: keys.coalesce(1).write.parquet(d),
         {
-            "note": note,
+            "note": "delete_mor",
             "rows": None,
             "format": head_man["format"],
             "base": head,
@@ -633,9 +629,7 @@ def delete_where_mor(
     )
 
 
-def apply_deletion_vectors(
-    spark: SparkSession, path: str, note: str = "optimize_dv"
-) -> int:
+def apply_deletion_vectors(spark: SparkSession, path: str) -> int:
     """OPTIMIZE's deletion-vector compaction: materialize the current
     head — base data minus the accumulated DV chain — as a normal
     copy-on-write snapshot, so subsequent reads stop paying the
@@ -653,7 +647,7 @@ def apply_deletion_vectors(
     return write_snapshot(
         read_snapshot(spark, path, head),
         path,
-        note=note,
+        note="optimize_dv",
         fmt=chain[-1][1]["format"],
     )
 
@@ -666,7 +660,6 @@ def merge_into(
     matched: list[tuple] = (),
     not_matched: list[tuple] = (),
     not_matched_by_source: list[tuple] = (),
-    note: str = "merge",
 ) -> int:
     """Full multi-clause MERGE INTO on the snapshot layer — the Delta
     / Iceberg MERGE contract ([[merge_upsert]]'s 2-way coalesce form
@@ -756,7 +749,7 @@ def merge_into(
         return expr.alias(c)
 
     return write_snapshot(
-        rows.select([out_col(c) for c in out_cols]), path, note=note
+        rows.select([out_col(c) for c in out_cols]), path, note="merge"
     )
 
 

@@ -244,11 +244,11 @@ def run_to_memory(
         spark.catalog.dropTempView(name)
 
 
-def _flatten_window(df: DataFrame, win_col: str = "window") -> DataFrame:
+def _flatten_window(df: DataFrame) -> DataFrame:
     return df.select(
-        F.col(f"{win_col}.start").cast("timestamp_ntz").alias("window_start"),
-        F.col(f"{win_col}.end").cast("timestamp_ntz").alias("window_end"),
-        *[c for c in df.columns if c != win_col],
+        F.col("window.start").cast("timestamp_ntz").alias("window_start"),
+        F.col("window.end").cast("timestamp_ntz").alias("window_end"),
+        *[c for c in df.columns if c != "window"],
     )
 
 

@@ -991,48 +991,6 @@ def test_pb_vendor_runtime_materializes_and_is_idempotent(monkeypatch, tmp_path)
     assert os.stat(os.path.join(d, "_complete")).st_mtime_ns == before
 
 
-def test_pb_vendor_heal_quarantines_instead_of_deleting(monkeypatch, tmp_path):
-    """A marker-less vendor dir (pre-staging-era or crashed garbage)
-    must be healed by an ATOMIC quarantine rename + fresh claim —
-    never an in-place rmtree, which could delete a tree a concurrent
-    process is importing from (review r7)."""
-    import os
-
-    import lakehouse_app_spark.sources.pb_vendor as pbv
-
-    monkeypatch.setenv("SPARK_GRAFT_LAYOUT_DIR", str(tmp_path / "layouts"))
-    monkeypatch.setattr(pbv, "_resolved", False)
-    src = None
-    for cand in [os.environ.get("SPARK_GRAFT_PROTOBUF_SRC", "")] + list(
-        pbv._PB_SRC_CANDIDATES
-    ):
-        if cand and os.path.isfile(
-            os.path.join(cand, "google", "protobuf", "descriptor.py")
-        ):
-            src = cand
-            break
-    if src is None:
-        import pytest
-
-        pytest.skip("no protobuf source on this host")
-    # plant marker-less garbage at the vendor path
-    dst = pbv._vendor_root()
-    os.makedirs(os.path.join(dst, "google"), exist_ok=True)
-    junk = os.path.join(dst, "google", "half_written.py")
-    open(junk, "w").write("# crashed copy\n")
-    healed = pbv._build_vendor_copy(src)
-    assert healed == dst
-    assert os.path.isfile(os.path.join(dst, "_complete"))
-    assert not os.path.exists(junk)  # garbage no longer AT the path...
-    quarantined = [
-        p for p in os.listdir(os.path.dirname(dst))
-        if ".quarantine-" in p
-    ]
-    assert quarantined  # ...but preserved, renamed aside, not deleted
-    qdir = os.path.join(os.path.dirname(dst), quarantined[0])
-    assert os.path.isfile(os.path.join(qdir, "google", "half_written.py"))
-
-
 def test_compact_roundtrip_physical_file_counts(spark, sf_dir):
     """q_compact_roundtrip's oracle already pins n_files == 1 per
     bucket through the hash compare; this test pins the OTHER half of
