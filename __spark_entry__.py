@@ -43,40 +43,22 @@ def entry(spark: SparkSession) -> DataFrame:
 # (a) new keys, (b) changed plans, (c) the keys the driver has
 # re-sampled least recently, so the whole surface accumulates FRESH
 # driver-green coverage instead of re-checking a fixed showcase.
-# This window: (a/b) every plan the cache review changed: the 11
-# dropped scoped persists (q_pmi_collocations, q_entropy_kl,
-# q_ngram_jaccard, q_ngram_containment, q_join_bloom_prune,
-# q_hll_distinct, q_mutual_info, q_pagerank), the keys that now share
-# one word-pair or word-trigram helper (q_bigram_lm, q_recursive_cte,
-# q_kmv_distinct, and q_triangles, which reads the word_graph layout
-# built from it), and the three file round-trips whose scratch dirs
-# now come from scratch_commit_dir; (c) the previous _NEXT_UP queue,
-# then the head of the never-rotated backlog in registry order.
+# This window: (a/b) the 19 stream keys, which now all read through
+# one file_stream source (the foreachBatch keys also write through one
+# run_to_parquet sink), and q_pmi_collocations, whose bigram count now
+# has one consumer; (c) the previous _NEXT_UP queue, then the keys
+# re-sampled least recently, in registry order.
 _SHOWCASE = [
     # (a/b) changed plans
-    "q_pmi_collocations", "q_entropy_kl", "q_ngram_jaccard",
-    "q_ngram_containment", "q_join_bloom_prune", "q_hll_distinct",
-    "q_mutual_info", "q_pagerank", "q_triangles", "q_bigram_lm",
-    "q_recursive_cte", "q_kmv_distinct", "q_sink_roundtrip",
-    "q_csv_ingest", "q_json_ingest",
+    "q_stream_static_join", "q_stream_tumbling", "q_stream_sliding",
+    "q_stream_session", "q_stream_join", "q_stream_dedup",
+    "q_stream_foreach_sink", "q_stream_user_state", "q_stream_topk",
+    "q_stream_join_outer", "q_stream_state_v2", "q_stream_vector_search",
+    "q_stream_ivf_append", "q_stream_incremental_dedup",
+    "q_stream_media_decode", "q_stream_state_timers",
+    "q_stream_pruned_join", "q_stream_change_apply", "q_stream_late_data",
+    "q_pmi_collocations",
     # (c) the previous _NEXT_UP queue
-    "q_knn_join", "q_neardup_embed", "q_embed_quantize",
-    "q_context_pack", "q_multimodal_bytes", "q_vocab_coverage",
-    "q_text_stats", "q_fuzzy_match", "q_sample_hash",
-    "q_sample_weighted", "q_domain_cap", "q_dpo_pairs",
-    "q_anomaly_mad", "q_anomaly_zscore", "q_ab_test",
-    "q_cohens_kappa", "q_corr_matrix", "q_histogram",
-    "q_target_encode", "q_ewma", "q_twa", "q_funnel",
-    "q_attribution", "q_cohort_retention", "q_sequence_gaps",
-    # (c) the backlog's head
-    "q_scan_count", "q_project", "q_filter_pred", "q_derived_col",
-    "q_json_extract", "q_join_inner", "q_join_multiway", "q_join_left",
-    "q_join_semi", "q_join_anti",
-]
-
-# Keys that would rotate in next if the driver over-samples past 50:
-# the backlog of keys no window has named, in registry order.
-_NEXT_UP = [
     "q_join_range", "q_join_asof", "q_join_salted", "q_join_bucketed",
     "q_join_asof_tolerance", "q_fuzzy_join", "q_join_dpp",
     "q_agg_pricing", "q_agg_distinct", "q_agg_approx", "q_agg_rollup",
@@ -84,6 +66,21 @@ _NEXT_UP = [
     "q_grouping_id", "q_window_rank", "q_topk_per_group",
     "q_window_running", "q_window_lag", "q_window_sessionize",
     "q_orderby_limit", "q_set_union", "q_set_intersect", "q_set_except",
+    # (c) the least recently re-sampled keys
+    "q_dq_checks", "q_date_funcs", "q_array_funcs", "q_bitwise_hash_funcs",
+    "q_array_setops",
+]
+
+# Keys that would rotate in next if more than 50 keys are sampled:
+# the next least recently re-sampled keys, in registry order.
+_NEXT_UP = [
+    "q_pivot", "q_null_semantics", "q_percentile_disc",
+    "q_agg_conditional", "q_date_spine", "q_concurrency",
+    "q_string_funcs", "q_math_funcs", "q_udaf_grouped_agg", "q_tpch_q10",
+    "q_tpch_q14", "q_tpch_q19", "q_tpch_q13", "q_tpch_q15", "q_tpch_q12",
+    "q_tpch_q16", "q_tpch_q20", "q_tpch_q11", "q_agg_stats",
+    "q_compact_plan", "q_scd2", "q_rollup_hypertable", "q_embed_project",
+    "q_arrow_batch_norm", "q_url_parse",
 ]
 
 

@@ -469,8 +469,8 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     tk = F.split(F.lower(F.col("text")), " ")
     docs = t.documents.select(tk.alias("tk"))
     # not pinned: AQE reuses the unigram shuffle for all three of its
-    # consumers; the bigram aggregate runs once per consumer (2 text
-    # scans), which measured cheaper than a persist
+    # consumers, and the bigram aggregate has one consumer, since n_bi
+    # (the explode's row count) is summed from the token counts
     uni = (
         docs.select(F.explode("tk").alias("w"))
         .groupBy("w")
@@ -490,7 +490,9 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
     )
     nu = uni.agg(F.sum("c1").cast("double").alias("n_uni"))
-    nb = bi.agg(F.sum("c").cast("double").alias("n_bi"))
+    nb = docs.where(F.size("tk") >= 2).agg(
+        F.sum(F.size("tk") - 1).cast("double").alias("n_bi")
+    )
     u1 = uni.select(F.col("w").alias("w1"), F.col("c1").alias("c1a"))
     u2 = uni.select(F.col("w").alias("w2"), F.col("c1").alias("c1b"))
     pmi = F.log(

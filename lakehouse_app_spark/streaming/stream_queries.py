@@ -6,11 +6,13 @@ same shapes run as real event-time stream processing: tumbling /
 sliding / session windows and custom per-key state
 (``applyInPandasWithState``).
 
-Determinism (SURVEY.md §5.4.3): sources replay the bounded events
-parquet with ``trigger(availableNow=True)`` into a memory sink, so
-stream results are batch-comparable — the DuckDB oracles below are
-the *batch* equivalents, which is exactly the stream/table duality
-check. No wall-clock triggers anywhere.
+Determinism (SURVEY.md §5.4.3): every source is one
+:func:`file_stream` over a bounded parquet dir, replayed with
+``trigger(availableNow=True)`` into a memory sink
+(:func:`run_to_memory`) or a foreachBatch parquet sink
+(:func:`run_to_parquet`), so stream results are batch-comparable —
+the DuckDB oracles below are the *batch* equivalents, which is exactly
+the stream/table duality check. No wall-clock triggers anywhere.
 
 Scale: all window aggregations key their state by (window, group) and
 run incrementally with watermark-bounded state; at 100 TB the same
@@ -24,13 +26,16 @@ import itertools
 import os
 import shutil
 import tempfile
-from collections.abc import Callable, Iterator, Mapping
+from collections.abc import Callable, Iterator, Mapping, Sequence
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, GroupedData, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter
-from pyspark.sql.types import StructType
+from pyspark.sql.streaming import (
+    DataStreamWriter,
+    StatefulProcessor,
+    StatefulProcessorHandle,
+)
 
 from lakehouse_app_spark.registry import query
 from lakehouse_app_spark.runtime_cache import (
@@ -66,54 +71,76 @@ def _staged(prefix: str, sf_dir: str, write: Callable[[str], None]) -> str:
     )
 
 
+def _link_or_copy(src: str, dst: str) -> None:
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copyfile(src, dst)
+
+
 def _staged_events_dir(sf_dir: str) -> str:
     """File-stream sources must be directories: the events parquet
-    staged into one (hardlinks when possible)."""
-
-    def write(d: str) -> None:
-        src = f"{sf_dir}/events.parquet"
-        if os.path.isdir(src):
-            # directory-style parquet table: stage its data files
-            for f in sorted(os.listdir(src)):
-                if f.startswith(("_", ".")):
-                    continue
-                try:
-                    os.link(os.path.join(src, f), os.path.join(d, f))
-                except OSError:
-                    shutil.copyfile(os.path.join(src, f), os.path.join(d, f))
-        else:
-            dst = f"{d}/events.parquet"
-            try:
-                os.link(src, dst)
-            except OSError:
-                shutil.copyfile(src, dst)
-
-    return _staged("events_stream_", sf_dir, write)
-
-
-def events_schema(spark: SparkSession, sf_dir: str) -> StructType:
-    """The raw events parquet schema, read once per corpus file and
-    session (the read honors the session's nanosAsLong conf): each
-    read is a Spark job (~0.1 s) that a replay would otherwise pay on
-    every call. A rewritten file (new inode, mtime or size) is read
-    again."""
-    path = f"{sf_dir}/events.parquet"
-    st = os.stat(path)
-    return memo(
-        "stream.events_schema", path,
-        lambda: spark.read.parquet(path).schema,
-        spark=spark, stamp=(st.st_ino, st.st_mtime_ns, st.st_size),
+    staged into one (a hardlink when possible)."""
+    return _staged(
+        "events_stream_", sf_dir,
+        lambda d: _link_or_copy(f"{sf_dir}/events.parquet", f"{d}/events.parquet"),
     )
+
+
+def _sentinel_events(src: str, rows: list[tuple[int, str, int | None]]):
+    """Sentinel events in ``src``'s raw parquet schema, one per
+    ``(event_id, event_type, ts)``: user_id -1, value 0, ts in the
+    file's own unit, ``None`` meaning 10 hours past the latest event
+    (far enough to lift every watermark past every real window)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(src).remove_metadata()
+    ts_type = schema.field("ts").type  # fixture-dependent unit
+    unit_per_sec = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[ts_type.unit]
+    far = (
+        pc.max(pq.read_table(src, columns=["ts"])["ts"].cast("int64")).as_py()
+        + 10 * 3600 * unit_per_sec
+    )
+    ids, types, ts = zip(*rows)
+    n = len(rows)
+    cols = {
+        "event_id": pa.array(ids, pa.int64()),
+        "ts": pa.array([far if t is None else t for t in ts], pa.int64()).cast(ts_type),
+        "user_id": pa.array([-1] * n, pa.int64()),
+        "event_type": pa.array(types, pa.string()),
+        "value": pa.array([0.0] * n, pa.float64()),
+        "props": pa.array(["{}"] * n, pa.string()),
+    }
+    return pa.table({f.name: cols[f.name].cast(f.type) for f in schema}, schema=schema)
+
+
+def file_stream(
+    spark: SparkSession, path: str, *, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """``path``'s parquet files as a bounded file stream: the one
+    stream source of every replay. The schema is read once per session
+    and directory version, since each read is a Spark job (51-96 ms
+    per call on the sf0.1 keys that read it per call); a directory
+    that gains or loses a file (new inode or mtime) is read again. The read honors the session's nanosAsLong
+    conf, which ``ensure_runtime_confs`` sets first."""
+    ensure_runtime_confs(spark)
+    st = os.stat(path)
+    schema = memo(
+        "stream.schema", path, lambda: spark.read.parquet(path).schema,
+        spark=spark, stamp=(st.st_ino, st.st_mtime_ns),
+    )
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(path)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a bounded file stream (ns→µs normalization
     identical to the batch path)."""
-    ensure_runtime_confs(spark)
-    raw = spark.readStream.schema(events_schema(spark, sf_dir)).parquet(
-        _staged_events_dir(sf_dir)
-    )
-    return normalize_event_ts(raw)
+    return normalize_event_ts(file_stream(spark, _staged_events_dir(sf_dir)))
 
 
 def _checkpoint_root() -> str | None:
@@ -161,7 +188,9 @@ def bounded_replay(
 ) -> None:
     """Run ``writer``'s stream to completion (``availableNow``) on a
     scratch checkpoint under scoped confs; the one bounded-replay
-    primitive behind :func:`run_to_memory` and the foreachBatch sinks.
+    primitive behind its two sinks, :func:`run_to_memory` (a memory
+    sink, also under :func:`run_tws`) and :func:`run_to_parquet` (a
+    foreachBatch parquet append).
 
     A fresh checkpoint pins its state stores at the session width
     (``session.width``).
@@ -242,6 +271,35 @@ def run_to_memory(
         return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
+
+
+def run_to_parquet(
+    df: DataFrame, name_prefix: str, output_mode: str,
+    per_batch: Callable[[DataFrame, int], DataFrame],
+    partition_by: Sequence[str] = (),
+) -> DataFrame:
+    """Execute a streaming DataFrame to completion (availableNow)
+    through a foreachBatch sink that appends ``per_batch(batch_df,
+    batch_id)`` to parquet; return the read-back. The foreachBatch twin
+    of :func:`run_to_memory`.
+
+    The output lands in ``scratch_commit_dir(f"{name_prefix}_")``, on
+    the same RAM-backed scratch root as the checkpoints. The read-back
+    is lazy, so the tree is only retired at the next call with the same
+    prefix and removed at the next ``release_caches()``."""
+    spark = df.sparkSession
+    out_dir = scratch_commit_dir(f"{name_prefix}_")
+
+    def append(batch_df: DataFrame, batch_id: int) -> None:
+        per_batch(batch_df, batch_id).write.mode("append").partitionBy(
+            *partition_by
+        ).parquet(out_dir)
+
+    bounded_replay(
+        spark, df.writeStream.foreachBatch(append).outputMode(output_mode),
+        name_prefix,
+    )
+    return spark.read.parquet(out_dir)
 
 
 def _flatten_window(df: DataFrame) -> DataFrame:
@@ -441,10 +499,8 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch sink (ref R15's finalize-per-batch commit,
     `app/app.py:141`): each micro-batch lands as an atomic parquet
-    append keyed by batch id; returns the read-back aggregate. The
-    bounded-replay demo writes to the same RAM-backed scratch root as
-    the checkpoints (_checkpoint_root); a production stream passes a
-    durable path — one argument, not a code change.
+    append keyed by batch id (:func:`run_to_parquet`); returns the
+    read-back aggregate.
 
     Exact since r11 (verdict item 3): in COMPLETE mode every batch
     appends the ENTIRE aggregate snapshot, so the rows carrying the
@@ -452,28 +508,15 @@ def q_stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the read-back filters to that batch and the result equals the
     batch groupBy, side effect intact and proven by the read path
     itself (the rows exist only if the sink wrote them)."""
-    # deferred-cleanup scratch (run_ivf_segment_append's protocol): the
-    # returned read-back is lazy, so the tree is retired at the next
-    # call and reaped at the release_caches() drain
-    out_dir = scratch_commit_dir("foreach_sink_")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
     agg = (
         events_stream(spark, sf_dir)
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    bounded_replay(
-        spark, agg.writeStream.foreachBatch(write_batch).outputMode("complete"),
-        "foreach",
+    rb = run_to_parquet(
+        agg, "foreach_sink", "complete",
+        lambda batch_df, batch_id: batch_df.withColumn("batch_id", F.lit(batch_id)),
     )
-    rb = spark.read.parquet(out_dir)
     final = rb.join(
         F.broadcast(rb.groupBy().agg(F.max("batch_id").alias("batch_id"))),
         "batch_id",
@@ -567,67 +610,28 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(ranked, "topk", output_mode="complete")
 
 
-# NOTE: Spark 4's transformWithStateInPandas (the
-# applyInPandasWithState successor with timers/TTL/composite state)
-# is NOT declared here: its Python worker requires google.protobuf,
-# which is not importable in this environment. Custom per-key state
-# is covered by q_stream_user_state (applyInPandasWithState); at
-# deployment, porting that processor to a StatefulProcessor is
-# mechanical.
-
-
 # ------------------------------------------- left-outer stream join
 
-def _staged_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
+def _staged_events_with_sentinel(sf_dir: str) -> str:
     """Events staged WITH one far-future sentinel file (one purchase +
     one click, ids < 0, user_id = -1) so the data batch itself lifts
     both sides' watermark past every real event. Watermarks advance
     BETWEEN micro-batches, so the null-extended outer results then
     flush in the engine's automatic no-data batch — 2 batches total.
-    (The first cut forced the sentinels into their own batches via
-    maxFilesPerTrigger=1 + two sentinel files = 4 batches; the
-    per-batch planning + state-commit cost was ~2× the query, and the
-    extra batches buy nothing: eviction only needs SOME batch to run
-    after the watermark moved, which the no-data batch provides.)"""
-    import pyarrow as pa
+    The global watermark is the MIN over both sides' watermark nodes,
+    so BOTH event types must advance or the join state never expires;
+    sentinel rows never match (user_id -1) and are filtered AFTER the
+    join by their negative ids, so they cannot lower either side's
+    watermark."""
     import pyarrow.parquet as pq
 
     def write(d: str) -> None:
         src = f"{sf_dir}/events.parquet"
-        dst = f"{d}/events.parquet"
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copyfile(src, dst)
-        src_schema = pq.read_schema(src).remove_metadata()
-        ts_type = src_schema.field("ts").type  # fixture-dependent unit
-        unit_per_sec = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[ts_type.unit]
-        max_raw = max(
-            pq.read_table(src, columns=["ts"])["ts"].cast("int64").to_pylist()
+        _link_or_copy(src, f"{d}/events.parquet")
+        pq.write_table(
+            _sentinel_events(src, [(-1, "purchase", None), (-2, "click", None)]),
+            f"{d}/zz_flush.parquet",
         )
-        # Two sentinel FILES, each carrying one far-future purchase AND
-        # one far-future click: the global watermark is the MIN over
-        # both sides' watermark nodes, so BOTH event types must
-        # advance or the join state never expires. File 1 lifts the
-        # watermark past every real event; file 2 guarantees a batch
-        # RUNS with that watermark (outer eviction happens while
-        # processing a batch). Sentinel rows use user_id = -1 (never
-        # matches) and negative event_ids, filtered AFTER the join so
-        # they cannot lower either side's watermark.
-        far = max_raw + 10 * 3600 * unit_per_sec
-        cols = {
-            "event_id": pa.array([-1, -2], pa.int64()),
-            "ts": pa.array([far, far], pa.int64()).cast(ts_type),
-            "user_id": pa.array([-1, -1], pa.int64()),
-            "event_type": pa.array(["purchase", "click"], pa.string()),
-            "value": pa.array([0.0, 0.0], pa.float64()),
-            "props": pa.array(["{}", "{}"], pa.string()),
-        }
-        sentinel = pa.table(
-            {f.name: cols[f.name].cast(f.type) for f in src_schema},
-            schema=src_schema,
-        )
-        pq.write_table(sentinel, f"{d}/zz_flush.parquet")
 
     return _staged("events_outer_", sf_dir, write)
 
@@ -693,11 +697,9 @@ def _interval_join_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_runtime_confs(spark)
-    raw = spark.readStream.schema(events_schema(spark, sf_dir)).parquet(
-        _staged_events_with_sentinel(spark, sf_dir)
-    )
-    src = normalize_event_ts(raw).withColumn("ts_l", F.col("ts").cast("timestamp"))
+    src = normalize_event_ts(
+        file_stream(spark, _staged_events_with_sentinel(sf_dir))
+    ).withColumn("ts_l", F.col("ts").cast("timestamp"))
     purchases = (
         src.where(F.col("event_type") == "purchase")
         .select(
@@ -744,6 +746,31 @@ def _twsp_available() -> bool:
     return protobuf_runtime_dir() is not None
 
 
+def transform_with_state(
+    grouped: GroupedData, processor: StatefulProcessor, output_schema: str,
+    time_mode: str,
+) -> DataFrame:
+    """``grouped.transformWithStateInPandas`` in Update mode, with a
+    vendored protobuf runtime put on the workers' PYTHONPATH first:
+    the TWS driver-worker and the task workers import it, and the UDF
+    copies the context's environment when it is built, so the path
+    must be set before this call, not before the replay."""
+    from lakehouse_app_spark.sources.pb_vendor import (
+        inject_worker_pythonpath,
+        protobuf_runtime_dir,
+    )
+
+    pb_dir = protobuf_runtime_dir()
+    if pb_dir:
+        inject_worker_pythonpath(grouped.session, pb_dir)
+    return grouped.transformWithStateInPandas(
+        statefulProcessor=processor,
+        outputStructType=output_schema,
+        outputMode="Update",
+        timeMode=time_mode,
+    )
+
+
 _state_v2_query = (
     query(
         "q_stream_state_v2",
@@ -773,17 +800,6 @@ def q_stream_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     — set per query, restored after; HDFS-backed stores keep serving
     every other stream. Deterministic (counts, distinct-count, max),
     so the batch-duality oracle is exact."""
-    from lakehouse_app_spark.sources.pb_vendor import (
-        inject_worker_pythonpath,
-        protobuf_runtime_dir,
-    )
-
-    pb_dir = protobuf_runtime_dir()
-    if pb_dir:  # vendored runtime → workers need it on PYTHONPATH too
-        inject_worker_pythonpath(spark, pb_dir)
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
     class UserSummary(StatefulProcessor):
         # Every state op is a socket round-trip to the JVM state
         # server (proto-encoded), so the processor is written
@@ -845,13 +861,9 @@ def q_stream_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self) -> None:
             pass
 
-    stream = events_stream(spark, sf_dir)
-    stateful = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UserSummary(),
-        outputStructType="user_id long, n_events long, n_types long, "
-        "max_value double",
-        outputMode="Update",
-        timeMode="None",
+    stateful = transform_with_state(
+        events_stream(spark, sf_dir).groupBy("user_id"), UserSummary(),
+        "user_id long, n_events long, n_types long, max_value double", "None",
     )
     # TWS-scoped store confs + run-to-completion via run_tws (defined
     # below with q_stream_state_timers, the other TWS query)
@@ -953,11 +965,8 @@ def q_stream_vector_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.collect_list(F.struct(F.col("cid"), F.col("cvec"))).alias("cb")
     ).withColumn("_k", F.lit(1))
 
-    qdir = _staged_query_vectors(spark, sf_dir)
-    qschema = spark.read.parquet(qdir).schema
     qstream = (
-        spark.readStream.schema(qschema)
-        .parquet(qdir)
+        file_stream(spark, _staged_query_vectors(spark, sf_dir))
         .select("qid", as_double_array("embedding").alias("qv"))
         .withColumn("_k", F.lit(1))
     )
@@ -1076,43 +1085,25 @@ def q_stream_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_app_spark.operators.ann_index import ivf_index
 
     cents, _ = ivf_index(spark, sf_dir, "ivf8", N_CENTROIDS, KM_ITERS)
-    vdir = _staged_new_vectors_dir(spark, sf_dir)
-    segment = run_ivf_segment_append(spark, cents, vdir)
+    vstream = file_stream(spark, _staged_new_vectors_dir(spark, sf_dir))
+    segment = run_ivf_segment_append(cents, vstream)
     return _ivf_cohesion(cents, segment, "n_new", "mean_sim_new")
 
 
-def run_ivf_segment_append(
-    spark: SparkSession,
-    cents: DataFrame,
-    src_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Replay ``src_dir``'s (vec_id, embedding) files as a bounded
-    stream, assign each micro-batch to ``cents`` and append it to a
-    fresh cid-partitioned segment; return the segment read-back.
-    Module-level (like :func:`tumbling_agg`) so tests can drive a
-    MULTI-FILE staging and pin that the segment is batching-invariant
-    — per-batch assignment is stateless, so any file split must
-    produce the identical segment content."""
+def run_ivf_segment_append(cents: DataFrame, stream: DataFrame) -> DataFrame:
+    """Replay ``stream``'s (vec_id, embedding) rows, assign each
+    micro-batch to ``cents`` and append it to a fresh cid-partitioned
+    segment; return the segment read-back. Module-level (like
+    :func:`tumbling_agg`) so tests can drive a MULTI-FILE staging and
+    pin that the segment is batching-invariant — per-batch assignment
+    is stateless, so any file split must produce the identical segment
+    content."""
     from lakehouse_app_spark.operators.ann import _APPEND_ID_OFFSET
     from lakehouse_app_spark.operators.ann_index import with_cid
     from lakehouse_app_spark.operators.vectors import as_double_array
 
-    vschema = spark.read.parquet(src_dir).schema
-    reader = spark.readStream.schema(vschema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    vstream = reader.parquet(src_dir)
-    # scratch_commit_dir, not a bare mkdtemp: the segment outlives
-    # this function (the returned read-back is lazy), so cleanup must
-    # be the DEFERRED bounded-retirement protocol — a superseded
-    # segment is retired at the next acquisition and reaped at the
-    # harness drain (or past the retirement bound), never leaked one
-    # RAM-backed tree per invocation (review r11)
-    seg_dir = os.path.join(scratch_commit_dir("ivf_seg_"), "segment")
-
-    def append_segment(batch_df: DataFrame, batch_id: int) -> None:
-        assigned = with_cid(
+    def assign(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return with_cid(
             batch_df.select(
                 (F.col("vec_id") + _APPEND_ID_OFFSET).alias("vec_id"),
                 as_double_array("embedding").alias("emb"),
@@ -1120,13 +1111,8 @@ def run_ivf_segment_append(
             F.col("emb"),
             cents,
         ).select("vec_id", "emb", "cid")
-        assigned.write.mode("append").partitionBy("cid").parquet(seg_dir)
 
-    bounded_replay(
-        spark, vstream.writeStream.foreachBatch(append_segment).outputMode("append"),
-        "ivf_append",
-    )
-    return spark.read.parquet(seg_dir)
+    return run_to_parquet(stream, "ivf_seg", "append", assign, partition_by=["cid"])
 
 
 # ------------------------------------------- streaming ingest dedup
@@ -1178,10 +1164,7 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_sig_table,
     )
 
-    ensure_runtime_confs(spark)
-    staged = _staged_new_docs_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    new_sig = _with_mh_sig(spark.readStream.schema(schema).parquet(staged))
+    new_sig = _with_mh_sig(file_stream(spark, _staged_new_docs_dir(spark, sf_dir)))
     corpus = minhash_sig_table(spark, sf_dir).where(F.col("doc_id") % 10 != 7)
     joined = _incremental_pairs(new_sig, F.broadcast(corpus))
     return run_to_memory(joined, "stream_inc_dedup", output_mode="append")
@@ -1214,9 +1197,7 @@ def q_stream_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lakehouse_app_spark.sources.layout import layout_path
 
     wav_media_table(spark, sf_dir)  # ensure the layout is committed
-    path = layout_path("wav_media", sf_dir)
-    schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(schema).parquet(path)
+    stream = file_stream(spark, layout_path("wav_media", sf_dir))
     return run_to_memory(
         decode_wav_features(stream), "media_decode", output_mode="append"
     )
@@ -1300,26 +1281,15 @@ def q_stream_state_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     update-mode stream oracles assume the one-batch replay
     (tests/test_streaming_semantics.py pins the multi-batch label
     behavior explicitly)."""
-    keyed = session_timeout_transform(spark, events_stream(spark, sf_dir))
+    keyed = session_timeout_transform(events_stream(spark, sf_dir))
     return run_tws(spark, keyed, "state_timers")
 
 
-def session_timeout_transform(spark: SparkSession, stream: DataFrame) -> DataFrame:
+def session_timeout_transform(stream: DataFrame) -> DataFrame:
     """The timer-driven sessionizer as a reusable stream transform
     over ANY (user_id, ts) stream — module-level like
     :func:`tumbling_agg` so tests can drive it across multi-file
     micro-batch replays the bounded single-batch query can't witness."""
-    from lakehouse_app_spark.sources.pb_vendor import (
-        inject_worker_pythonpath,
-        protobuf_runtime_dir,
-    )
-
-    pb_dir = protobuf_runtime_dir()
-    if pb_dir:
-        inject_worker_pythonpath(spark, pb_dir)
-
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
     GAP_US = 30 * 60 * 1_000_000
     GAP_MS = 30 * 60 * 1_000
 
@@ -1417,20 +1387,19 @@ def session_timeout_transform(spark: SparkSession, stream: DataFrame) -> DataFra
         def close(self) -> None:
             pass
 
-    return (
+    grouped = (
         # watermark needs TIMESTAMP (not NTZ) event time; session-UTC
         # makes the cast value-preserving (§A gotcha)
         stream.withColumn("ts_l", F.col("ts").cast("timestamp"))
         .withWatermark("ts_l", "0 seconds")
         .select("user_id", "ts_l")
         .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=SessionTimeout(),
-            outputStructType="user_id long, session_start timestamp_ntz, "
-            "session_end timestamp_ntz, n long, closed_by string",
-            outputMode="Update",
-            timeMode="EventTime",
-        )
+    )
+    return transform_with_state(
+        grouped, SessionTimeout(),
+        "user_id long, session_start timestamp_ntz, session_end timestamp_ntz, "
+        "n long, closed_by string",
+        "EventTime",
     )
 
 
@@ -1584,37 +1553,15 @@ def q_stream_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay in plain SQL over raw lineitem (fpsum fixed-point sums);
     the declared single-data-batch bounded replay is the module's
     determinism contract, same as [[q_stream_incremental_dedup]]."""
-    ensure_runtime_confs(spark)
-    staged = _staged_new_lineitem_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    out_dir = scratch_commit_dir("pruned_join_")  # q_stream_foreach_sink's protocol
-
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(staged)
-        .select(
-            F.date_format(F.to_date("l_shipdate"), "yyyy-MM").alias(
-                "ship_month"
-            ),
-            "l_quantity",
-        )
+    stream = file_stream(spark, _staged_new_lineitem_dir(spark, sf_dir)).select(
+        F.date_format(F.to_date("l_shipdate"), "yyyy-MM").alias("ship_month"),
+        "l_quantity",
     )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            pruned_month_enrich(spark, sf_dir, batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
-
-    bounded_replay(
-        spark, stream.writeStream.foreachBatch(process).outputMode("append"),
-        "pruned_join",
+    out = run_to_parquet(
+        stream, "pruned_join", "append",
+        lambda batch_df, _: pruned_month_enrich(spark, sf_dir, batch_df),
     )
-    return spark.read.parquet(out_dir).select(
-        "ship_month", "n_new", "new_qty", "n_base", "base_qty"
-    )
+    return out.select("ship_month", "n_new", "new_qty", "n_base", "base_qty")
 
 
 def run_tws(spark: SparkSession, keyed: DataFrame, name: str) -> DataFrame:
@@ -1696,10 +1643,7 @@ def q_stream_change_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(fp_long("o_totalprice")).alias("s0"),
         )
     )
-    schema = spark.read.parquet(fdir).schema
-    feed = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(fdir)
+    feed = file_stream(spark, fdir, max_files_per_trigger=1)
     sign = F.when(
         F.col("change_type").isin("delete", "update_preimage"), -1
     ).otherwise(1)
@@ -1731,7 +1675,7 @@ LATE_MOD, LATE_REM = 17, 5  # the deterministically-late row subset
 LATE_DELAY = "10 minutes"
 
 
-def _staged_late_events(spark: SparkSession, sf_dir: str) -> str:
+def _staged_late_events(sf_dir: str) -> str:
     """Three-file staged replay for the watermark late-data contract
     (SURVEY §2.2's one remaining key-less streaming row, r13 verdict
     item 2): file 1 = the ON-TIME rows (every event_id % {LATE_MOD}
@@ -1778,36 +1722,13 @@ def _staged_late_events(spark: SparkSession, sf_dir: str) -> str:
         )
         ontime = tbl.filter(pa.compute.invert(late_mask))
         pq.write_table(ontime, f"{d}/batch1_ontime.parquet")
-        schema = tbl.schema.remove_metadata()
-        ts_type = schema.field("ts").type
-        unit_per_sec = {
-            "s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9
-        }[ts_type.unit]
-        max_ontime = max(ontime["ts"].cast("int64").to_pylist())
-        far = (
-            max(tbl["ts"].cast("int64").to_pylist())
-            + 10 * 3600 * unit_per_sec
-        )
-
-        def sentinel_row(eid: int, ts_raw: int):
-            cols = {
-                "event_id": pa.array([eid], pa.int64()),
-                "ts": pa.array([ts_raw], pa.int64()).cast(ts_type),
-                "user_id": pa.array([-1], pa.int64()),
-                "event_type": pa.array(["zz_sentinel"], pa.string()),
-                "value": pa.array([0.0], pa.float64()),
-                "props": pa.array(["{}"], pa.string()),
-            }
-            return pa.table(
-                {f.name: cols[f.name].cast(f.type) for f in schema},
-                schema=schema,
-            )
-
+        max_ontime = pa.compute.max(ontime["ts"].cast("int64")).as_py()
         # spacer at the SAME instant as the on-time maximum: lets
         # the already-advanced watermark take effect for the next
         # batch without raising it
         pq.write_table(
-            sentinel_row(-2, max_ontime), f"{d}/batch2_spacer.parquet"
+            _sentinel_events(src, [(-2, "zz_sentinel", max_ontime)]),
+            f"{d}/batch2_spacer.parquet",
         )
         # the flush sentinel RIDES IN the late batch: the late
         # rows are filtered against the watermark standing at
@@ -1817,9 +1738,10 @@ def _staged_late_events(spark: SparkSession, sf_dir: str) -> str:
         # micro-batch (~0.35 s of per-batch planning + state
         # commit at the measured stream floor)
         pq.write_table(
-            pa.concat_tables(
-                [tbl.filter(late_mask), sentinel_row(-1, far)]
-            ),
+            pa.concat_tables([
+                tbl.filter(late_mask),
+                _sentinel_events(src, [(-1, "zz_sentinel", None)]),
+            ]),
             f"{d}/batch3_late_flush.parquet",
         )
         files = ["batch1_ontime", "batch2_spacer", "batch3_late_flush"]
@@ -1904,14 +1826,9 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared decimal(25,6) fixed point. At 100 TB this is the
     always-on ingest guard: state is bounded by the watermark
     horizon, and what the pipeline dropped is exactly auditable."""
-    ensure_runtime_confs(spark)
-    d = _staged_late_events(spark, sf_dir)
-    raw = (
-        spark.readStream.schema(events_schema(spark, sf_dir))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(d)
+    ev = normalize_event_ts(
+        file_stream(spark, _staged_late_events(sf_dir), max_files_per_trigger=1)
     )
-    ev = normalize_event_ts(raw)
     agg = (
         ev.withColumn("ts_w", F.col("ts").cast("timestamp"))
         .withWatermark("ts_w", LATE_DELAY)

@@ -203,7 +203,7 @@ MEMO_NAMESPACES = {
     "sinks.read_handles": "q_wap_publish 0.483 -> 0.275 s (8/8), q_incremental_agg 0.663 -> 0.559 s",
     "dedup.spread": "the partition probe costs 32-51 ms on a fresh frame, 6 ms on a hit",
     "stream.staged": "serves 15 keys, all 5 stream_replay keys among them",
-    "stream.events_schema": "serves 11 keys; each schema read is a Spark job per replay",
+    "stream.schema": "serves all 19 stream keys; a hit saves a Spark job, 51-96 ms per call on 6 sf0.1 keys",
     "stream.interval_sink": "one interval-join replay shared by its two views",
     "tables": "the session's table frames, shared by every builder",
     "tables.views": "the session's temp views over the current sf dir",

@@ -514,7 +514,7 @@ def test_tws_event_time_timers_across_micro_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    out = run_tws(spark, session_timeout_transform(spark, stream), "tws_timer_test")
+    out = run_tws(spark, session_timeout_transform(stream), "tws_timer_test")
     got: dict = {}
     for r in out.collect():
         got.setdefault(r["user_id"], []).append(
@@ -858,6 +858,7 @@ def test_ivf_segment_append_batching_invariant(spark, tmp_path):
     from lakehouse_app_spark.operators.ann_index import with_cid
     from lakehouse_app_spark.operators.vectors import as_double_array
     from lakehouse_app_spark.streaming.stream_queries import (
+        file_stream,
         run_ivf_segment_append,
     )
 
@@ -881,9 +882,11 @@ def test_ivf_segment_append_batching_invariant(spark, tmp_path):
         )
 
     multi = rows(
-        run_ivf_segment_append(spark, cents, src, max_files_per_trigger=1)
+        run_ivf_segment_append(
+            cents, file_stream(spark, src, max_files_per_trigger=1)
+        )
     )
-    single = rows(run_ivf_segment_append(spark, cents, src))
+    single = rows(run_ivf_segment_append(cents, file_stream(spark, src)))
     static = rows(
         with_cid(
             spark.read.parquet(src).select(
@@ -1089,26 +1092,35 @@ def test_replay_closes_its_state_stores(spark, sf_dir, key):
     assert loaded.get(None).size() == 0
 
 
-def test_events_schema_read_once_per_file_version(spark, tmp_path):
-    """The events schema memo serves repeat replays without a read and
-    re-reads once the file is rewritten."""
+def test_file_stream_reads_schema_once_per_dir_version(spark, tmp_path):
+    """file_stream serves a repeat call on a directory from the schema
+    memo without scheduling a Spark job, and reads the schema again
+    once the directory gains a file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from lakehouse_app_spark.streaming.stream_queries import events_schema
+    from lakehouse_app_spark.runtime_cache import _jobs_scheduled
+    from lakehouse_app_spark.streaming.stream_queries import file_stream
 
-    path = tmp_path / "events.parquet"
-    pq.write_table(pa.table({"event_id": pa.array([1, 2], pa.int64())}), path)
-    first = events_schema(spark, str(tmp_path))
-    assert events_schema(spark, str(tmp_path)) is first
+    src = tmp_path / "src"
+    src.mkdir()
+    pq.write_table(pa.table({"event_id": pa.array([1, 2], pa.int64())}), src / "a.parquet")
+    assert file_stream(spark, str(src)).columns == ["event_id"]
+    jobs = _jobs_scheduled(spark)
+    assert jobs is not None
+    assert file_stream(spark, str(src)).columns == ["event_id"]
+    assert _jobs_scheduled(spark) == jobs
     pq.write_table(
         pa.table({
             "event_id": pa.array([1, 2, 3], pa.int64()),
             "value": pa.array([0.5, 1.5, 2.5], pa.float64()),
         }),
-        path,
+        src / "b.parquet",
     )
-    assert events_schema(spark, str(tmp_path)).fieldNames() == ["event_id", "value"]
+    file_stream(spark, str(src))
+    assert _jobs_scheduled(spark) > jobs
+    (src / "a.parquet").unlink()
+    assert file_stream(spark, str(src)).columns == ["event_id", "value"]
 
 
 def test_foreach_replays_leave_one_scratch_tree_per_prefix(spark, sf_dir):

@@ -2,7 +2,7 @@
 table loads set the shuffle width to it, bounded replays run their
 state stores at it, and a guard that no module picks a width of its
 own again, nor a replay shape beyond q_stream_dedup's skipped trailing
-batch."""
+batch, nor a stream source or foreachBatch sink of its own."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from lakehouse_app_spark import session
 PKG = pathlib.Path(session.__file__).parent
 ROOT = PKG.parent
 WIDTH_CONF = "spark.sql.shuffle.partitions"
-REPLAY_HELPERS = {"bounded_replay", "run_to_memory", "run_tws"}
+REPLAY_HELPERS = {"bounded_replay", "run_to_memory", "run_tws", "run_to_parquet"}
 
 
 def test_load_tables_sets_the_session_width(spark, sf_dir):
@@ -101,16 +101,21 @@ def test_no_module_picks_a_width():
     assert found == set()
 
 
-def _calls_by_function(tree: ast.AST, fn: str | None = None):
-    """Every call in ``tree`` with the name of its innermost enclosing
+def _nodes_by_function(tree: ast.AST, fn: str | None = None):
+    """Every node in ``tree`` with the name of its innermost enclosing
     function (None at module level)."""
     for node in ast.iter_child_nodes(tree):
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            yield from _calls_by_function(node, node.name)
+            yield from _nodes_by_function(node, node.name)
             continue
-        if isinstance(node, ast.Call):
-            yield fn, node
-        yield from _calls_by_function(node, fn)
+        yield fn, node
+        yield from _nodes_by_function(node, fn)
+
+
+def _calls_by_function(tree: ast.AST):
+    """Every call in ``tree`` with the name of its innermost enclosing
+    function (None at module level)."""
+    return ((fn, n) for fn, n in _nodes_by_function(tree) if isinstance(n, ast.Call))
 
 
 def test_no_call_picks_a_replay_shape():
@@ -130,4 +135,18 @@ def test_no_call_picks_a_replay_shape():
                     and fn != "q_stream_dedup" and not forwarded
                 ):
                     found.add((rel, call.lineno, fn, k.arg))
+    assert found == set()
+
+
+def test_one_stream_source_and_one_file_sink():
+    """In the engine only file_stream opens a stream source
+    (``readStream``) and only run_to_parquet opens a foreachBatch
+    sink, so every replay shares one schema rule and one scratch
+    protocol."""
+    owner = {"readStream": "file_stream", "foreachBatch": "run_to_parquet"}
+    found = set()
+    for path in PKG.rglob("*.py"):
+        for fn, node in _nodes_by_function(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and owner.get(node.attr, fn) != fn:
+                found.add((path.relative_to(ROOT).as_posix(), node.lineno, fn, node.attr))
     assert found == set()
